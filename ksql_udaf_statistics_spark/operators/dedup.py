@@ -17,20 +17,37 @@ Five families, each shaped for 100 TB operation:
 
 Determinism: every hash is seeded xxhash64/md5 of the content — the same
 table produces the same clusters at any parallelism.
+
+Blocking: every pair path is built from one set of functions.
+:func:`minhash_bands` is the single MinHash band-hash format (the
+streaming gate's state keys depend on it) and :func:`simhash_chunk` the
+single SimHash chunk expression; :func:`bucket_self_join` is the only
+bucket self-join; :func:`pair_end_rows` and :func:`attach_to_pair_ends`
+narrow a per-document table to the ends of a pair list and attach its
+columns to both ends. Partitioning rule, enforced in
+:func:`bucket_self_join`: the banded rows go through ONE
+``repartition(defaultParallelism, *keys)`` exchange that both join sides
+read, so AQE cannot coalesce the exploding join onto a few tasks and the
+banding subtree runs once.
 """
 
 from __future__ import annotations
 
-from typing import Sequence
+import re
+from functools import reduce
+from typing import Mapping, Optional, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+# logical-plan node names whose output is shuffle-partitioned
 _SHUFFLE_NODES = (
     "Join", "Aggregate", "Repartition", "Sort", "Window", "Deduplicate",
-    "GlobalLimit",
+    "GlobalLimit", "Intersect", "Except",
 )
+# the node name that leads each line of a plan's tree string
+_PLAN_NODE = re.compile(r"^[\s:|+-]*(\w+)", re.MULTILINE)
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:
@@ -54,7 +71,10 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
         # Kafka partitions); .rdd is not even defined pre-start
         return df
     plan = str(df._jdf.queryExecution().analyzed())
-    if any(tok in plan for tok in _SHUFFLE_NODES):
+    # match node names only: a column or alias such as ``JoinKey`` in an
+    # expression list is not a shuffle
+    nodes = _PLAN_NODE.findall(plan)
+    if any(tok in node for node in nodes for tok in _SHUFFLE_NODES):
         return df
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
@@ -157,6 +177,111 @@ def shingle_table(documents: DataFrame, text_col: str = "text", n: int = 3) -> D
 
 
 # ---------------------------------------------------------------------------
+# Blocking primitives (every MinHash / SimHash / Jaccard pair path)
+# ---------------------------------------------------------------------------
+
+def minhash_bands(
+    sig_df: DataFrame, num_hashes: int, bands: int,
+    keep: Sequence[str] = ("doc_id",),
+) -> DataFrame:
+    """(keep..., band, bucket): one narrow row per (document, band) of a
+    ``sig`` signature table. bands x rows = num_hashes; bucket = xxhash64
+    of the band's signature slice joined with ``,``. This is the one
+    band-hash format: the streaming gate's bucket-state keys and its
+    batch twin (``streaming.neardup``) depend on it staying fixed."""
+    assert num_hashes % bands == 0
+    rows = num_hashes // bands
+    bb = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.xxhash64(
+                        F.concat_ws(
+                            ",",
+                            *[F.col("sig")[b * rows + r].cast("string")
+                              for r in range(rows)],
+                        )
+                    ).alias("bucket"),
+                )
+                for b in range(bands)
+            ]
+        )
+    ).alias("bb")
+    return sig_df.select(*keep, bb).select(*keep, "bb.band", "bb.bucket")
+
+
+def simhash_chunk(sim: str, band: int, width: int) -> Column:
+    """Bits ``[band * width, (band + 1) * width)`` of a 64-bit simhash
+    column: the banding key of :func:`simhash_pairs` and the agreement
+    test of :func:`simhash_pairs_verified`."""
+    return F.shiftright(sim, band * width).bitwiseAND(F.lit((1 << width) - 1))
+
+
+def _pair_side(
+    df: DataFrame, side: str, cols: Mapping[str, str], keys: Sequence[str] = (),
+) -> DataFrame:
+    """One end of a pair: doc_id -> doc_<side>, each ``col`` -> prefix+side."""
+    return df.select(
+        *keys,
+        F.col("doc_id").alias(f"doc_{side}"),
+        *[F.col(c).alias(prefix + side) for c, prefix in cols.items()],
+    )
+
+
+def bucket_self_join(
+    banded: DataFrame, keys: Sequence[str],
+    carry: Optional[Mapping[str, str]] = None,
+) -> DataFrame:
+    """(keys..., doc_a, <prefix>a..., doc_b, <prefix>b...) for every pair
+    of documents sharing a ``keys`` bucket, ``doc_a < doc_b``. ``carry``
+    maps a column of ``banded`` to the prefix it is renamed to on each
+    side. A pair sharing several buckets appears once per bucket.
+
+    Partitioning: the join's input is |docs| x bands small rows while its
+    output is Σ_bucket freq², so AQE (which sizes post-shuffle partitions
+    from the input bytes) would coalesce the exploding join onto ~1 task
+    whose hash maps then dominate the stage. ``repartition(P, *keys)``
+    is a REPARTITION_BY_NUM exchange AQE must keep, with P the cluster's
+    default parallelism. Both sides read that ONE exchange and are
+    renamed after it: two differently-projected repartitions would be
+    two exchanges, and the whole banding subtree (shingling, signatures)
+    would run once per side (measured 2x the pass cost).
+    """
+    carry = carry or {}
+    p = banded.sparkSession.sparkContext.defaultParallelism
+    base = banded.repartition(p, *keys)
+    return (
+        _pair_side(base, "a", carry, keys)
+        .join(_pair_side(base, "b", carry, keys), list(keys))
+        .filter(F.col("doc_a") < F.col("doc_b"))
+    )
+
+
+def pair_end_rows(df: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Rows of ``df`` whose doc_id is an end of some (doc_a, doc_b) pair —
+    the semi-join prune that keeps per-document work proportional to the
+    candidate volume, not the corpus."""
+    ids = (
+        pairs.select(F.col("doc_a").alias("doc_id"))
+        .union(pairs.select(F.col("doc_b").alias("doc_id")))
+        .distinct()
+    )
+    return df.join(ids, "doc_id", "semi")
+
+
+def attach_to_pair_ends(
+    pairs: DataFrame, per_doc: DataFrame, cols: Mapping[str, str],
+) -> DataFrame:
+    """``pairs`` joined to ``per_doc`` at both ends: each ``col`` of
+    ``per_doc`` comes out as ``<prefix>a`` (for doc_a) and ``<prefix>b``."""
+    return (
+        pairs.join(_pair_side(per_doc, "a", cols), "doc_a")
+        .join(_pair_side(per_doc, "b", cols), "doc_b")
+    )
+
+
+# ---------------------------------------------------------------------------
 # N-gram Jaccard near-dup (exact similarity over blocked candidates)
 # ---------------------------------------------------------------------------
 
@@ -191,13 +316,12 @@ def jaccard_pairs(
       same float64 op the Column path compiles to, so values are
       bit-identical to the join path.
     - **self-join fallback** (index too big for one executor's memory):
-      the classic inverted-index self-join + pair-count aggregation,
-      with both join inputs explicitly ``repartition(P, shingle)`` — the
-      join's map-output is small (|index| rows) while its OUTPUT is
-      Σ freq² rows, so AQE (sizing from map output) otherwise coalesces
-      the exploding join to ~2 partitions whose tasks build multi-GB
-      aggregation hash maps (measured: the whole stage serialized behind
-      one straggler at bench sf1.0).
+      the classic inverted-index self-join (:func:`bucket_self_join`
+      keyed by shingle) + pair-count aggregation. Its pinned
+      partitioning matters here: unpinned, AQE coalesced the exploding
+      join to ~2 partitions whose tasks built multi-GB aggregation hash
+      maps (measured: the whole stage serialized behind one straggler at
+      bench sf1.0).
     """
     # one shingling pass, materialized once (localCheckpoint): both paths
     # read it — the broadcast build collects it, the scoring pass / join
@@ -223,21 +347,8 @@ def jaccard_pairs(
     )
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     sh = sh.join(F.broadcast(freq.filter(F.col("df") <= max_shingle_freq)), "shingle")
-    # one shared exchange, renamed after (see minhash_lsh_pairs): the
-    # shingle-explode subtree executes once, the second side reuses it
-    p = documents.sparkSession.sparkContext.defaultParallelism
-    base = sh.repartition(p, "shingle")
-    a = base.select(
-        F.col("shingle"),
-        F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("na"),
-    )
-    b = base.select(
-        F.col("shingle"),
-        F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("nb"),
-    )
     inter = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        bucket_self_join(sh, ["shingle"], {"n_shingles": "n"})
         .groupBy("doc_a", "doc_b", "na", "nb")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
@@ -412,59 +523,15 @@ def minhash_lsh_pairs(
     integer count / num_hashes, so values are bit-identical to the
     compute-then-dedup plan.
     """
-    assert num_hashes % bands == 0
-    rows = num_hashes // bands
     # one signature pass total: the materialized table (32 longs/doc —
     # the standard "write the signature table" step of any LSH pipeline)
     # feeds both the banding and the post-dedup attach
     sig_df = minhash_signatures(
         documents, text_col, n, num_hashes, seed
     ).localCheckpoint(eager=False)
-
-    def band_structs():
-        return F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.xxhash64(
-                        F.concat_ws(
-                            ",",
-                            *[F.col("sig")[b * rows + r].cast("string")
-                              for r in range(rows)],
-                        )
-                    ).alias("bucket"),
-                )
-                for b in range(bands)
-            ]
-        )
-
-    banded = sig_df.select(
-        "doc_id", F.explode(band_structs()).alias("bb")
-    ).select("doc_id", "bb.band", "bb.bucket")
-    # exploding self-join: pin the partitioning (see minhash_candidate_pairs).
-    # Both sides derive from ONE repartitioned plan and rename AFTER the
-    # exchange — two differently-projected repartitions are two distinct
-    # exchanges, so the whole signature subtree (shingle + num_hashes
-    # permutations) executed twice (r7: measured 2x the pass cost).
-    p = documents.sparkSession.sparkContext.defaultParallelism
-    base = banded.repartition(p, "band", "bucket")
-    a = base.select("band", "bucket", F.col("doc_id").alias("doc_a"))
-    b = base.select("band", "bucket", F.col("doc_id").alias("doc_b"))
-    cands = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .dropDuplicates(["doc_a", "doc_b"])
-        .localCheckpoint(eager=True)
+    cands = _minhash_candidates(sig_df, num_hashes, bands).localCheckpoint(
+        eager=True
     )
-    ids = (
-        cands.select(F.col("doc_a").alias("doc_id"))
-        .union(cands.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    sig_small = sig_df.join(ids, "doc_id", "semi")
-    sa = sig_small.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sig_small.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
     est = F.size(
         F.filter(
             F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
@@ -472,10 +539,19 @@ def minhash_lsh_pairs(
         )
     ).cast("double") / F.lit(float(num_hashes))
     return (
-        cands.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        attach_to_pair_ends(cands, pair_end_rows(sig_df, cands), {"sig": "sig_"})
         .select("doc_a", "doc_b", est.alias("est_jaccard"))
         .filter(F.col("est_jaccard") >= threshold)
+    )
+
+
+def _minhash_candidates(sig_df: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """The MinHash candidate pass over a signature table: distinct
+    (doc_a < doc_b) pairs sharing at least one band bucket, ids only."""
+    return (
+        bucket_self_join(minhash_bands(sig_df, num_hashes, bands), ["band", "bucket"])
+        .select("doc_a", "doc_b")
+        .dropDuplicates(["doc_a", "doc_b"])
     )
 
 
@@ -487,46 +563,8 @@ def minhash_candidate_pairs(
     buckets — ids ONLY through the bucket join and the pair dedup (the
     signature arrays never shuffle; same payload-narrowing discipline as
     the embedding-LSH path)."""
-    assert num_hashes % bands == 0
-    rows = num_hashes // bands
     sig_df = minhash_signatures(documents, text_col, n, num_hashes, seed)
-    banded = sig_df.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.concat_ws(
-                                ",",
-                                *[F.col("sig")[b * rows + r].cast("string")
-                                  for r in range(rows)],
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
-    # the bucket self-join's output is Σ_bucket freq^2 while its INPUT is
-    # |docs| * bands small rows — AQE sizes post-shuffle partitions from
-    # the input bytes and coalesces the exploding join onto ~1 task (the
-    # jaccard_pairs straggler pathology); repartition(P, band, bucket) is
-    # a REPARTITION_BY_NUM exchange AQE must keep, P cluster-derived.
-    # One shared exchange, renamed after (see minhash_lsh_pairs): the
-    # signature subtree executes once, the second side reuses the shuffle.
-    p = documents.sparkSession.sparkContext.defaultParallelism
-    base = banded.repartition(p, "band", "bucket")
-    a = base.select("band", "bucket", F.col("doc_id").alias("doc_a"))
-    b = base.select("band", "bucket", F.col("doc_id").alias("doc_b"))
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
+    return _minhash_candidates(sig_df, num_hashes, bands)
 
 
 def exact_jaccard_rerank(
@@ -558,29 +596,21 @@ def exact_jaccard_rerank(
     now proportional to candidate volume, not corpus size.
     """
     pairs = pairs.localCheckpoint(eager=True)
-    ids = (
-        pairs.select(F.col("doc_a").alias("doc_id"))
-        .union(pairs.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
     # candidate docs are small by construction (they fit the materialized
     # pair list), so a plain repartition spreads the shingle work for
     # pennies — ensure_parallelism's probe is not usable on a join output
     # (see its docstring)
     p = documents.sparkSession.sparkContext.defaultParallelism
     sh = (
-        documents.join(ids, "doc_id", "semi")
+        pair_end_rows(documents, pairs)
         .repartition(p)
         .select("doc_id", word_shingle_hashes(text_col, n).alias("_sh"))
         .localCheckpoint(eager=False)
     )
-    a = sh.select(F.col("doc_id").alias("doc_a"), F.col("_sh").alias("_sha"))
-    b = sh.select(F.col("doc_id").alias("doc_b"), F.col("_sh").alias("_shb"))
     inter = F.size(F.array_intersect("_sha", "_shb"))
     jac = inter / (F.size("_sha") + F.size("_shb") - inter)
     return (
-        pairs.join(a, "doc_a")
-        .join(b, "doc_b")
+        attach_to_pair_ends(pairs, sh, {"_sh": "_sh"})
         .withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
@@ -663,7 +693,6 @@ def simhash_pairs(
     """
     sig = simhash_signatures(documents, text_col)
     width = 64 // bands
-    mask = (1 << width) - 1
     banded = sig.select(
         "doc_id", "simhash",
         F.explode(
@@ -671,26 +700,15 @@ def simhash_pairs(
                 *[
                     F.struct(
                         F.lit(b).alias("band"),
-                        F.shiftright("simhash", b * width)
-                        .bitwiseAND(F.lit(mask)).alias("chunk"),
+                        simhash_chunk("simhash", b, width).alias("chunk"),
                     )
                     for b in range(bands)
                 ]
             )
         ).alias("bc"),
     ).select("doc_id", "simhash", "bc.band", "bc.chunk")
-    # exploding self-join: pin the partitioning; one shared exchange,
-    # renamed after (see minhash_lsh_pairs) so the signature bit algebra
-    # executes once instead of once per side
-    p = documents.sparkSession.sparkContext.defaultParallelism
-    base = banded.repartition(p, "band", "chunk")
-    a = base.select("band", "chunk", F.col("doc_id").alias("doc_a"),
-                    F.col("simhash").alias("sim_a"))
-    b = base.select("band", "chunk", F.col("doc_id").alias("doc_b"),
-                    F.col("simhash").alias("sim_b"))
     return (
-        a.join(b, ["band", "chunk"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        bucket_self_join(banded, ["band", "chunk"], {"simhash": "sim_"})
         .select("doc_a", "doc_b", hamming64(F.col("sim_a"), F.col("sim_b")).alias("hamming"))
         .dropDuplicates(["doc_a", "doc_b"])
         .filter(F.col("hamming") <= max_hamming)
@@ -729,44 +747,6 @@ def contamination_overlap(
     )
 
 
-def simhash_candidate_pairs(
-    documents: DataFrame, text_col: str = "text", bands: int = 8,
-) -> DataFrame:
-    """Distinct candidate pairs (doc_a < doc_b) from simhash chunk
-    banding, ids only (signatures don't ride the shuffle). By pigeonhole,
-    recall is 1 for any pair with Hamming distance < ``bands``."""
-    sig = simhash_signatures(documents, text_col)
-    width = 64 // bands
-    mask = (1 << width) - 1
-    banded = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright("simhash", b * width)
-                        .bitwiseAND(F.lit(mask)).alias("chunk"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bc"),
-    ).select("doc_id", "bc.band", "bc.chunk")
-    # exploding self-join: pin the partitioning; one shared exchange,
-    # renamed after (see minhash_lsh_pairs)
-    p = documents.sparkSession.sparkContext.defaultParallelism
-    base = banded.repartition(p, "band", "chunk")
-    a = base.select("band", "chunk", F.col("doc_id").alias("doc_a"))
-    b = base.select("band", "chunk", F.col("doc_id").alias("doc_b"))
-    return (
-        a.join(b, ["band", "chunk"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-
-
 def simhash_pairs_verified(
     documents: DataFrame, text_col: str = "text", bands: int = 8,
     n: int = 3, threshold: float = 0.5,
@@ -789,33 +769,35 @@ def simhash_pairs_verified(
     and float64 divide equal the rerank's bit-for-bit) and keeps only
     pairs agreeing on >=1 chunk, attaching the two 64-bit signatures to
     the small surviving pair list. Set-identical on every input by
-    commutativity of intersection; the chunk-agreement predicate is the
-    same bit algebra the banding join used as its key.
+    commutativity of intersection; the chunk-agreement predicate is
+    :func:`simhash_chunk`, the banding join's key.
+
+    The equivalence needs ``threshold > 0``: :func:`jaccard_pairs` only
+    sees pairs sharing a shingle, so it cannot emit the zero-overlap
+    (Jaccard 0) pairs a threshold <= 0 admits. Such thresholds raise
+    ``ValueError``.
     """
+    if threshold <= 0:
+        raise ValueError(
+            f"simhash_pairs_verified needs threshold > 0 (got {threshold}): "
+            f"its Jaccard pass cannot emit pairs that share no shingle"
+        )
     jp = jaccard_pairs(
         documents, text_col, n, threshold, max_shingle_freq=(1 << 62)
     ).localCheckpoint(eager=True)
-    sig = simhash_signatures(documents, text_col)
-    ids = (
-        jp.select(F.col("doc_a").alias("doc_id"))
-        .union(jp.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
+    sig = pair_end_rows(simhash_signatures(documents, text_col), jp).localCheckpoint(
+        eager=False
     )
-    sig = sig.join(ids, "doc_id", "semi").localCheckpoint(eager=False)
-    a = sig.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("_sim_a"))
-    b = sig.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("_sim_b"))
     width = 64 // bands
-    mask = (1 << width) - 1
-    agree = None
-    for bb in range(bands):
-        eq = (
-            F.shiftright("_sim_a", bb * width).bitwiseAND(F.lit(mask))
-            == F.shiftright("_sim_b", bb * width).bitwiseAND(F.lit(mask))
-        )
-        agree = eq if agree is None else (agree | eq)
+    agree = reduce(
+        lambda x, y: x | y,
+        [
+            simhash_chunk("_sim_a", b, width) == simhash_chunk("_sim_b", b, width)
+            for b in range(bands)
+        ],
+    )
     return (
-        jp.join(a, "doc_a")
-        .join(b, "doc_b")
+        attach_to_pair_ends(jp, sig, {"simhash": "_sim_"})
         .filter(agree)
         .select("doc_a", "doc_b", "jaccard")
     )

@@ -8,13 +8,12 @@ Three paths:
   the tiny candidate union. One scan of the corpus, no pair-row blowup,
   no shuffle of the big side except the (partitions x queries x k)-row
   final top-k.
-- **LSH-bucketed top-k** — the scale path: random-hyperplane signatures
-  (deterministic, seeded) bucket the corpus; candidates = bucket
-  collisions with the query in any band; exact cosine re-rank within
-  candidates. Probing cost is bucket-local instead of corpus-wide; recall
-  is tunable by (planes, bands).
-- **IVF top-k** — coarse quantizer (deterministic hash-sampled centroids)
-  + probed exact re-rank within the query's n_probe nearest lists.
+- **IVF top-k** — the scale path: coarse quantizer (deterministic
+  hash-sampled centroids) + probed exact re-rank within the query's
+  n_probe nearest lists.
+- **LSH-blocked near-dups** — random-hyperplane signatures
+  (deterministic, seeded) bucket the corpus and each bucket is scored
+  locally by exact cosine; recall is tunable by (planes, bands).
 
 All scoring is Arrow-batched numpy (one matmul / one vectorized reduction
 per record batch, float64 accumulation) — r2 measured the interpreted
@@ -24,7 +23,8 @@ is the same pattern the IVF assigner already used. The pure-Column
 ``dot``/``norm``/``cosine`` helpers remain exported for plans that must
 stay Python-free, but no hot path uses them.
 
-Near-duplicate-by-embedding is ``cosine >= threshold`` on either path.
+Near-duplicate-by-embedding is ``cosine >= threshold``, all-pairs
+(``embedding_near_dups_exact``) or LSH-blocked (``embedding_near_dups``).
 """
 
 from __future__ import annotations
@@ -73,9 +73,9 @@ _INTEGRAL_TYPES = {"tinyint", "smallint", "int", "bigint"}
 def _require_long_id(df: DataFrame, id_col: str, fn: str) -> None:
     """Fail fast on non-integral id columns.
 
-    The Arrow hot paths (brute_force_topk, banded_signatures and its
-    lsh/near-dup consumers) emit 64-bit integer ids (``np.int64``
-    conversion + ``long`` output schema) — the narrowest shuffle payload
+    The Arrow hot paths (brute_force_topk, banded_signatures, ivf_topk)
+    emit 64-bit integer ids (``np.int64`` conversion + ``long`` output
+    schema) — the narrowest shuffle payload
     for the candidate-pair stages. A string/UUID id would otherwise fail
     deep inside an executor-side numpy conversion; this check raises at
     plan-build time with the fix (cast or zipWithIndex-style surrogate).
@@ -233,26 +233,18 @@ def banded_signatures(
     planes: int,
     bands: int,
     seed: int,
-    role: str,
-    include_vec: bool = True,
 ) -> DataFrame:
-    """(role_id[, role_vec], band, bucket) rows: one Arrow matmul per batch
+    """(x_id, x_vec, band, bucket) rows: one Arrow matmul per batch
     computes all ``planes`` sign bits, packed per band into an integer
     bucket — the LSH blocking key. No per-plane interpreted dot products
-    (r2 hot-path fix), no stored plane table.
-
-    ``include_vec=False`` emits ids only: candidate generation then
-    shuffles 16-byte (band, bucket, id) rows instead of dragging two
-    embedding payloads through the bucket join and the pair dedup —
-    vectors are re-attached by an id join AFTER deduplication, when the
-    row count is at its minimum.
+    (r2 hot-path fix), no stored plane table. The vector rides along so
+    a bucket-local scorer needs no re-attach join.
     """
     assert planes % bands == 0
     _require_long_id(df, id_col, "banded_signatures")
     rows = planes // bands
     H = _plane_matrix(dim, planes, seed)
-    vec_part = f", {role}_vec array<float>" if include_vec else ""
-    schema = f"{role}_id long{vec_part}, band int, bucket long"
+    schema = "x_id long, x_vec array<float>, band int, bucket long"
     weights = (1 << np.arange(rows, dtype=np.int64))[None, None, :]
 
     def sign_and_band(batches):
@@ -265,19 +257,18 @@ def banded_signatures(
                 bits.reshape(len(M), bands, rows).astype(np.int64) * weights
             ).sum(axis=2)  # (n, bands)
             n = len(M)
-            out = {
-                f"{role}_id": np.repeat(
-                    pdf[id_col].to_numpy(dtype=np.int64), bands
-                ),
-            }
-            if include_vec:
-                # np.repeat on the object array repeats references — no
-                # per-element Python loop (r7: the list comprehension here
-                # was a visible chunk of a single-task signature pass)
-                out[f"{role}_vec"] = np.repeat(pdf[vec_col].to_numpy(), bands)
-            out["band"] = np.tile(np.arange(bands, dtype=np.int32), n)
-            out["bucket"] = buckets.reshape(-1)
-            yield pd.DataFrame(out)
+            yield pd.DataFrame(
+                {
+                    "x_id": np.repeat(pdf[id_col].to_numpy(dtype=np.int64), bands),
+                    # np.repeat on the object array repeats references — no
+                    # per-element Python loop (r7: the list comprehension
+                    # here was a visible chunk of a single-task signature
+                    # pass)
+                    "x_vec": np.repeat(pdf[vec_col].to_numpy(), bands),
+                    "band": np.tile(np.arange(bands, dtype=np.int32), n),
+                    "bucket": buckets.reshape(-1),
+                }
+            )
 
     # a small parquet corpus arrives as one ~file-sized scan split and the
     # whole Arrow signature pass would run on a single core (r7: measured
@@ -287,51 +278,6 @@ def banded_signatures(
 
     return ensure_parallelism(df.select(id_col, vec_col)).mapInPandas(
         sign_and_band, schema
-    )
-
-
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-    planes: int = 16,
-    bands: int = 4,
-    seed: int = 7,
-) -> DataFrame:
-    """Approximate top-k: candidates share at least one LSH band with the
-    query, then exact cosine re-rank (Arrow-vectorized). Same output
-    schema as ``brute_force_topk`` (ranks relative to the candidate set)."""
-    if dim is None:
-        dim = len(corpus.select(vec_col).first()[0])
-    cq = banded_signatures(queries, id_col, vec_col, dim, planes, bands, seed,
-                           "query", include_vec=False)
-    cc = banded_signatures(corpus, id_col, vec_col, dim, planes, bands, seed,
-                           "neighbor", include_vec=False)
-    qv = queries.select(F.col(id_col).alias("query_id"),
-                        F.col(vec_col).alias("query_vec"))
-    nv = corpus.select(F.col(id_col).alias("neighbor_id"),
-                       F.col(vec_col).alias("neighbor_vec"))
-    cand = (
-        cc.join(F.broadcast(cq), ["band", "bucket"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .dropDuplicates(["query_id", "neighbor_id"])
-        # vectors attached after dedup: the bucket join and dedup move only
-        # id pairs; the query side is broadcast, the corpus side id-joined
-        .join(F.broadcast(qv), "query_id")
-        .join(nv, "neighbor_id")
-        .withColumn("cos_sim", cosine_arrow(F.col("query_vec"), F.col("neighbor_vec")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
     )
 
 
@@ -410,10 +356,7 @@ def embedding_near_dups(
     """
     if dim is None:
         dim = len(corpus.select(vec_col).first()[0])
-    banded = banded_signatures(
-        corpus, id_col, vec_col, dim, planes, bands, seed, "x",
-        include_vec=True,
-    )
+    banded = banded_signatures(corpus, id_col, vec_col, dim, planes, bands, seed)
 
     def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(

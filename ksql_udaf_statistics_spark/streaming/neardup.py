@@ -63,7 +63,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..operators.dedup import minhash_signatures
+from ..operators.dedup import minhash_bands, minhash_signatures
 from .sink import ExactlyOnceParquetSink
 
 _UNIT_MS = {
@@ -86,14 +86,11 @@ def band_buckets(
 ) -> DataFrame:
     """Exploded LSH candidate rows ``(doc_id[, ts], band, bucket)``.
 
-    Same banding as ``dedup.minhash_lsh_pairs`` (bands x rows =
-    num_hashes; bucket = xxhash64 of the band's signature slice) — one
-    narrow row per (doc, band), id-only. ``carry_cols`` ride through for
-    consumers that need per-doc metadata past the gate (the curation
-    funnel carries ``source``/``n_tok`` — a dozen bytes per band row,
-    still no text or signature payload in the stateful shuffle)."""
-    assert num_hashes % bands == 0
-    rows = num_hashes // bands
+    The banding is ``dedup.minhash_bands``, the batch operators' band
+    hash — one narrow row per (doc, band), id-only. ``carry_cols`` ride
+    through for consumers that need per-doc metadata past the gate (the
+    curation funnel carries ``source``/``n_tok`` — a dozen bytes per band
+    row, still no text or signature payload in the stateful shuffle)."""
     docs = documents
     if id_col != "doc_id":
         docs = docs.withColumnRenamed(id_col, "doc_id")
@@ -106,24 +103,7 @@ def band_buckets(
         docs.select(*keep, text_col), text_col, n, num_hashes, seed,
         extra_cols=keep[1:],
     )
-    bb = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.xxhash64(
-                        F.concat_ws(
-                            ",",
-                            *[F.col("sig")[b * rows + r].cast("string")
-                              for r in range(rows)],
-                        )
-                    ).alias("bucket"),
-                )
-                for b in range(bands)
-            ]
-        )
-    ).alias("bb")
-    return sig.select(*keep, bb).select(*keep, "bb.band", "bb.bucket")
+    return minhash_bands(sig, num_hashes, bands, keep)
 
 
 _DECISION_SCHEMA = StructType([

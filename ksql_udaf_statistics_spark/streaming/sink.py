@@ -36,6 +36,27 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
+def _commit_ledger(ledger_dir: str, batch_id: int, lineage: list[dict]) -> None:
+    """Commit one batch's ledger entry atomically.
+
+    One file per batch id, so a replay overwrites the same file
+    (idempotent). The entry is written to a temp name and ``os.replace``d
+    into place: a crash mid-write leaves only the temp file, which
+    ``committed_batches`` ignores, never a torn ``batch-*.json``.
+    """
+    os.makedirs(ledger_dir, exist_ok=True)
+    entry = {
+        "batch_id": batch_id,
+        "rows": sum(x["rows"] for x in lineage),
+        "partitions": lineage,
+        "wall_time": time.time(),
+    }
+    path = os.path.join(ledger_dir, f"batch-{batch_id:012d}.json")
+    with open(path + ".tmp", "w") as f:
+        json.dump(entry, f)
+    os.replace(path + ".tmp", path)
+
+
 class ExactlyOnceParquetSink:
     """foreachBatch sink with batch-id idempotence + key-upsert reads."""
 
@@ -78,16 +99,7 @@ class ExactlyOnceParquetSink:
             ]
         finally:
             batch_df.unpersist()
-        os.makedirs(self.ledger_dir, exist_ok=True)
-        entry = {
-            "batch_id": batch_id,
-            "rows": sum(x["rows"] for x in lineage),
-            "partitions": lineage,
-            "wall_time": time.time(),
-        }
-        # one file per batch id: replays overwrite the same file -> idempotent
-        with open(os.path.join(self.ledger_dir, f"batch-{batch_id:012d}.json"), "w") as f:
-            json.dump(entry, f)
+        _commit_ledger(self.ledger_dir, batch_id, lineage)
 
     # -- read side ----------------------------------------------------------
 
@@ -242,17 +254,7 @@ class MergeUpsertParquetSink(ExactlyOnceParquetSink):
         with open(tmp, "w") as f:
             f.write(f"snapshot={batch_id:012d}")
         os.replace(tmp, self._pointer_file())
-        os.makedirs(self.ledger_dir, exist_ok=True)
-        entry = {
-            "batch_id": batch_id,
-            "rows": sum(x["rows"] for x in lineage),
-            "partitions": lineage,
-            "wall_time": time.time(),
-        }
-        with open(
-            os.path.join(self.ledger_dir, f"batch-{batch_id:012d}.json"), "w"
-        ) as f:
-            json.dump(entry, f)
+        _commit_ledger(self.ledger_dir, batch_id, lineage)
 
     def read_all(self, spark: SparkSession) -> DataFrame:
         cur = self._current_snapshot()

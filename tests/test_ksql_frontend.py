@@ -1187,3 +1187,19 @@ def test_dependency_hardening_r6(engine):
     )
     rows = {r["k"]: r["s"] for r in engine.execute("SELECT * FROM fb_tot;")}
     assert rows == {"a": 1.0, "b": 2.0, "c": 4.0}  # a stays 1.0: no double count
+
+
+def test_ksql_e2e_query_leaves_no_work_dir(spark, sf_dir):
+    """The ksql_e2e_* declared queries pull their rows to the driver and
+    remove their temporary engine work directory before returning."""
+    import glob
+    import os
+    import tempfile
+
+    from ksql_udaf_statistics_spark.plans.queries import QUERIES
+
+    pattern = os.path.join(tempfile.gettempdir(), "kuss_ksql_*")
+    before = set(glob.glob(pattern))
+    out = QUERIES["ksql_e2e_session_stats"](spark, sf_dir)
+    assert out.count() > 0
+    assert set(glob.glob(pattern)) - before == set()

@@ -123,6 +123,86 @@ def test_minhash_lsh_finds_near_dups(docs_with_dups):
         assert est[p] == pytest.approx(1.0)
 
 
+@pytest.mark.parametrize("max_shingle_freq", [1000, 3])
+def test_jaccard_self_join_fallback_equals_broadcast_index(
+    docs_with_dups, max_shingle_freq
+):
+    """broadcast_index_max_rows=0 forces the bucket self-join path; it
+    must return the broadcast-index path's pairs and values exactly,
+    with and without the shingle-frequency cap biting."""
+
+    def run(**kw):
+        return {
+            (r["doc_a"], r["doc_b"]): r["jaccard"]
+            for r in D.jaccard_pairs(
+                docs_with_dups, threshold=0.05,
+                max_shingle_freq=max_shingle_freq, **kw,
+            ).collect()
+        }
+
+    broadcast = run()
+    assert len(broadcast) >= 20
+    assert run(broadcast_index_max_rows=0) == broadcast
+
+
+def test_minhash_lsh_pairs_are_thresholded_candidates(docs_with_dups):
+    """minhash_lsh_pairs = the MinHash candidate pass over the same
+    signatures, kept where the estimated Jaccard (matching minhashes /
+    num_hashes) clears the threshold."""
+    sigs = {
+        r["doc_id"]: r["sig"]
+        for r in D.minhash_signatures(docs_with_dups, num_hashes=32).collect()
+    }
+    cands = D.minhash_candidate_pairs(docs_with_dups, num_hashes=32, bands=8)
+    want = {}
+    for r in cands.collect():
+        a, b = r["doc_a"], r["doc_b"]
+        est = sum(x == y for x, y in zip(sigs[a], sigs[b])) / 32
+        if est >= 0.5:
+            want[(a, b)] = est
+    got = {
+        (r["doc_a"], r["doc_b"]): r["est_jaccard"]
+        for r in D.minhash_lsh_pairs(
+            docs_with_dups, num_hashes=32, bands=8, threshold=0.5
+        ).collect()
+    }
+    assert len(want) >= 20
+    assert got == want
+
+
+@pytest.mark.parametrize("threshold", [0.0, -0.5])
+def test_simhash_pairs_verified_needs_positive_threshold(docs_with_dups, threshold):
+    # jaccard_pairs cannot emit zero-overlap pairs, so the claimed
+    # equality with all-pairs Jaccard >= threshold fails at threshold <= 0
+    with pytest.raises(ValueError, match="threshold > 0"):
+        D.simhash_pairs_verified(docs_with_dups, threshold=threshold)
+
+
+def test_ensure_parallelism_ignores_join_named_columns(spark, tmp_dir):
+    """A column aliased ``JoinKey`` is not a Join node: the 1-partition
+    scan is still spread to defaultParallelism."""
+    import os
+
+    path = os.path.join(tmp_dir, "one_file")
+    spark.range(100).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path).select(F.col("id").alias("JoinKey"))
+    assert df.rdd.getNumPartitions() == 1
+    out = D.ensure_parallelism(df)
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+@pytest.mark.parametrize("set_op", ["intersect", "subtract"])
+def test_ensure_parallelism_leaves_set_ops_unprobed(spark, monkeypatch, set_op):
+    """Intersect/Except shuffle: the plan is returned as is, without the
+    ``.rdd`` partition probe that would execute it under AQE."""
+    df = getattr(spark.range(10), set_op)(spark.range(5))
+    monkeypatch.setattr(
+        type(df), "rdd",
+        property(lambda self: pytest.fail("ensure_parallelism probed .rdd")),
+    )
+    assert D.ensure_parallelism(df) is df
+
+
 def test_simhash_finds_near_dups(docs_with_dups):
     # bands=8 -> 8-bit chunks -> pigeonhole guarantees recall for any pair
     # with Hamming distance <= 7 (the one-word near-copies measure 1-7)
@@ -166,16 +246,6 @@ def test_brute_force_topk_matches_numpy(spark, emb):
         for (wid, wsim), g in zip(want, gotl):
             assert g["neighbor_id"] == wid
             assert g["cos_sim"] == pytest.approx(wsim, abs=1e-6)
-
-
-def test_lsh_topk_recall(spark, emb):
-    queries = emb.filter(F.col("vec_id") < 20)
-    exact = S.brute_force_topk(emb, queries, k=5).collect()
-    approx = S.lsh_topk(emb, queries, k=5, planes=16, bands=8).collect()
-    exact_set = {(r["query_id"], r["neighbor_id"]) for r in exact}
-    approx_set = {(r["query_id"], r["neighbor_id"]) for r in approx}
-    recall = len(exact_set & approx_set) / len(exact_set)
-    assert recall >= 0.5, f"LSH recall too low: {recall}"
 
 
 def test_embedding_near_dups_blocked(spark, emb):

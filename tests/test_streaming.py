@@ -675,3 +675,37 @@ def test_merge_upsert_time_travel(spark, tmp_dir):
     import pytest as _pytest
     with _pytest.raises(FileNotFoundError):
         sink.read_as_of(spark, -1)
+
+
+@pytest.mark.parametrize("sink_cls", ["ExactlyOnceParquetSink", "MergeUpsertParquetSink"])
+def test_torn_ledger_write_is_never_committed(spark, tmp_dir, monkeypatch, sink_cls):
+    """A crash partway through a ledger write leaves no torn entry: the
+    ledger still lists the earlier batches, and the replayed batch then
+    commits cleanly."""
+    import json
+    from types import SimpleNamespace
+
+    from ksql_udaf_statistics_spark.streaming import sink as sink_mod
+
+    sink = getattr(sink_mod, sink_cls)(os.path.join(tmp_dir, "t"), ["k"])
+
+    def batch(v):
+        return spark.range(3).select(F.col("id").alias("k"), F.lit(v).alias("v"))
+
+    sink(batch(1), 0)
+
+    def torn_dump(obj, f):
+        f.write(json.dumps(obj)[:10])
+        raise OSError("crash mid ledger write")
+
+    monkeypatch.setattr(sink_mod, "json", SimpleNamespace(dump=torn_dump, load=json.load))
+    with pytest.raises(OSError, match="crash mid ledger write"):
+        sink(batch(2), 1)
+    monkeypatch.undo()
+
+    assert [e["batch_id"] for e in sink.committed_batches()] == [0]
+    sink(batch(2), 1)  # replay after the crash
+    assert [e["batch_id"] for e in sink.committed_batches()] == [0, 1]
+    assert {(r["k"], r["v"]) for r in sink.read_current(spark).collect()} == {
+        (0, 2), (1, 2), (2, 2)
+    }
