@@ -93,7 +93,11 @@ from pyspark.sql.types import (
 )
 
 from ..stats import spark_agg as SA
-from ..streaming.sink import ExactlyOnceParquetSink, run_streaming_stats
+from ..streaming.sink import (
+    ExactlyOnceParquetSink,
+    drain_available_now,
+    run_streaming_stats,
+)
 
 _TYPES = {
     "DOUBLE": DoubleType(),
@@ -1171,15 +1175,13 @@ class KsqlEngine:
             .trigger(availableNow=True)
             .start()
         )
-        if not q.awaitTermination(300):
-            # a timed-out drain means the derived stream directory is
-            # still being written — returning would let the downstream
-            # CTAS read a partial stream; fail loudly instead
-            q.stop()
-            raise RuntimeError(
-                f"CSAS refresh of stream {name!r} did not finish within "
-                f"300s; downstream reads would see a partial stream"
-            )
+        # a timed-out drain means the derived stream directory is still
+        # being written — returning would let the downstream CTAS read a
+        # partial stream; fail loudly instead
+        drain_available_now(
+            q, f"CSAS refresh of stream {name!r} (downstream reads would "
+               f"see a partial stream)",
+        )
 
     # -- INSERT INTO ---------------------------------------------------------
 
@@ -1914,12 +1916,10 @@ class KsqlEngine:
             lambda df: self._build_agg(spec, df),
             output_mode=mode, query_name=f"ksql_{table}",
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                f"refresh of table {table!r} did not finish within 300s; "
-                f"the materialized state is incomplete"
-            )
+        drain_available_now(
+            q, f"refresh of table {table!r} (the materialized state is "
+               f"incomplete)",
+        )
 
     def _needs_batch_materialization(self, spec: TableSpec) -> bool:
         all_literal_keys = all(
@@ -1996,6 +1996,12 @@ class KsqlEngine:
         if spec is None:
             raise KsqlParseError(f"unknown table {name!r}")
         self.refresh(name)
+        if (isinstance(spec, TableSpec)
+                and not self._needs_batch_materialization(spec)
+                and not spec.sink.committed_batches()):
+            # no batch committed yet (nothing inserted): the sink has no
+            # data or schema to read, and ksqlDB answers with no rows
+            return []
         df = self._read_table(spec)
         if m.group(3):
             df = df.filter(parse_predicate(m.group(3)))

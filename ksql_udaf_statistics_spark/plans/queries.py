@@ -798,15 +798,11 @@ def q_dedup_stream_minhash(spark, sf_dir):
         sink = ExactlyOnceParquetSink(
             os.path.join(work, "kept"), key_cols=["doc_id"]
         )
-        from ..streaming.sink import drain_available_now
-
         with _stream_shuffle(spark):
-            q = run_stream_minhash_dedup(
+            run_stream_minhash_dedup(
                 stream, sink, os.path.join(work, "ckpt"),
                 watermark="24 hours", num_hashes=32, bands=16,
             )
-            # partial kept-set must never be returned: raise on timeout
-            drain_available_now(q, 360, "streaming near-dup gate")
         # materialize before the tempdir vanishes
         rows = sink.read_current(spark).select("doc_id").orderBy("doc_id")
         out = spark.createDataFrame(rows.collect(), rows.schema)
@@ -1351,7 +1347,7 @@ def q_drift_detector_stream(spark, sf_dir):
             run_stream_drift_detector(
                 stream, os.path.join(work, "out"),
                 os.path.join(work, "ckpt"),
-                watermark="2 hours", timeout_sec=360,
+                watermark="2 hours",
             )
         got = (
             spark.read.parquet(os.path.join(work, "out"))
@@ -1408,7 +1404,9 @@ def q_token_topk_stream(spark, sf_dir):
     import tempfile
 
     from ..streaming.sink import MergeUpsertParquetSink
-    from ..streaming.topk import read_topk, run_stream_token_counts
+    from ..streaming.topk import (
+        read_topk, run_continuous_aggregate, token_counts_agg,
+    )
 
     docs = _load(spark, sf_dir, "documents").select("text", "source")
     work = tempfile.mkdtemp(prefix="kuss_topkstream_")
@@ -1426,8 +1424,8 @@ def q_token_topk_stream(spark, sf_dir):
             os.path.join(work, "counts"), key_cols=["source", "tok"]
         )
         with _stream_shuffle(spark):
-            run_stream_token_counts(
-                stream, sink, os.path.join(work, "ckpt"), timeout_sec=360
+            run_continuous_aggregate(
+                token_counts_agg(stream), sink, os.path.join(work, "ckpt")
             )
         out = read_topk(spark, sink, k=5)
         # materialize before the tempdir vanishes
@@ -1453,7 +1451,7 @@ _LENGTH_BUCKET_ORACLE_SQL = """WITH tok AS (
 @register("length_bucket_stream", _LENGTH_BUCKET_ORACLE_SQL)
 def q_length_bucket_stream(spark, sf_dir):
     """The length-bucket histogram as a CONTINUOUS streaming aggregate
-    (streaming/topk.py::run_stream_length_buckets): update-mode integer
+    (streaming/topk.py::length_buckets_agg): update-mode integer
     counts/sums MERGEd by (source, bucket_lo) — the third hash-oracled
     streaming gate entry, sharing the batch ``length_bucket_histogram``
     oracle verbatim (integer aggregates are order-independent, so drained
@@ -1464,7 +1462,7 @@ def q_length_bucket_stream(spark, sf_dir):
     import tempfile
 
     from ..streaming.sink import MergeUpsertParquetSink
-    from ..streaming.topk import run_stream_length_buckets
+    from ..streaming.topk import length_buckets_agg, run_continuous_aggregate
 
     docs = _load(spark, sf_dir, "documents").select("text", "source")
     work = tempfile.mkdtemp(prefix="kuss_lenbstream_")
@@ -1480,8 +1478,8 @@ def q_length_bucket_stream(spark, sf_dir):
             os.path.join(work, "hist"), key_cols=["source", "bucket_lo"]
         )
         with _stream_shuffle(spark):
-            run_stream_length_buckets(
-                stream, sink, os.path.join(work, "ckpt"), timeout_sec=360
+            run_continuous_aggregate(
+                length_buckets_agg(stream), sink, os.path.join(work, "ckpt")
             )
         out = sink.read_current(spark).select(
             "source", "bucket_lo", "n_docs", "total_tokens", "padding_waste"
@@ -2600,15 +2598,11 @@ def q_curation_stream_funnel(spark, sf_dir):
         funnel_sink = ExactlyOnceParquetSink(
             os.path.join(work, "funnel"), key_cols=["source"]
         )
-        from ..streaming.sink import drain_available_now
-
         with _stream_shuffle(spark):
-            q = run_stream_curation_funnel(
+            run_stream_curation_funnel(
                 stream, kept_sink, funnel_sink, os.path.join(work, "ckpt"),
                 watermark="24 hours",
             )
-            # partial funnel table must never be returned: raise on timeout
-            drain_available_now(q, 360, "streaming curation funnel")
         rows = read_funnel_table(funnel_sink, spark).orderBy("source")
         return spark.createDataFrame(rows.collect(), rows.schema)
     finally:

@@ -53,7 +53,6 @@ import json
 import math
 from collections.abc import Iterator
 from decimal import ROUND_HALF_UP, Decimal, localcontext
-from typing import Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -371,25 +370,21 @@ def run_stream_drift_detector(
     window: str = "1 hour",
     watermark: str = "2 hours",
     z_threshold: float = 3.0,
-    available_now: bool = True,
-    timeout_sec: Optional[int] = 360,
 ):
-    """Drive the drift stream into an append parquet sink (each finalized
+    """Drain the drift stream into an append parquet sink (each finalized
     window is emitted exactly once, so plain append IS exactly-once here;
-    checkpoint resume replays no finalized window)."""
+    checkpoint resume replays no finalized window). Returns the drained
+    query."""
     decisions = stream_drift_decisions(
         stream_events, key_col, ts_col, value_col, window, watermark,
         z_threshold,
     )
-    writer = (
+    q = (
         decisions.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint)
         .format("parquet")
         .option("path", out_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        drain_available_now(q, timeout_sec, "drift stream")
-    return q
+    return drain_available_now(q, "drift stream")

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from ..operators.text import quality_score
 from .neardup import minhash_dedup_batch, stream_minhash_decisions
-from .sink import ExactlyOnceParquetSink
+from .sink import ExactlyOnceParquetSink, drain_available_now, run_streaming_stats
 
 FUNNEL_AGGS = [
     F.count(F.lit(1)).alias("n_docs"),
@@ -94,10 +94,10 @@ def run_stream_curation_funnel(
     num_hashes: int = 32,
     bands: int = 16,
     seed: int = 1,
-    available_now: bool = True,
 ):
-    """Start the continuous curation pipeline over a ``(doc_id, source,
-    text, ts)`` stream. Returns the StreamingQuery.
+    """Run the continuous curation pipeline over a ``(doc_id, source,
+    text, ts)`` stream to the end of its available input. Returns the
+    drained StreamingQuery.
 
     Quality-passing docs flow through the stateful near-dup gate with
     ``(source, n_tok)`` carried; quality-failing docs take a stateless
@@ -153,15 +153,11 @@ def run_stream_curation_funnel(
         finally:
             per_doc.unpersist()
 
-    writer = (
-        unioned.writeStream.foreachBatch(emit)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName("stream_curation_funnel")
+    q = run_streaming_stats(
+        unioned, emit, checkpoint, lambda df: df,
+        output_mode="append", query_name="stream_curation_funnel",
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain_available_now(q, "streaming curation funnel")
 
 
 def curation_funnel_batch_twin(

@@ -22,12 +22,10 @@ from pyspark.sql import functions as F
 
 from ..stats import spark_agg as SA
 
-ALL_SUM_COLS = ["m_n", "m_s1", "m_s2", "m_s3", "m_s4",
-                "w_sw", "w_swx", "w_swx2", "w_swx3", "w_swx4"]
 
-
-def stat_columns(value: str, weight: Optional[str], sample: bool = False) -> list[Column]:
-    """The full reference UDAF surface as aliased aggregate Columns."""
+def stat_columns(value: str, weight: Optional[str]) -> list[Column]:
+    """The full reference UDAF surface as aliased aggregate Columns: both
+    the population and the sample variant of every unweighted moment."""
     cols = [
         SA.skewness(value, sample=False).alias("skewness"),
         SA.skewness(value, sample=True).alias("skewness_sample"),

@@ -64,7 +64,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.dedup import minhash_bands, minhash_signatures
-from .sink import ExactlyOnceParquetSink
+from .sink import ExactlyOnceParquetSink, drain_available_now, run_streaming_stats
 
 _UNIT_MS = {
     "millisecond": 1, "second": 1000, "minute": 60_000, "hour": 3_600_000,
@@ -193,11 +193,12 @@ def run_stream_minhash_dedup(
     stream_docs: DataFrame, sink: ExactlyOnceParquetSink, checkpoint: str,
     text_col: str = "text", id_col: str = "doc_id", ts_col: str = "ts",
     watermark: str = "1 hour", n: int = 3, num_hashes: int = 32,
-    bands: int = 16, seed: int = 1, available_now: bool = True,
+    bands: int = 16, seed: int = 1,
 ):
-    """Run the full streaming near-dup gate: decisions -> per-doc verdict
-    (batch-local: all bands of a doc share its micro-batch) -> kept
-    ``(doc_id, ts)`` rows through the exactly-once sink."""
+    """Run the full streaming near-dup gate to the end of its available
+    input: decisions -> per-doc verdict (batch-local: all bands of a doc
+    share its micro-batch) -> kept ``(doc_id, ts)`` rows through the
+    exactly-once sink. Returns the drained query."""
     decisions = stream_minhash_decisions(
         stream_docs, text_col, id_col, ts_col, watermark,
         n, num_hashes, bands, seed,
@@ -211,15 +212,11 @@ def run_stream_minhash_dedup(
         )
         sink(kept, batch_id)
 
-    writer = (
-        decisions.writeStream.foreachBatch(emit_kept)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName("stream_minhash_dedup")
+    q = run_streaming_stats(
+        decisions, emit_kept, checkpoint, lambda df: df,
+        output_mode="append", query_name="stream_minhash_dedup",
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain_available_now(q, "streaming near-dup gate")
 
 
 def minhash_dedup_batch(

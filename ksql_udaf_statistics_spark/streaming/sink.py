@@ -15,9 +15,13 @@ Mechanism — **overwrite-by-batch-partition**:
   in later batches; ``read_current`` resolves to the latest batch per key
   (row_number over batch_id desc) — the parquet analogue of an Iceberg
   MERGE keyed by (window, source), SURVEY.md §7 substitution note;
-- a ``_ledger`` directory records committed batch ids + row counts +
-  partition lineage, giving per-partition lineage/metrics (north_rule)
-  and a cheap audit that replays happened.
+- a ``_ledger`` directory records each committed batch id, the rows that
+  commit wrote (observed on the write itself — one Spark action per
+  batch) and its wall time: the list of what the table serves, and a
+  cheap audit that replays happened.
+
+Input lineage is not the sink's job: the query checkpoint's ``offsets/``
+and ``commits/`` logs already record which input each batch id consumed.
 
 On a real cluster the same class swaps parquet for Iceberg by replacing
 ``_write_batch`` with a MERGE INTO — the foreachBatch topology, checkpoint
@@ -31,12 +35,23 @@ import os
 import time
 from typing import Callable, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+# upper bound on one bounded (availableNow) drain; a query still running
+# after it is stopped and the drain raises
+DRAIN_TIMEOUT_S = 360
 
-def _commit_ledger(ledger_dir: str, batch_id: int, lineage: list[dict]) -> None:
+
+def _observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row counter riding on its next action: the ledger's
+    row count costs no extra Spark job."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
+
+
+def _commit_ledger(ledger_dir: str, batch_id: int, rows: int) -> None:
     """Commit one batch's ledger entry atomically.
 
     One file per batch id, so a replay overwrites the same file
@@ -47,8 +62,7 @@ def _commit_ledger(ledger_dir: str, batch_id: int, lineage: list[dict]) -> None:
     os.makedirs(ledger_dir, exist_ok=True)
     entry = {
         "batch_id": batch_id,
-        "rows": sum(x["rows"] for x in lineage),
-        "partitions": lineage,
+        "rows": rows,
         "wall_time": time.time(),
     }
     path = os.path.join(ledger_dir, f"batch-{batch_id:012d}.json")
@@ -60,15 +74,10 @@ def _commit_ledger(ledger_dir: str, batch_id: int, lineage: list[dict]) -> None:
 class ExactlyOnceParquetSink:
     """foreachBatch sink with batch-id idempotence + key-upsert reads."""
 
-    def __init__(self, path: str, key_cols: Sequence[str],
-                 coalesce_output: Optional[int] = 1):
+    def __init__(self, path: str, key_cols: Sequence[str]):
         self.path = path
         self.key_cols = list(key_cols)
         self.ledger_dir = os.path.join(path, "_ledger")
-        # windowed-aggregate outputs are tiny (one row per (window, key));
-        # writing them as shuffle-partition-many files per batch just adds
-        # file-creation latency and listing pressure on the sink table
-        self.coalesce_output = coalesce_output
 
     # -- write side ---------------------------------------------------------
 
@@ -76,30 +85,19 @@ class ExactlyOnceParquetSink:
         self._write_batch(batch_df, batch_id)
 
     def _write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        # two actions follow (write + lineage); without a cache each action
-        # re-executes the whole micro-batch plan including the stateful
-        # aggregation — measured 2x addBatch cost at the bench
-        batch_df.persist()
-        try:
-            out = batch_df.withColumn("batch_id", F.lit(batch_id))
-            if self.coalesce_output:
-                out = out.coalesce(self.coalesce_output)
-            (
-                out.write.mode("overwrite")
-                .partitionBy("batch_id")
-                .option("partitionOverwriteMode", "dynamic")
-                .parquet(os.path.join(self.path, "data"))
-            )
-            # per-partition lineage: rows contributed by each partition
-            lineage = [
-                {"partition": int(r["p"]), "rows": int(r["n"])}
-                for r in batch_df.groupBy(F.spark_partition_id().alias("p"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            ]
-        finally:
-            batch_df.unpersist()
-        _commit_ledger(self.ledger_dir, batch_id, lineage)
+        # the write is the batch's only action, so nothing is cached.
+        # Windowed-aggregate outputs are tiny (one row per (window, key)):
+        # one file per batch, not one per shuffle partition, keeps file
+        # creation and listing off the sink table's hot path
+        out, obs = _observe_rows(batch_df)
+        (
+            out.withColumn("batch_id", F.lit(batch_id)).coalesce(1)
+            .write.mode("overwrite")
+            .partitionBy("batch_id")
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(os.path.join(self.path, "data"))
+        )
+        _commit_ledger(self.ledger_dir, batch_id, obs.get["rows"])
 
     # -- read side ----------------------------------------------------------
 
@@ -209,6 +207,8 @@ class MergeUpsertParquetSink(ExactlyOnceParquetSink):
 
     def _write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        # the plan reads the batch twice (broadcast key side + union):
+        # cache it so the micro-batch is computed once
         batch_df.persist()
         try:
             # one row per key within the batch (update-mode re-emissions of
@@ -239,22 +239,16 @@ class MergeUpsertParquetSink(ExactlyOnceParquetSink):
                 out = keep.unionByName(new.select(*cur.columns))
             else:
                 out = new
-            if self.coalesce_output:
-                out = out.coalesce(self.coalesce_output)
+            out, obs = _observe_rows(out.coalesce(1))
             out.write.mode("overwrite").parquet(self._snapshot_dir(batch_id))
-            lineage = [
-                {"partition": int(r["p"]), "rows": int(r["n"])}
-                for r in batch_df.groupBy(F.spark_partition_id().alias("p"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            ]
         finally:
             batch_df.unpersist()
         tmp = self._pointer_file() + ".tmp"
         with open(tmp, "w") as f:
             f.write(f"snapshot={batch_id:012d}")
         os.replace(tmp, self._pointer_file())
-        _commit_ledger(self.ledger_dir, batch_id, lineage)
+        # rows = the whole snapshot this commit wrote, not just the batch
+        _commit_ledger(self.ledger_dir, batch_id, obs.get["rows"])
 
     def read_all(self, spark: SparkSession) -> DataFrame:
         cur = self._current_snapshot()
@@ -304,43 +298,39 @@ class MergeUpsertParquetSink(ExactlyOnceParquetSink):
 
 def run_streaming_stats(
     source_df: DataFrame,
-    sink: ExactlyOnceParquetSink,
+    sink: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
     transform: Callable[[DataFrame], DataFrame],
     output_mode: str = "update",
-    available_now: bool = True,
-    trigger_interval: Optional[str] = None,
     query_name: str = "windowed_stats",
 ):
-    """Wire source → transform → exactly-once sink with a checkpoint.
+    """Start source → transform → ``foreachBatch(sink)`` with a checkpoint.
 
-    ``availableNow`` drains all currently-available input then stops —
-    used by tests and the bench for bounded runs; a kill/restart with the
-    same checkpoint resumes from the last committed offsets (north_rule
-    checkpoint-resume requirement).
+    The one ``foreachBatch`` wiring. ``availableNow`` drains all
+    currently-available input then stops; a restart with the same
+    checkpoint resumes from the last committed offsets (north_rule
+    checkpoint-resume requirement). Returns the running query without
+    blocking, so a caller can poll its progress; ``drain_available_now``
+    waits for it.
     """
-    agg = transform(source_df)
-    writer = (
-        agg.writeStream.outputMode(output_mode)
+    return (
+        transform(source_df).writeStream.outputMode(output_mode)
         .foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
         .queryName(query_name)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_interval:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
 
 
-def drain_available_now(query, timeout_sec: Optional[int], what: str):
+def drain_available_now(query, what: str):
     """Block until an ``availableNow`` query finishes draining, stopping
-    it and raising if ``timeout_sec`` elapses first. The one shared
-    timeout policy for every bounded streaming runner (drift, continuous
-    aggregates, gates) — keep drain-timeout tuning here, not in copies.
+    it and raising if ``DRAIN_TIMEOUT_S`` elapses first — a partial drain
+    must never be read as a finished table. The one drain policy for every
+    bounded streaming job (gates, continuous aggregates, drift, front-end
+    refreshes).
     """
-    if timeout_sec is not None:
-        if not query.awaitTermination(timeout_sec):
-            query.stop()
-            raise RuntimeError(f"{what} did not drain within {timeout_sec}s")
+    if not query.awaitTermination(DRAIN_TIMEOUT_S):
+        query.stop()
+        raise RuntimeError(f"{what} did not drain within {DRAIN_TIMEOUT_S}s")
     return query

@@ -42,8 +42,6 @@ The top-k read ranks the materialized counts with a per-source window
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -75,36 +73,18 @@ def run_continuous_aggregate(
     agg: DataFrame,
     sink: MergeUpsertParquetSink,
     checkpoint: str,
-    available_now: bool = True,
-    timeout_sec: Optional[int] = 360,
 ):
-    """Drive any update-mode streaming aggregate into the key-level MERGE
+    """Drain any update-mode streaming aggregate into the key-level MERGE
     sink — the generic CREATE TABLE ... EMIT CHANGES runner, delegating to
-    the one writeStream wiring in sink.py. The aggregate's grouping keys
+    the one foreachBatch wiring in sink.py. The aggregate's grouping keys
     must equal the sink's ``key_cols`` so every refreshed total replaces
-    its prior row."""
+    its prior row. E.g. ``run_continuous_aggregate(token_counts_agg(s),
+    sink, ckpt)`` keeps the per-(source, tok) count table."""
     q = run_streaming_stats(
         agg, sink, checkpoint, lambda df: df,
-        output_mode="update", available_now=available_now,
-        query_name="continuous_aggregate",
+        output_mode="update", query_name="continuous_aggregate",
     )
-    if available_now:
-        drain_available_now(q, timeout_sec, "continuous aggregate")
-    return q
-
-
-def run_stream_token_counts(
-    stream_docs: DataFrame,
-    sink: MergeUpsertParquetSink,
-    checkpoint: str,
-    available_now: bool = True,
-    timeout_sec: Optional[int] = 360,
-):
-    """Drive the count table: update-mode agg -> key-level MERGE sink."""
-    return run_continuous_aggregate(
-        token_counts_agg(stream_docs), sink, checkpoint,
-        available_now, timeout_sec,
-    )
+    return drain_available_now(q, "continuous aggregate")
 
 
 def length_buckets_agg(docs: DataFrame) -> DataFrame:
@@ -129,19 +109,6 @@ def length_buckets_agg(docs: DataFrame) -> DataFrame:
             F.sum(F.col("bucket_lo") * 2 - 1 - F.col("n_tok")).cast("long")
             .alias("padding_waste"),
         )
-    )
-
-
-def run_stream_length_buckets(
-    stream_docs: DataFrame,
-    sink: MergeUpsertParquetSink,
-    checkpoint: str,
-    available_now: bool = True,
-    timeout_sec: Optional[int] = 360,
-):
-    return run_continuous_aggregate(
-        length_buckets_agg(stream_docs), sink, checkpoint,
-        available_now, timeout_sec,
     )
 
 

@@ -506,6 +506,26 @@ def test_pull_query_limit(engine):
     assert all(r["total"] >= 2 for r in rows)
 
 
+def test_pull_query_before_any_insert_is_empty(engine):
+    """A pull query on a table whose stream has no rows yet returns an
+    empty result (ksqlDB semantics): the sink has committed no batch, so
+    there is no table to read, and that is not an error."""
+    engine.execute(
+        "CREATE STREAM input (val DOUBLE, weight DOUBLE) "
+        "WITH (KAFKA_TOPIC='input', VALUE_FORMAT='json');"
+    )
+    engine.execute(
+        "CREATE TABLE t AS SELECT 'singleton' AS id, "
+        "STDDEV_WEIGHTED(val, weight) AS sd "
+        "FROM input GROUP BY 'singleton' EMIT CHANGES;"
+    )
+    assert engine.execute("SELECT * FROM t;") == []
+    engine.execute("INSERT INTO input (val, weight) VALUES (1.0, 2.0);")
+    rows = engine.execute("SELECT * FROM t;")
+    assert [r["id"] for r in rows] == ["singleton"]
+    assert rows[0]["sd"] == pytest.approx(0.0, abs=1e-12)
+
+
 def test_csas_transform_chain(engine):
     """CREATE STREAM AS SELECT: a stateless projection/filter stream
     feeding a downstream CTAS aggregate; later upstream inserts propagate

@@ -77,6 +77,12 @@ def test_source_distribution_is_skewed(token_df):
     assert top / N_DOCS > 0.2  # heavy head to exercise salting
 
 
+def _rows_per_batch(sink, spark):
+    """{batch_id: rows} as found in an ExactlyOnceParquetSink's data."""
+    counts = sink.read_all(spark).groupBy("batch_id").count().collect()
+    return {r["batch_id"]: r["count"] for r in counts}
+
+
 def test_stream_matches_batch_oracle(spark, token_df, tmp_dir):
     """Tumbling-window stats: streaming (availableNow, foreachBatch EOS
     sink) == batch computation on the same data."""
@@ -104,9 +110,13 @@ def test_stream_matches_batch_oracle(spark, token_df, tmp_dir):
     got = sink.read_current(spark).collect()
     want = transform(spark.read.parquet(src_dir)).collect()
     assert_stats_equal(got, want, STAT_COLS, tol=1e-6)
-    # ledger recorded at least one committed batch with lineage
+    # every committed batch's ledger entry counts exactly the rows that
+    # batch wrote (a batch that wrote nothing has no partition directory)
     ledger = sink.committed_batches()
-    assert ledger and all("partitions" in e for e in ledger)
+    assert ledger
+    assert _rows_per_batch(sink, spark) == {
+        e["batch_id"]: e["rows"] for e in ledger if e["rows"]
+    }
 
 
 def test_replay_same_batch_is_idempotent(spark, token_df, tmp_dir):
@@ -466,8 +476,12 @@ def test_merge_upsert_sink_key_level(spark, tmp_dir):
     sink(b1, 1)
     got = [(r["k"], r["v"]) for r in sink.read_current(spark).collect()]
     assert set(got) == want and len(got) == 3  # exactly one row per key
-    # ledger has per-partition lineage for every commit
-    assert all("partitions" in e for e in sink.committed_batches())
+    # each commit's ledger rows = rows of the full snapshot it wrote
+    ledger = sink.committed_batches()
+    assert [(e["batch_id"], e["rows"]) for e in ledger] == [(0, 2), (1, 3)]
+    for e in ledger:
+        snap = spark.read.parquet(sink._snapshot_dir(e["batch_id"]))
+        assert snap.count() == e["rows"]
 
 
 def test_merge_upsert_sink_streaming_end_to_end(spark, token_df, tmp_dir):
@@ -709,3 +723,63 @@ def test_torn_ledger_write_is_never_committed(spark, tmp_dir, monkeypatch, sink_
     assert {(r["k"], r["v"]) for r in sink.read_current(spark).collect()} == {
         (0, 2), (1, 2), (2, 2)
     }
+
+
+def test_exactly_once_sink_runs_one_spark_job_per_batch(spark, tmp_dir):
+    """The sink's write is the batch's only action: the ledger's row count
+    rides on it, so committing a batch launches exactly one Spark job."""
+    sink = ExactlyOnceParquetSink(os.path.join(tmp_dir, "t"), ["k"])
+    batch = spark.range(50).select((F.col("id") % 7).alias("k"), F.col("id").alias("v"))
+    sc = spark.sparkContext
+    sc.setJobGroup("sink_one_action", "exactly-once sink write")
+    try:
+        sink(batch, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job records reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("sink_one_action")) == 1
+    assert [e["rows"] for e in sink.committed_batches()] == [50]
+
+
+@pytest.mark.parametrize("sink_cls", ["ExactlyOnceParquetSink", "MergeUpsertParquetSink"])
+def test_ledger_rows_are_rows_written(spark, tmp_dir, sink_cls):
+    """Each ledger entry's ``rows`` is what its commit wrote, an empty
+    batch included: the batch's rows for the append sink, the whole
+    merged snapshot for the MERGE sink."""
+    from ksql_udaf_statistics_spark.streaming import sink as sink_mod
+
+    sink = getattr(sink_mod, sink_cls)(os.path.join(tmp_dir, "t"), ["k"])
+    schema = "k long, v long"
+    sink(spark.createDataFrame([], schema), 0)
+    sink(spark.createDataFrame([(1, 1), (2, 1), (3, 1)], schema), 1)
+    sink(spark.createDataFrame([(3, 2), (4, 2)], schema), 2)
+    rows = {e["batch_id"]: e["rows"] for e in sink.committed_batches()}
+    assert set(sink.committed_batches()[0]) == {"batch_id", "rows", "wall_time"}
+    if sink_cls == "ExactlyOnceParquetSink":
+        assert rows == {0: 0, 1: 3, 2: 2}
+        assert _rows_per_batch(sink, spark) == {1: 3, 2: 2}
+    else:
+        assert rows == {0: 0, 1: 3, 2: 4}
+        for b, n in rows.items():
+            assert spark.read.parquet(sink._snapshot_dir(b)).count() == n
+
+
+def test_drain_stops_and_raises_after_timeout(spark, tmp_dir, monkeypatch):
+    """A bounded drain that outlives the drain timeout is stopped and
+    raises, so no caller reads a partially drained table."""
+    import time
+
+    from ksql_udaf_statistics_spark.streaming import sink as sink_mod
+
+    src = os.path.join(tmp_dir, "src")
+    spark.range(3).write.parquet(src)
+    stream = spark.readStream.schema("id long").parquet(src)
+    q = run_streaming_stats(
+        stream, lambda df, batch_id: time.sleep(5), os.path.join(tmp_dir, "ckpt"),
+        lambda df: df, output_mode="append",
+    )
+    monkeypatch.setattr(sink_mod, "DRAIN_TIMEOUT_S", 0.5)
+    with pytest.raises(RuntimeError, match="slow job did not drain within 0.5s"):
+        sink_mod.drain_available_now(q, "slow job")
+    assert not q.isActive

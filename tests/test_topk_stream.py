@@ -12,8 +12,10 @@ import shutil
 
 from ksql_udaf_statistics_spark.streaming.sink import MergeUpsertParquetSink
 from ksql_udaf_statistics_spark.streaming.topk import (
+    length_buckets_agg,
     read_topk,
-    run_stream_token_counts,
+    run_continuous_aggregate,
+    token_counts_agg,
 )
 
 SCHEMA = "text string, source string"
@@ -38,7 +40,9 @@ def _run(spark, tmp_dir, src, tag=""):
     sink = MergeUpsertParquetSink(
         os.path.join(tmp_dir, f"counts{tag}"), key_cols=["source", "tok"]
     )
-    run_stream_token_counts(stream, sink, os.path.join(tmp_dir, f"ckpt{tag}"))
+    run_continuous_aggregate(
+        token_counts_agg(stream), sink, os.path.join(tmp_dir, f"ckpt{tag}")
+    )
     return sink
 
 
@@ -68,10 +72,6 @@ def test_counts_accumulate_across_batches(spark, tmp_dir):
 
 
 def test_length_buckets_accumulate_across_batches(spark, tmp_dir):
-    from ksql_udaf_statistics_spark.streaming.topk import (
-        run_stream_length_buckets,
-    )
-
     # "aa bb" (2 tokens -> bucket 2) in both batches; "a b c d e" (5 ->
     # bucket 4) once: cross-batch totals must merge per (source, bucket)
     b1 = [("aa bb", "src1"), ("a b c d e", "src1")]
@@ -86,7 +86,9 @@ def test_length_buckets_accumulate_across_batches(spark, tmp_dir):
     sink = MergeUpsertParquetSink(
         os.path.join(tmp_dir, "hist"), key_cols=["source", "bucket_lo"]
     )
-    run_stream_length_buckets(stream, sink, os.path.join(tmp_dir, "ckptlb"))
+    run_continuous_aggregate(
+        length_buckets_agg(stream), sink, os.path.join(tmp_dir, "ckptlb")
+    )
     rows = {
         (r["source"], r["bucket_lo"]): (r["n_docs"], r["total_tokens"],
                                         r["padding_waste"])
