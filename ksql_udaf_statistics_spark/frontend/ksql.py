@@ -22,7 +22,10 @@ unchanged:
   exactly-once foreachBatch sink; ``WINDOWSTART`` is supported in the
   select list (README.md:166).
 - ``INSERT INTO name (cols) VALUES (...);`` — multiple statements per
-  call, as the IT sends them (AllUdafIT.java:623-630).
+  call, as the IT sends them (AllUdafIT.java:623-630). Like the record
+  batch a ksqlDB producer sends for such a request, the records of one
+  call land in one file per stream, published atomically; string
+  literals escape ``'`` as ``''``.
 - pull queries ``SELECT cols|* FROM table [WHERE pred] [LIMIT n]``
   (AllUdafIT.java:655) against the materialized state, NaN returned as
   None per the JSON convention.
@@ -226,7 +229,7 @@ class KsqlParseError(ValueError):
 
 _TOKEN_RE = re.compile(
     r"\s*(?:(?P<num>\d+\.\d*(?:[eE][+-]?\d+)?|\.\d+(?:[eE][+-]?\d+)?|\d+(?:[eE][+-]?\d+)?)"
-    r"|(?P<str>'[^']*')"
+    r"|(?P<str>'(?:[^']|'')*')"
     r"|(?P<ident>[A-Za-z_]\w*(?:\.\w+)?)"
     r"|(?P<op><>|!=|<=|>=|[-+*/()<>=,]))"
 )
@@ -254,6 +257,11 @@ _SCALAR_FUNCS: dict = {
     "GREATEST": (-1, lambda c: F.greatest(*c)),
     "LEAST": (-1, lambda c: F.least(*c)),
 }
+
+
+def _unquote(tok: str) -> str:
+    """A quoted string literal's value: ksqlDB escapes ``'`` by doubling it."""
+    return tok[1:-1].replace("''", "'")
 
 
 def _tokenize(s: str) -> list[str]:
@@ -316,7 +324,7 @@ class _ExprParser:
                 raise KsqlParseError("expected ')'")
             return e
         if t.startswith("'"):
-            return F.lit(t[1:-1])
+            return F.lit(_unquote(t))
         if re.fullmatch(r"\d.*|\.\d.*", t):
             return F.lit(float(t) if ("." in t or "e" in t.lower()) else int(t))
         if t.upper() in ("TRUE", "FALSE"):
@@ -467,7 +475,7 @@ class _ExprParser:
             while True:
                 t = self._next()
                 if t.startswith("'"):
-                    vals.append(t[1:-1])
+                    vals.append(_unquote(t))
                 elif re.fullmatch(r"\d+\.?\d*|\.\d+", t):
                     vals.append(float(t) if "." in t else int(t))
                 else:
@@ -486,7 +494,7 @@ class _ExprParser:
             t = self._next()
             if not t.startswith("'"):
                 raise KsqlParseError("LIKE takes a string-literal pattern")
-            col = left.like(t[1:-1])
+            col = left.like(_unquote(t))
             return ~col if neg else col
         if nxt == "BETWEEN":
             # bounds parse as arithmetic expr() (never predicates), so the
@@ -547,6 +555,13 @@ def _duration(n: str, unit: str) -> str:
     return f"{n} {u}"
 
 
+# one INSERT ... VALUES record: target stream, column list, value list
+_INSERT_VALUES_RE = re.compile(
+    r"INSERT\s+INTO\s+(\w+)\s*\((.*?)\)\s*VALUES\s*\((.*)\)\s*$",
+    re.IGNORECASE | re.DOTALL,
+)
+
+
 class KsqlEngine:
     """Minimal ksqlDB-statement executor over the PySpark engine."""
 
@@ -566,11 +581,48 @@ class KsqlEngine:
 
     def execute(self, sql: str):
         """Execute one or more ';'-separated ksqlDB statements; returns the
-        last statement's result (rows for pull queries / SHOW, else None)."""
-        result = None
-        for stmt in self._split(sql):
-            result = self._execute_one(stmt)
+        last statement's result (rows for pull queries / SHOW, else None).
+
+        Consecutive ``INSERT ... VALUES`` records are buffered per target
+        stream and published as one file per stream — the record batch a
+        ksqlDB producer sends for a multi-statement request. The buffers
+        are published before any other statement runs and when the call
+        ends, returning or raising, so every statement sees what the
+        INSERTs before it wrote, and every INSERT is on disk when its
+        ``execute`` returns."""
+        result, pending = None, {}
+        try:
+            for stmt in self._split(sql):
+                m = _INSERT_VALUES_RE.match(stmt)
+                if m:
+                    name, line = self._insert(m)
+                    pending.setdefault(name, []).append(line)
+                    result = None
+                else:
+                    self._publish(pending)
+                    result = self._execute_one(stmt)
+        finally:
+            self._publish(pending)
         return result
+
+    def _publish(self, pending: dict[str, list[str]]) -> None:
+        """Write each stream's buffered records as one file, in statement
+        order. The file is written under a hidden name, which the file
+        source skips, and ``os.replace``d into place: a reader lists the
+        whole file or nothing, never a torn one."""
+        while pending:
+            name, lines = pending.popitem()
+            spec = self.streams[name]
+            fname = f"{uuid.uuid4().hex}.{'csv' if spec.fmt == 'csv' else 'json'}"
+            tmp = os.path.join(spec.path, f".{fname}.tmp")
+            try:
+                with open(tmp, "w") as f:
+                    f.write("".join(lines))
+                os.replace(tmp, os.path.join(spec.path, fname))
+            except BaseException:
+                if os.path.exists(tmp):
+                    os.remove(tmp)
+                raise
 
     # -- statement dispatch --------------------------------------------------
 
@@ -601,7 +653,7 @@ class KsqlEngine:
         if head.startswith("CREATE TABLE"):
             return self._create_table(stmt)
         if head.startswith("INSERT INTO"):
-            return self._insert(stmt)
+            return self._insert_select(stmt)
         if head.startswith("SELECT"):
             return self._pull_query(stmt)
         if head.startswith("SHOW FUNCTIONS"):
@@ -1185,17 +1237,12 @@ class KsqlEngine:
 
     # -- INSERT INTO ---------------------------------------------------------
 
-    def _insert(self, stmt: str) -> None:
-        m = re.match(
-            r"INSERT\s+INTO\s+(\w+)\s*\((.*?)\)\s*VALUES\s*\((.*)\)\s*$",
-            stmt, re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
-            ms = re.match(r"INSERT\s+INTO\s+(\w+)\s+(SELECT\s+.*)$",
-                          stmt, re.IGNORECASE | re.DOTALL)
-            if ms:
-                return self._insert_select(ms.group(1).lower(), ms.group(2))
-            raise KsqlParseError(f"cannot parse INSERT: {stmt[:80]!r}")
+    def _insert(self, m: re.Match) -> tuple[str, str]:
+        """One ``INSERT ... VALUES`` record (``m`` matched
+        ``_INSERT_VALUES_RE``), validated and encoded in the stream's
+        wire format. Returns ``(stream name, encoded line)``; ``execute``
+        buffers the line and publishes it with the call's other records
+        for that stream."""
         name = m.group(1).lower()
         spec = self.streams.get(name)
         if spec is None:
@@ -1235,20 +1282,15 @@ class KsqlEngine:
                     ordered.append(str(v))
             buf = _io.StringIO()
             _csv.writer(buf, lineterminator="").writerow(ordered)
-            fname = os.path.join(spec.path, f"{uuid.uuid4().hex}.csv")
-            with open(fname, "w") as f:
-                f.write(buf.getvalue() + "\n")
-            return
+            return name, buf.getvalue() + "\n"
         # value_format='json': one JSON document per record, decoded on
         # read against the declared schema — NaN is not valid JSON, so it
         # rides as null exactly like ksqlDB's wire format
-        fname = os.path.join(spec.path, f"{uuid.uuid4().hex}.json")
-        with open(fname, "w") as f:
-            f.write(json.dumps(
-                {k: (None if isinstance(v, float) and math.isnan(v) else v)
-                 for k, v in row.items()}) + "\n")
+        return name, json.dumps(
+            {k: (None if isinstance(v, float) and math.isnan(v) else v)
+             for k, v in row.items()}) + "\n"
 
-    def _insert_select(self, tgt: str, sel: str) -> None:
+    def _insert_select(self, stmt: str) -> None:
         """``INSERT INTO tgt SELECT ... FROM src [WHERE ...] [EMIT
         CHANGES]`` — ksqlDB's stream-MERGE persistent query: another
         stream's (transformed) rows flow into ``tgt`` alongside its own.
@@ -1256,6 +1298,11 @@ class KsqlEngine:
         read time (``_stream_df``), refreshed with tgt's other
         upstreams, so every reader of tgt sees both row sources
         exactly-once."""
+        m = re.match(r"INSERT\s+INTO\s+(\w+)\s+(SELECT\s+.*)$",
+                     stmt, re.IGNORECASE | re.DOTALL)
+        if not m:
+            raise KsqlParseError(f"cannot parse INSERT: {stmt[:80]!r}")
+        tgt, sel = m.group(1).lower(), m.group(2)
         if tgt not in self.streams:
             raise KsqlParseError(f"unknown stream {tgt!r}")
         if tgt in self.derived:
@@ -1350,7 +1397,7 @@ class KsqlEngine:
     def _literal(tok: str) -> Any:
         t = tok.strip()
         if t.startswith("'") and t.endswith("'"):
-            return t[1:-1]
+            return _unquote(t)
         if t.upper() in ("TRUE", "FALSE"):
             return t.upper() == "TRUE"
         if t.upper() == "NULL":
@@ -1825,7 +1872,7 @@ class KsqlEngine:
     def _scalar_expr(self, expr: str) -> Column:
         e = expr.strip()
         if e.startswith("'") and e.endswith("'"):
-            return F.lit(e[1:-1])
+            return F.lit(_unquote(e))
         if re.fullmatch(r"\d+\.?\d*|\.\d+", e):
             # bare numeric literal (e.g. a constant UDAF weight arg) —
             # must not fall into the column branch (\w+ matches digits)

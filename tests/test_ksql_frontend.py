@@ -3,7 +3,9 @@
 numbers back. Golden values come from the reference's unit tests
 (SkewnessUdafTest.java / WeightedStdDevUdafTest.java) and from DuckDB."""
 
+import json
 import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -1223,3 +1225,135 @@ def test_ksql_e2e_query_leaves_no_work_dir(spark, sf_dir):
     out = QUERIES["ksql_e2e_session_stats"](spark, sf_dir)
     assert out.count() > 0
     assert set(glob.glob(pattern)) - before == set()
+
+
+def _stream_files(engine, name):
+    """The stream's record files a file-source listing sees (Spark skips
+    names starting with '.' or '_')."""
+    return sorted(f for f in os.listdir(engine.streams[name].path)
+                  if not f.startswith((".", "_")))
+
+
+def _count_table(engine, stream, fmt="json"):
+    engine.execute(
+        f"CREATE STREAM {stream} (k VARCHAR, val DOUBLE) "
+        f"WITH (kafka_topic='{stream}', value_format='{fmt}');"
+        f"CREATE TABLE {stream}_tot AS SELECT k AS k, COUNT(*) AS n, "
+        f"SUM(val) AS s FROM {stream} GROUP BY k EMIT CHANGES;"
+    )
+
+
+def _inserts(stream, keys):
+    return "".join(
+        f"INSERT INTO {stream} (k, val) VALUES ('{k}', {float(i)});"
+        for i, k in enumerate(keys)
+    )
+
+
+def test_one_execute_publishes_one_file_per_stream(engine):
+    """The INSERT ... VALUES records of one execute() land in one file per
+    target stream, in statement order, and a pull sees every record."""
+    _count_table(engine, "ba")
+    _count_table(engine, "bb")
+    engine.execute(_inserts("ba", [f"k{i % 7}" for i in range(50)]))
+    assert len(_stream_files(engine, "ba")) == 1
+    rows = engine.execute("SELECT * FROM ba_tot;")
+    assert sum(r["n"] for r in rows) == 50
+    assert sum(r["s"] for r in rows) == float(sum(range(50)))
+
+    engine.execute(_inserts("ba", ["x", "y"]) + _inserts("bb", ["x", "y", "z"])
+                   + _inserts("ba", ["z"]))
+    assert len(_stream_files(engine, "ba")) == 2
+    [fname] = _stream_files(engine, "bb")
+    with open(os.path.join(engine.streams["bb"].path, fname)) as f:
+        assert [json.loads(line)["k"] for line in f] == ["x", "y", "z"]
+    assert sum(r["n"] for r in engine.execute("SELECT * FROM ba_tot;")) == 53
+    assert {r["k"]: r["n"] for r in engine.execute("SELECT * FROM bb_tot;")} \
+        == {"x": 1, "y": 1, "z": 1}
+
+
+def test_statement_between_inserts_sees_earlier_inserts(engine, monkeypatch):
+    """Any other statement publishes the buffered records before it runs:
+    a pull between two INSERTs of one call sees the first one."""
+    _count_table(engine, "bc")
+    seen = []
+    pull = engine._pull_query
+    monkeypatch.setattr(engine, "_pull_query",
+                        lambda stmt: seen.append(pull(stmt)) or seen[-1])
+    assert engine.execute(
+        _inserts("bc", ["a"]) + "SELECT * FROM bc_tot;" + _inserts("bc", ["b"])
+    ) is None
+    assert [r["k"] for r in seen[0]] == ["a"]
+    assert len(_stream_files(engine, "bc")) == 2
+    assert sorted(r["k"] for r in engine.execute("SELECT * FROM bc_tot;")) == ["a", "b"]
+
+
+def test_failing_statement_still_publishes_earlier_inserts(engine):
+    _count_table(engine, "bd")
+    with pytest.raises(Exception, match="arity mismatch"):
+        engine.execute(
+            _inserts("bd", ["a", "b"])
+            + "INSERT INTO bd (k, val) VALUES ('c');"
+            + _inserts("bd", ["d"])
+        )
+    assert len(_stream_files(engine, "bd")) == 1
+    assert sorted(r["k"] for r in engine.execute("SELECT * FROM bd_tot;")) == ["a", "b"]
+
+
+def test_delimited_stream_batches_inserts(engine):
+    _count_table(engine, "be", fmt="delimited")
+    engine.execute(_inserts("be", ["a", "b", "a"]))
+    [fname] = _stream_files(engine, "be")
+    assert fname.endswith(".csv")
+    assert {r["k"]: r["n"] for r in engine.execute("SELECT * FROM be_tot;")} \
+        == {"a": 2, "b": 1}
+
+
+def test_failed_publish_leaves_no_stream_file(engine, monkeypatch):
+    """The records of one execute() are published atomically: when the
+    publish fails, the call raises, no visible (or temporary) file is
+    left, and no reader sees any of its records."""
+    from ksql_udaf_statistics_spark.frontend import ksql as ksql_mod
+
+    _count_table(engine, "bt")
+    engine.execute(_inserts("bt", ["a"]))
+
+    def fail_replace(src, dst):
+        raise OSError("publish failed")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(ksql_mod.os, "replace", fail_replace)
+        with pytest.raises(OSError, match="publish failed"):
+            engine.execute(_inserts("bt", ["b", "c"]))
+    assert len(os.listdir(engine.streams["bt"].path)) == 1
+    assert [r["k"] for r in engine.execute("SELECT * FROM bt_tot;")] == ["a"]
+
+
+def test_doubled_quote_escapes_a_quote(engine):
+    """ksqlDB escapes ' inside a string literal by doubling it, in INSERT
+    values and in predicates alike."""
+    assert KsqlEngine._literal("'it''s'") == "it's"
+    _count_table(engine, "eq")
+    engine.execute(_inserts("eq", ["its"]) + "INSERT INTO eq (k, val) VALUES ('it''s', 2.5);")
+    assert engine.execute("SELECT k, s FROM eq_tot WHERE k = 'it''s';") \
+        == [{"k": "it's", "s": 2.5}]
+
+
+def test_batched_insert_refresh_runs_one_spark_job(engine, monkeypatch):
+    """A refresh after a 50-INSERT execute() reads one stream file: the
+    micro-batch is the query's only Spark job, with no parallel
+    file-listing job (Spark lists more than 32 paths with a job)."""
+    from ksql_udaf_statistics_spark.frontend import ksql as ksql_mod
+
+    _count_table(engine, "bj")
+    queries = []
+    drain = ksql_mod.drain_available_now
+    monkeypatch.setattr(ksql_mod, "drain_available_now",
+                        lambda q, what: (queries.append(q), drain(q, what))[1])
+    engine.execute(_inserts("bj", [f"k{i % 7}" for i in range(50)]))
+    assert sum(r["n"] for r in engine.execute("SELECT * FROM bj_tot;")) == 50
+    [q] = queries
+    sc = engine.spark.sparkContext
+    # job records reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(str(q.runId))) == 1
