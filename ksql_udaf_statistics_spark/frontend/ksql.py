@@ -17,10 +17,12 @@ unchanged:
 - ``CREATE TABLE name [WITH (...)] AS SELECT ... FROM stream
   [WINDOW TUMBLING (SIZE n UNIT) | HOPPING (SIZE n UNIT, ADVANCE BY m
   UNIT) | SESSION (n UNIT)] GROUP BY key EMIT CHANGES``
-  (AllUdafIT.java:593-600, README.md:146-172) — a continuously
-  maintainable materialized table backed by Structured Streaming with the
-  exactly-once foreachBatch sink; ``WINDOWSTART`` is supported in the
-  select list (README.md:166).
+  (AllUdafIT.java:593-600, README.md:146-172) — a materialized table
+  maintained by one persistent Structured Streaming query (ksqlDB's
+  persistent CTAS query), started with the table and writing through the
+  exactly-once foreachBatch sink; a pull query waits for it to catch up
+  with what was published before the pull. ``WINDOWSTART`` is supported
+  in the select list (README.md:166).
 - ``INSERT INTO name (cols) VALUES (...);`` — multiple statements per
   call, as the IT sends them (AllUdafIT.java:623-630). Like the record
   batch a ksqlDB producer sends for such a request, the records of one
@@ -82,6 +84,7 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Any, Optional
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -98,9 +101,16 @@ from pyspark.sql.types import (
 from ..stats import spark_agg as SA
 from ..streaming.sink import (
     ExactlyOnceParquetSink,
+    await_caught_up,
     drain_available_now,
     run_streaming_stats,
 )
+
+# trigger interval of the persistent queries that maintain CTAS tables
+# and CSAS streams. Each trigger lists the query's source directories; a
+# pull waits at most about two intervals past the batch holding its
+# records (see ``await_caught_up``).
+TRIGGER_INTERVAL = "100 milliseconds"
 
 _TYPES = {
     "DOUBLE": DoubleType(),
@@ -575,9 +585,25 @@ class KsqlEngine:
         # the object survives, its maintenance query stops — pull queries
         # serve the last materialized state (ksqlDB TERMINATE semantics)
         self.terminated: set[str] = set()
+        # query id -> the Spark query maintaining the object: the running
+        # persistent query, or the last drain of a stream-table-join table
+        self.queries: dict[str, Any] = {}
+        # Spark refuses two active queries with one name in a session, and
+        # several engines may share a session
+        self._tag = uuid.uuid4().hex[:8]
+        # derived streams a read has caught up at least once: only their
+        # rows can have been served (see the feeder cascade in _drop)
+        self._served: set[str] = set()
         os.makedirs(workdir, exist_ok=True)
 
     # -- public API ----------------------------------------------------------
+
+    def close(self) -> None:
+        """Stop every query the engine started. Call it before deleting
+        the work directory, or the queries keep polling deleted paths."""
+        for q in self.queries.values():
+            q.stop()
+        self.queries.clear()
 
     def execute(self, sql: str):
         """Execute one or more ';'-separated ksqlDB statements; returns the
@@ -709,27 +735,39 @@ class KsqlEngine:
             raise KsqlParseError(f"cannot parse TERMINATE: {stmt[:60]!r}")
         qid = m.group(1).lower()
         if qid == "all":
-            self.terminated |= {f"ctas_{n}" for n in self.tables}
-            self.terminated |= {f"csas_{n}" for n in self.derived}
-            return
-        known = (
-            qid.startswith("ctas_") and qid[5:] in self.tables
-        ) or (qid.startswith("csas_") and qid[5:] in self.derived)
-        if not known:
-            raise KsqlParseError(
-                f"unknown query id {qid.upper()!r} — SHOW QUERIES lists "
-                f"the running ids"
-            )
-        if qid in self.terminated:
-            raise KsqlParseError(f"query {qid.upper()!r} is already terminated")
-        self.terminated.add(qid)
+            qids = [f"ctas_{n}" for n in self.tables]
+            qids += [f"csas_{n}" for n in self.derived]
+        else:
+            known = (
+                qid.startswith("ctas_") and qid[5:] in self.tables
+            ) or (qid.startswith("csas_") and qid[5:] in self.derived)
+            if not known:
+                raise KsqlParseError(
+                    f"unknown query id {qid.upper()!r} — SHOW QUERIES lists "
+                    f"the running ids"
+                )
+            if qid in self.terminated:
+                raise KsqlParseError(f"query {qid.upper()!r} is already terminated")
+            qids = [qid]
+        # the frozen state is everything published before the TERMINATE:
+        # catch every query up (upstreams first) before stopping any
+        for q in qids:
+            if q.startswith("ctas_"):
+                self.refresh(q[5:])
+            else:
+                self.refresh_stream(q[5:])
+        for q in qids:
+            if q in self.queries:
+                self.queries[q].stop()
+            self.terminated.add(q)
 
     def _print_topic(self, stmt: str) -> list[str]:
         """``PRINT <topic> [FROM BEGINNING] [LIMIT n]`` — tail a topic's
         records as wire-format JSON strings (rowtime included). The
         file-backed engine has no live tail, so records are always served
-        from the beginning of the directory in event-time order — the
-        availableNow analogue of ksqlDB's console tail."""
+        from the beginning of the directory in event-time order, after the
+        stream's upstream queries have caught up — a bounded snapshot of
+        ksqlDB's console tail."""
         m = re.match(
             r"PRINT\s+'?([\w.-]+)'?(\s+FROM\s+BEGINNING)?"
             r"(?:\s+LIMIT\s+(\d+))?\s*$",
@@ -811,20 +849,24 @@ class KsqlEngine:
         return df._jdf.queryExecution().executedPlan().toString()
 
     def _describe(self, stmt: str) -> list[dict]:
-        m = re.match(r"DESCRIBE\s+(?:EXTENDED\s+)?(\w+)\s*$", stmt,
+        """``DESCRIBE [EXTENDED] <stream|table>`` — one row per column.
+        EXTENDED appends, for an object a query maintains (a CTAS table
+        or a CSAS stream), that query's runtime row (``_runtime``)."""
+        m = re.match(r"DESCRIBE\s+(EXTENDED\s+)?(\w+)\s*$", stmt,
                      re.IGNORECASE)
         if not m:
             raise KsqlParseError(f"cannot parse DESCRIBE: {stmt[:60]!r}")
-        name = m.group(1).lower()
+        name = m.group(2).lower()
         if name in self.streams:
             spec = self.streams[name]
-            return [
+            rows = [
                 {"column": f.name, "type": f.dataType.simpleString().upper(),
                  "key": f.name == spec.key_col,
                  "timestamp": f.name == spec.ts_col}
                 for f in spec.schema.fields
             ]
-        if name in self.tables:
+            qid = f"csas_{name}" if name in self.derived else None
+        elif name in self.tables:
             tspec = self.tables[name]
             self.refresh(name)
             df = self._read_table(tspec)
@@ -832,12 +874,45 @@ class KsqlEngine:
                 [] if isinstance(tspec, TableViewSpec)
                 else tspec.sink.key_cols
             )
-            return [
+            rows = [
                 {"column": f.name, "type": f.dataType.simpleString().upper(),
                  "key": f.name in keys, "timestamp": False}
                 for f in df.schema.fields
             ]
-        raise KsqlParseError(f"unknown stream or table {name!r}")
+            qid = None if isinstance(tspec, TableViewSpec) else f"ctas_{name}"
+        else:
+            raise KsqlParseError(f"unknown stream or table {name!r}")
+        if m.group(1) and qid is not None:
+            rows.append(self._runtime(qid))
+        return rows
+
+    def _runtime(self, qid: str) -> dict:
+        """The runtime section of ksqlDB's DESCRIBE EXTENDED: the query's
+        id, its state — RUNNING, TERMINATED, STOPPED (it failed or was
+        stopped from outside; the next read restarts it), DRAIN (a
+        stream-table-join table, drained per read) or BATCH (a table
+        recomputed per read) — and its last progress report."""
+        q = self.queries.get(qid)
+        spec = self.tables.get(qid[5:]) if qid.startswith("ctas_") else None
+        if qid in self.terminated:
+            state = "TERMINATED"
+        elif spec is not None and self._needs_batch_materialization(spec):
+            state = "BATCH"
+        elif spec is not None and spec.join is not None:
+            state = "DRAIN"
+        else:
+            state = "RUNNING" if q is not None and q.isActive else "STOPPED"
+        p = q.lastProgress if q is not None else None
+        return {
+            "query": qid[:4].upper() + qid[4:],
+            "query_id": q.id if q is not None else None,
+            "state": state,
+            "batch_id": p.batchId if p else None,
+            "num_input_rows": p.numInputRows if p else None,
+            "processed_rows_per_second": p.processedRowsPerSecond if p else None,
+            "state_rows_total":
+                sum(o.numRowsTotal for o in p.stateOperators) if p else None,
+        }
 
     def _drop(self, stmt: str) -> None:
         # DROP STREAM|TABLE [IF EXISTS] name [DELETE TOPIC]
@@ -883,20 +958,18 @@ class KsqlEngine:
                         f"{tbl_readers} read from it — drop them first"
                     )
                 for d in deps:
+                    # materialized = a read has served the feeder's rows
+                    materialized = d in self._served
+                    if materialized and f"csas_{d}" not in self.terminated:
+                        # what it keeps is everything published before
+                        # the DROP
+                        self.refresh_stream(d)
+                    self._stop(f"csas_{d}")
                     dcsas = self.derived.pop(d, None)
                     self.terminated.discard(f"csas_{d}")
+                    self._served.discard(d)
                     if dcsas is not None:
                         shutil.rmtree(dcsas.checkpoint, ignore_errors=True)
-                    dspec = self.streams.get(d)
-                    # materialized = the directory has CONTENT (part files
-                    # / _spark_metadata from a drain) — a bare isdir test
-                    # is always true because CSAS pre-creates the dir
-                    try:
-                        materialized = dspec is not None and any(
-                            os.scandir(dspec.path)
-                        )
-                    except FileNotFoundError:
-                        materialized = False
                     if materialized:
                         # ksqlDB parity: rows the feeder already produced
                         # into its target's topic PERSIST after the
@@ -907,17 +980,21 @@ class KsqlEngine:
                         # entry above is removed, and the refresh paths
                         # skip feeders with no derived entry).
                         continue
-                    # never materialized: nothing merged, remove entirely;
-                    # targets that lose a feeder change their source set,
-                    # so their downstream checkpoints must rebase
-                    self.streams.pop(d, None)
+                    # never served: remove entirely, with whatever its
+                    # query wrote; targets that lose a feeder change their
+                    # source set, so their downstream state must rebase
+                    dspec = self.streams.pop(d, None)
+                    if dspec is not None:
+                        shutil.rmtree(dspec.path, ignore_errors=True)
                     for tname, sp in self.streams.items():
                         if d in sp.feeders:
                             sp.feeders.remove(d)
                             self._rebase_downstream(tname)
+            self._stop(f"csas_{name}")
             spec = self.streams.pop(name, None)
             csas = self.derived.pop(name, None)
             self.terminated.discard(f"csas_{name}")
+            self._served.discard(name)
             if spec is None:
                 if "IF EXISTS" in stmt.upper():
                     return
@@ -926,6 +1003,8 @@ class KsqlEngine:
             # engine-managed too — remove them with their target or they
             # linger as orphaned registrations
             for f in list(spec.feeders):
+                self._stop(f"csas_{f}")
+                self._served.discard(f)
                 fcsas = self.derived.pop(f, None)
                 fspec = self.streams.pop(f, None)
                 # a TERMINATEd marker must not survive to freeze a
@@ -947,6 +1026,7 @@ class KsqlEngine:
             elif delete_data:
                 shutil.rmtree(spec.path, ignore_errors=True)
         else:
+            self._stop(f"ctas_{name}")
             tspec = self.tables.pop(name, None)
             self.terminated.discard(f"ctas_{name}")
             if tspec is None:
@@ -1008,7 +1088,7 @@ class KsqlEngine:
 
     # -- CREATE STREAM AS (CSAS) ---------------------------------------------
 
-    def _create_stream_as(self, stmt: str) -> None:
+    def _create_stream_as(self, stmt: str, start: bool = True) -> None:
         """``CREATE STREAM name AS SELECT items FROM src [alias]
         [[LEFT] JOIN other [alias] WITHIN n UNIT ON a.k = b.k]
         [WHERE pred] [EMIT CHANGES]`` — ksqlDB's continuous stateless
@@ -1018,7 +1098,9 @@ class KsqlEngine:
         bound as both the time constraint and the state-eviction
         watermark. The result materializes append-only (parquet +
         file-sink manifest = exactly-once for downstream readers) and
-        registers as a stream usable by further CSAS/CTAS/joins."""
+        registers as a stream usable by further CSAS/CTAS/joins. Its
+        persistent query starts here unless ``start`` is False (the
+        caller starts it once the stream is validated)."""
         m = re.match(
             r"CREATE\s+STREAM\s+(\w+)\s*(?:WITH\s*\((.*?)\)\s*)?AS\s+(SELECT\s+.*)$",
             stmt, re.IGNORECASE | re.DOTALL,
@@ -1107,6 +1189,13 @@ class KsqlEngine:
             name, proto.schema, path, ts_col, fmt="parquet",
             key_col=partition_by, topic=topic,
         )
+        if start:
+            try:
+                self._start(f"csas_{name}")
+            except Exception:
+                # a stream whose query cannot start is not created
+                del self.derived[name], self.streams[name]
+                raise
 
     def _join_on_sides(self, left_alias: str, right_alias: str,
                        on: str) -> tuple[str, str]:
@@ -1175,10 +1264,10 @@ class KsqlEngine:
         )
 
     def refresh_stream(self, name: str, _chain: tuple = ()) -> None:
-        """Drain currently-available upstream records through the CSAS
-        transform into the derived stream directory (availableNow on the
-        CSAS's own checkpoint — incremental, append-only). Upstream
-        derived streams refresh first, so chains propagate.
+        """Wait until the derived stream's directory holds every upstream
+        record published before the call. Upstream derived streams and
+        INSERT INTO feeders catch up first, so chains propagate; then the
+        stream's own persistent CSAS query (``_catch_up``).
 
         ``_chain`` guards against feeder cycles (INSERT INTO a SELECT
         FROM b; INSERT INTO b SELECT FROM a): a revisit raises a named
@@ -1210,7 +1299,13 @@ class KsqlEngine:
                 # merged) have no derived entry and never refresh
                 if f in self.derived:
                     self.refresh_stream(f, chain)
-        out = self.streams[name]
+        # a timed-out or failed wait raises: returning would let the
+        # downstream CTAS read a partial stream
+        self._catch_up(f"csas_{name}", f"stream {name!r}")
+        self._served.add(name)
+
+    def _start_csas(self, spec: CsasSpec):
+        out = self.streams[spec.name]
         df = self._csas_transform(spec, streaming=True)
         if spec.partition_by is not None:
             # PARTITION BY re-key: hash-partition the micro-batch on the
@@ -1218,21 +1313,14 @@ class KsqlEngine:
             # only one key-partition's rows — the Spark analogue of
             # producing to a re-keyed topic (co-located downstream reads)
             df = df.repartition(F.col(spec.partition_by))
-        q = (
+        return (
             df.writeStream.format("parquet")
             .option("path", out.path)
             .option("checkpointLocation", spec.checkpoint)
             .outputMode("append")
-            .queryName(f"csas_{name}")
-            .trigger(availableNow=True)
+            .queryName(f"csas_{spec.name}_{self._tag}")
+            .trigger(processingTime=TRIGGER_INTERVAL)
             .start()
-        )
-        # a timed-out drain means the derived stream directory is still
-        # being written — returning would let the downstream CTAS read a
-        # partial stream; fail loudly instead
-        drain_available_now(
-            q, f"CSAS refresh of stream {name!r} (downstream reads would "
-               f"see a partial stream)",
         )
 
     # -- INSERT INTO ---------------------------------------------------------
@@ -1311,8 +1399,36 @@ class KsqlEngine:
                 f"maintained by its own query"
             )
         tgt_spec = self.streams[tgt]
-        hidden = f"_ins_{tgt}_{len(tgt_spec.feeders)}"
-        self._create_stream_as(f"CREATE STREAM {hidden} AS {sel}")
+        # the first free index: a cascade-removed feeder frees its index,
+        # and reusing a live feeder's name would take over its query,
+        # directory and checkpoint
+        n = len(tgt_spec.feeders)
+        while f"_ins_{tgt}_{n}" in self.streams:
+            n += 1
+        hidden = f"_ins_{tgt}_{n}"
+        self._create_stream_as(f"CREATE STREAM {hidden} AS {sel}", start=False)
+        try:
+            self._check_feeder(hidden, tgt)
+        except KsqlParseError:
+            # the rejected feeder leaves no registration or files behind
+            import shutil
+
+            bad = self.derived.pop(hidden)
+            bad_spec = self.streams.pop(hidden)
+            shutil.rmtree(bad_spec.path, ignore_errors=True)
+            shutil.rmtree(bad.checkpoint, ignore_errors=True)
+            raise
+        tgt_spec.feeders.append(hidden)
+        self._start(f"csas_{hidden}")
+        # downstream checkpoints were pinned to the target's previous
+        # source set — rebase them so they recompute with the new feeder
+        # unioned in instead of failing the source-count assertion
+        self._rebase_downstream(tgt)
+
+    def _check_feeder(self, hidden: str, tgt: str) -> None:
+        """Reject an INSERT INTO ... SELECT feeder that would form a
+        cycle or does not fit its target's schema."""
+        tgt_spec = self.streams[tgt]
 
         # Reject feeder cycles AT INSERT TIME (ksqlDB rejects circular
         # reads too): if the new feeder's transitive upstream graph —
@@ -1341,12 +1457,6 @@ class KsqlEngine:
         # through the join stream registered fine and then every refresh
         # of the target tripped the backstop forever)
         if _reaches(hidden, tgt, set()):
-            bad = self.derived.pop(hidden)
-            bad_spec = self.streams.pop(hidden)
-            import shutil
-
-            shutil.rmtree(bad_spec.path, ignore_errors=True)
-            shutil.rmtree(bad.checkpoint, ignore_errors=True)
             raise KsqlParseError(
                 f"INSERT INTO {tgt!r} would create a feeder cycle: its "
                 f"SELECT reads (transitively) from {tgt!r} itself"
@@ -1366,12 +1476,6 @@ class KsqlEngine:
                 f"{tgt_spec.ts_col!r} must be in the select list (windowed "
                 f"readers group on it)"
             )
-        tgt_spec.feeders.append(hidden)
-        # downstream checkpoints were pinned to the target's previous
-        # source set — rebase them so the next refresh recomputes with
-        # the new feeder unioned in instead of failing the source-count
-        # assertion
-        self._rebase_downstream(tgt)
 
     @staticmethod
     def _split_csv(s: str) -> list[str]:
@@ -1492,6 +1596,13 @@ class KsqlEngine:
             having_text=having_text, having_hidden=having_hidden,
             join=join, emit=emit,
         )
+        if self._persistent(f"ctas_{name}"):
+            try:
+                self._start(f"ctas_{name}")
+            except Exception:
+                # a table whose query cannot start is not created
+                del self.tables[name]
+                raise
 
     def _create_table_view(self, name: str, sel: str) -> None:
         """``CREATE TABLE t3 AS SELECT items FROM t1 [a] [LEFT|FULL
@@ -1739,8 +1850,7 @@ class KsqlEngine:
             )
         return df
 
-    def _rebase_downstream(self, stream_name: str,
-                           _seen: Optional[set] = None) -> None:
+    def _rebase_downstream(self, stream_name: str) -> None:
         """Reset the maintenance state of every CTAS/CSAS reading
         ``stream_name``. Called when the stream's SOURCE SET changes (an
         INSERT INTO feeder registered, or a never-materialized feeder
@@ -1749,37 +1859,52 @@ class KsqlEngine:
         count changes ("There are [N] sources in the checkpoint offsets
         and now there are [M]"). Sources are replayable files, so a fresh
         checkpoint + empty sink recomputes the identical table from
-        offset 0 — correctness by recomputation instead of resume.
+        offset 0 — correctness by recomputation instead of resume. Each
+        affected query is stopped before its state is wiped, and all are
+        restarted afterwards, upstream first, reading the new source set.
         TERMINATEd consumers keep their frozen state untouched."""
         import shutil
 
-        seen = _seen if _seen is not None else set()
-        if stream_name in seen:
-            return
-        seen.add(stream_name)
-        for t, ts in self.tables.items():
-            if isinstance(ts, TableViewSpec):
-                continue  # read-time join: parents rebase themselves
-            if ts.source == stream_name and f"ctas_{t}" not in self.terminated:
-                shutil.rmtree(ts.checkpoint, ignore_errors=True)
-                shutil.rmtree(ts.sink.path, ignore_errors=True)
-        for d, dsp in self.derived.items():
-            if (dsp.source == stream_name
-                    or (dsp.join and dsp.join.get("stream") == stream_name)) \
-                    and f"csas_{d}" not in self.terminated:
-                shutil.rmtree(dsp.checkpoint, ignore_errors=True)
-                out = self.streams[d]
-                shutil.rmtree(out.path, ignore_errors=True)
-                os.makedirs(out.path, exist_ok=True)
-                self._rebase_downstream(d, seen)
-        # a stream that CONSUMES stream_name as an INSERT feeder reads it
-        # through StreamSpec.feeders, not a derived source edge — when the
-        # feeder's output is wiped and recomputed (new file names), the
-        # target's readers would re-ingest the rewritten files on top of
-        # their old checkpoints and double-count, so rebase them too
-        for tname, sp in self.streams.items():
-            if stream_name in sp.feeders:
-                self._rebase_downstream(tname, seen)
+        seen: set[str] = set()
+        restart: list[str] = []
+
+        def wipe(stream: str) -> None:
+            if stream in seen:
+                return
+            seen.add(stream)
+            for t, ts in self.tables.items():
+                if isinstance(ts, TableViewSpec):
+                    continue  # read-time join: parents rebase themselves
+                if ts.source == stream and f"ctas_{t}" not in self.terminated:
+                    self._stop(f"ctas_{t}")
+                    shutil.rmtree(ts.checkpoint, ignore_errors=True)
+                    shutil.rmtree(ts.sink.path, ignore_errors=True)
+                    restart.append(f"ctas_{t}")
+            for d, dsp in self.derived.items():
+                if (dsp.source == stream
+                        or (dsp.join and dsp.join.get("stream") == stream)) \
+                        and f"csas_{d}" not in self.terminated:
+                    self._stop(f"csas_{d}")
+                    shutil.rmtree(dsp.checkpoint, ignore_errors=True)
+                    out = self.streams[d]
+                    shutil.rmtree(out.path, ignore_errors=True)
+                    os.makedirs(out.path, exist_ok=True)
+                    restart.append(f"csas_{d}")
+                    wipe(d)
+            # a stream that CONSUMES `stream` as an INSERT feeder reads it
+            # through StreamSpec.feeders, not a derived source edge — when
+            # the feeder's output is wiped and recomputed (new file names),
+            # the target's readers would re-ingest the rewritten files on
+            # top of their old checkpoints and double-count, so rebase
+            # them too
+            for tname, sp in self.streams.items():
+                if stream in sp.feeders:
+                    wipe(tname)
+
+        wipe(stream_name)
+        for qid in dict.fromkeys(restart):
+            if self._persistent(qid):
+                self._start(qid)
 
     def _refresh_upstreams(self, name: str) -> None:
         """Bring a stream's inputs up to date: its own CSAS transform (if
@@ -1907,10 +2032,16 @@ class KsqlEngine:
     # -- materialization / pull queries --------------------------------------
 
     def refresh(self, table: str) -> None:
-        """Drain currently-available stream records into the materialized
-        table (availableNow trigger on the shared checkpoint — the bounded
-        analogue of ksqlDB's continuous EMIT CHANGES query; each call
-        resumes incrementally, reprocessing nothing)."""
+        """Bring the materialized table up to date with every record
+        published before the call — the pull's catch-up step.
+
+        The table's persistent query (started with the table) keeps
+        running between pulls, so this only waits: in dependency order,
+        upstream CSAS and INSERT INTO feeders first, then the table's own
+        query, until each has processed what was published before the
+        call (``_catch_up``). A stream-table-join table instead drains an
+        availableNow query on its checkpoint per call, and a
+        batch-materialized session table is recomputed."""
         if f"ctas_{table}" in self.terminated:
             # the maintenance query was TERMINATEd: serve the last
             # materialized state, drain nothing (ksqlDB semantics)
@@ -1926,10 +2057,10 @@ class KsqlEngine:
         if spec.join is not None:
             # bring the join table up to date first, so this refresh joins
             # against its current state (ksqlDB keeps both continuously
-            # maintained; availableNow refreshes in dependency order)
+            # maintained; the refresh follows dependency order)
             self.refresh(spec.join["table"])
         # propagate upstream CSAS transforms and INSERT..SELECT feeders
-        # before draining the source
+        # before the table's own query
         self._refresh_upstreams(spec.source)
         if self._needs_batch_materialization(spec):
             # Session windows grouped ONLY by literals constant-fold to a
@@ -1945,6 +2076,18 @@ class KsqlEngine:
                 os.path.join(spec.sink.path, "batch_full")
             )
             return
+        if spec.join is not None:
+            # drained per pull, not persistent: see _persistent
+            q = self._start_ctas(spec, processing_time=None)
+            self.queries[f"ctas_{table}"] = q
+            drain_available_now(
+                q, f"refresh of table {table!r} (the materialized state is "
+                   f"incomplete)",
+            )
+            return
+        self._catch_up(f"ctas_{table}", f"table {table!r}")
+
+    def _start_ctas(self, spec: TableSpec, processing_time: Optional[str]):
         stream = self._stream_df(self.streams[spec.source], streaming=True)
         # session windows can merge previously-emitted windows, so Spark
         # forbids update mode for them; complete mode re-emits the whole
@@ -1958,15 +2101,67 @@ class KsqlEngine:
             mode = "complete"
         else:
             mode = "update"
-        q = run_streaming_stats(
+        return run_streaming_stats(
             stream, spec.sink, spec.checkpoint,
             lambda df: self._build_agg(spec, df),
-            output_mode=mode, query_name=f"ksql_{table}",
+            output_mode=mode, query_name=f"ctas_{spec.name}_{self._tag}",
+            processing_time=processing_time,
         )
-        drain_available_now(
-            q, f"refresh of table {table!r} (the materialized state is "
-               f"incomplete)",
-        )
+
+    # -- persistent queries --------------------------------------------------
+
+    def _persistent(self, qid: str) -> bool:
+        """Whether a persistent query maintains ``qid``: every CSAS, and
+        every CTAS but two kinds. A stream-table-join table drains per
+        read: its static side comes from ``_read_table`` ->
+        ``read_current``, an ``isin(committed)`` literal over a file index
+        listed once when the query plans, so a long-running query would
+        join against that snapshot forever. A batch-materialized session
+        table has no streaming query at all."""
+        if qid.startswith("csas_"):
+            return qid[5:] in self.derived
+        spec = self.tables.get(qid[5:])
+        return (isinstance(spec, TableSpec) and spec.join is None
+                and not self._needs_batch_materialization(spec))
+
+    def _start(self, qid: str):
+        """Start the persistent query ``qid`` on its checkpoint; a
+        checkpoint with committed batches resumes where it stopped."""
+        name = qid[5:]
+        if qid.startswith("csas_"):
+            q = self._start_csas(self.derived[name])
+        else:
+            q = self._start_ctas(self.tables[name], TRIGGER_INTERVAL)
+        self.queries[qid] = q
+        return q
+
+    def _stop(self, qid: str) -> None:
+        q = self.queries.pop(qid, None)
+        if q is not None:
+            q.stop()
+
+    def _catch_up(self, qid: str, what: str) -> None:
+        """Wait until the persistent query ``qid`` has processed every
+        record published before the call (``await_caught_up``).
+
+        A query that is no longer running — it failed, timed out, or
+        something outside the engine stopped it — raises, naming
+        ``what``, rather than let the caller serve stale rows. Its handle
+        is dropped, so the next call restarts it from its checkpoint."""
+        q = self.queries.get(qid) or self._start(qid)
+        err = None
+        try:
+            await_caught_up(q, f"the query maintaining {what}")
+        except (StreamingQueryException, RuntimeError) as e:  # died, timed out
+            err = e
+        if err is None and q.isActive:
+            return
+        self._stop(qid)
+        cause = err or q.exception() or "it was stopped outside the engine"
+        raise RuntimeError(
+            f"the query maintaining {what} is not running ({cause}); the "
+            f"next read restarts it from its checkpoint"
+        ) from err
 
     def _needs_batch_materialization(self, spec: TableSpec) -> bool:
         all_literal_keys = all(

@@ -317,8 +317,8 @@ def q_ksql_e2e_windowed_stats(spark, sf_dir):
     from ..frontend import KsqlEngine
 
     work = tempfile.mkdtemp(prefix="kuss_ksql_e2e_")
+    eng = KsqlEngine(spark, work)
     try:
-        eng = KsqlEngine(spark, work)
         eng.execute(
             "CREATE STREAM ev (ts TIMESTAMP, event_type VARCHAR, value DOUBLE) "
             "WITH (kafka_topic='ev', value_format='json', timestamp='ts');"
@@ -335,7 +335,9 @@ def q_ksql_e2e_windowed_stats(spark, sf_dir):
         )
         rows = eng.execute("SELECT * FROM ev_stats;")
     finally:
-        # the pulled rows are already on the driver
+        # the pulled rows are already on the driver; stop the engine's
+        # queries before their work directory goes
+        eng.close()
         shutil.rmtree(work, ignore_errors=True)
     out = spark.createDataFrame(
         [(r["window_start"], r["event_type"], r["n_rows"], r["skew_pop"],
@@ -381,8 +383,8 @@ def q_ksql_e2e_hopping_stats(spark, sf_dir):
     from ..frontend import KsqlEngine
 
     work = tempfile.mkdtemp(prefix="kuss_ksql_hop_")
+    eng = KsqlEngine(spark, work)
     try:
-        eng = KsqlEngine(spark, work)
         eng.execute(
             "CREATE STREAM hev (ts TIMESTAMP, event_type VARCHAR, value DOUBLE) "
             "WITH (kafka_topic='hev', value_format='json', timestamp='ts');"
@@ -398,7 +400,9 @@ def q_ksql_e2e_hopping_stats(spark, sf_dir):
         )
         rows = eng.execute("SELECT * FROM hev_stats;")
     finally:
-        # the pulled rows are already on the driver
+        # the pulled rows are already on the driver; stop the engine's
+        # queries before their work directory goes
+        eng.close()
         shutil.rmtree(work, ignore_errors=True)
     out = spark.createDataFrame(
         [(r["window_start"], r["event_type"], r["n_rows"], r["stddev_pop"])
@@ -447,8 +451,8 @@ def q_ksql_e2e_session_stats(spark, sf_dir):
     from ..frontend import KsqlEngine
 
     work = tempfile.mkdtemp(prefix="kuss_ksql_sess_")
+    eng = KsqlEngine(spark, work)
     try:
-        eng = KsqlEngine(spark, work)
         eng.execute(
             "CREATE STREAM sev (ts TIMESTAMP, user_id BIGINT, value DOUBLE) "
             "WITH (kafka_topic='sev', value_format='json', timestamp='ts');"
@@ -464,7 +468,9 @@ def q_ksql_e2e_session_stats(spark, sf_dir):
         )
         rows = eng.execute("SELECT * FROM sev_stats;")
     finally:
-        # the pulled rows are already on the driver
+        # the pulled rows are already on the driver; stop the engine's
+        # queries before their work directory goes
+        eng.close()
         shutil.rmtree(work, ignore_errors=True)
     out = spark.createDataFrame(
         [(r["user_id"], r["session_start"], r["n_events"], r["max_value"])

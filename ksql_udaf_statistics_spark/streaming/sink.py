@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 from typing import Callable, Optional, Sequence
 
@@ -39,8 +40,9 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-# upper bound on one bounded (availableNow) drain; a query still running
-# after it is stopped and the drain raises
+# upper bound on one bounded (availableNow) drain, and on one catch-up wait
+# of a persistent query; a query still busy after it is stopped and the
+# wait raises
 DRAIN_TIMEOUT_S = 360
 
 
@@ -303,34 +305,83 @@ def run_streaming_stats(
     transform: Callable[[DataFrame], DataFrame],
     output_mode: str = "update",
     query_name: str = "windowed_stats",
+    processing_time: Optional[str] = None,
 ):
     """Start source → transform → ``foreachBatch(sink)`` with a checkpoint.
 
-    The one ``foreachBatch`` wiring. ``availableNow`` drains all
-    currently-available input then stops; a restart with the same
-    checkpoint resumes from the last committed offsets (north_rule
-    checkpoint-resume requirement). Returns the running query without
-    blocking, so a caller can poll its progress; ``drain_available_now``
-    waits for it.
+    The one ``foreachBatch`` wiring. By default the trigger is
+    ``availableNow``: the query drains all currently-available input then
+    stops, and a restart with the same checkpoint resumes from the last
+    committed offsets (north_rule checkpoint-resume requirement);
+    ``drain_available_now`` waits for it. With ``processing_time`` (e.g.
+    ``"100 milliseconds"``) the query is persistent: it polls its source
+    at that interval until stopped, and ``await_caught_up`` waits for it
+    to process what was published before the call. Returns the running
+    query without blocking, so a caller can poll its progress.
     """
-    return (
+    w = (
         transform(source_df).writeStream.outputMode(output_mode)
         .foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
         .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
     )
+    if processing_time is None:
+        w = w.trigger(availableNow=True)
+    else:
+        w = w.trigger(processingTime=processing_time)
+    return w.start()
 
 
 def drain_available_now(query, what: str):
     """Block until an ``availableNow`` query finishes draining, stopping
     it and raising if ``DRAIN_TIMEOUT_S`` elapses first — a partial drain
     must never be read as a finished table. The one drain policy for every
-    bounded streaming job (gates, continuous aggregates, drift, front-end
-    refreshes).
+    bounded streaming job (gates, continuous aggregates, drift, the
+    front-end's stream-table-join tables).
     """
     if not query.awaitTermination(DRAIN_TIMEOUT_S):
         query.stop()
         raise RuntimeError(f"{what} did not drain within {DRAIN_TIMEOUT_S}s")
+    return query
+
+
+def await_caught_up(query, what: str):
+    """Block until a persistent (``processingTime``) query has processed
+    every input published before the call, stopping it and raising if
+    ``DRAIN_TIMEOUT_S`` elapses first. A query that dies while waited
+    for raises its ``StreamingQueryException``.
+
+    Why ``processAllAvailable()`` twice: a call returns when a trigger
+    reports "no new data" after the call began, and that trigger may have
+    listed its source *before* the publish — one call alone can return
+    without the caller's records. Triggers run one after another on the
+    query's thread, and each reports at most once, at the end of its
+    listing. Trigger A satisfies the first call, so A reported after that
+    call began, i.e. after the publish. Trigger B satisfies the second
+    call, so B reported after the first call returned, after A's report:
+    B is a later trigger than A and its listing began after A's ended,
+    after the publish. B saw every published file and found nothing new,
+    so the triggers before it had already run and committed the batches
+    holding them. The price is at most one more trigger interval.
+
+    The wait runs on a helper thread so that it has a bound: the query's
+    own wait has none.
+    """
+    err: list[BaseException] = []
+
+    def wait() -> None:
+        try:
+            query.processAllAvailable()
+            query.processAllAvailable()
+        except BaseException as e:  # re-raised on the caller's thread
+            err.append(e)
+
+    t = threading.Thread(target=wait, name=f"await {what}", daemon=True)
+    t.start()
+    t.join(DRAIN_TIMEOUT_S)
+    if t.is_alive():
+        query.stop()
+        raise RuntimeError(f"{what} did not catch up within {DRAIN_TIMEOUT_S}s")
+    if err:
+        raise err[0]
     return query

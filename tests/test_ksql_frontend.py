@@ -6,6 +6,7 @@ numbers back. Golden values come from the reference's unit tests
 import json
 import math
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,9 +14,19 @@ from pyspark.sql import functions as F
 from ksql_udaf_statistics_spark.frontend import KsqlEngine
 
 
+@pytest.fixture(autouse=True)
+def no_query_left_active(spark):
+    """Every test stops the queries it started (the engine fixture's
+    close()); a leaked query keeps polling a deleted work directory."""
+    yield
+    assert spark.streams.active == []
+
+
 @pytest.fixture()
 def engine(spark, tmp_dir):
-    return KsqlEngine(spark, tmp_dir)
+    eng = KsqlEngine(spark, tmp_dir)
+    yield eng
+    eng.close()
 
 
 def test_readme_weighted_flow(engine):
@@ -1339,21 +1350,178 @@ def test_doubled_quote_escapes_a_quote(engine):
         == [{"k": "it's", "s": 2.5}]
 
 
-def test_batched_insert_refresh_runs_one_spark_job(engine, monkeypatch):
+def test_batched_insert_refresh_runs_one_spark_job(engine):
     """A refresh after a 50-INSERT execute() reads one stream file: the
-    micro-batch is the query's only Spark job, with no parallel
-    file-listing job (Spark lists more than 32 paths with a job)."""
-    from ksql_udaf_statistics_spark.frontend import ksql as ksql_mod
-
+    micro-batch is the only Spark job the op adds to the table query's
+    job group, with no parallel file-listing job (Spark lists more than
+    32 paths with a job)."""
     _count_table(engine, "bj")
-    queries = []
-    drain = ksql_mod.drain_available_now
-    monkeypatch.setattr(ksql_mod, "drain_available_now",
-                        lambda q, what: (queries.append(q), drain(q, what))[1])
+    q = engine.queries["ctas_bj_tot"]
+    sc = engine.spark.sparkContext
+
+    def jobs():
+        # job records reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+
+    before = jobs()
     engine.execute(_inserts("bj", [f"k{i % 7}" for i in range(50)]))
     assert sum(r["n"] for r in engine.execute("SELECT * FROM bj_tot;")) == 50
-    [q] = queries
-    sc = engine.spark.sparkContext
-    # job records reach the status store through the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup(str(q.runId))) == 1
+    assert jobs() - before == 1
+
+
+def _active(spark, prefix):
+    return [q for q in spark.streams.active if q.name.startswith(prefix + "_")]
+
+
+def _counts(rows):
+    return {r["k"]: r["n"] for r in rows}
+
+
+def test_terminate_catches_up_then_stops_the_query(engine, spark):
+    """TERMINATE freezes the table at everything published before it: a
+    record INSERTed in the same execute() just before the TERMINATE is in
+    the frozen state, and the query is no longer active."""
+    _count_table(engine, "tq")
+    assert len(_active(spark, "ctas_tq_tot")) == 1
+    engine.execute(_inserts("tq", ["a", "b"]) + "TERMINATE CTAS_tq_tot;")
+    assert _active(spark, "ctas_tq_tot") == []
+    engine.execute(_inserts("tq", ["a"]))
+    assert _counts(engine.execute("SELECT * FROM tq_tot;")) == {"a": 1, "b": 1}
+
+
+def test_drop_and_recreate_runs_one_fresh_query(engine, spark):
+    """DROP stops the table's query before deleting its state; the
+    re-created table runs exactly one query, on a fresh checkpoint that
+    recomputes every record from offset 0 in one batch."""
+    _count_table(engine, "dq")
+    for keys in (["a"], ["a", "b"]):
+        engine.execute(_inserts("dq", keys))
+        engine.execute("SELECT * FROM dq_tot;")
+    assert len(engine.tables["dq_tot"].sink.committed_batches()) == 2
+    engine.execute("DROP TABLE dq_tot;")
+    assert _active(spark, "ctas_dq_tot") == []
+    engine.execute(
+        "CREATE TABLE dq_tot AS SELECT k AS k, COUNT(*) AS n, "
+        "SUM(val) AS s FROM dq GROUP BY k EMIT CHANGES;"
+    )
+    assert len(_active(spark, "ctas_dq_tot")) == 1
+    assert _counts(engine.execute("SELECT * FROM dq_tot;")) == {"a": 2, "b": 1}
+    assert [e["batch_id"] for e in
+            engine.tables["dq_tot"].sink.committed_batches()] == [0]
+    assert len(_active(spark, "ctas_dq_tot")) == 1
+
+
+def test_feeder_restarts_the_target_table_query(engine, spark):
+    """Registering an INSERT INTO ... SELECT feeder restarts the target
+    stream's CTAS on a wiped checkpoint; its pull equals the same table
+    computed from offset 0 by a query created afterwards."""
+    engine.execute(
+        "CREATE STREAM ft (k VARCHAR, val DOUBLE) "
+        "WITH (kafka_topic='ft', value_format='json');"
+        "CREATE STREAM fs (k VARCHAR, val DOUBLE) "
+        "WITH (kafka_topic='fs', value_format='json');"
+        "CREATE TABLE ft_tot AS SELECT k AS k, COUNT(*) AS n "
+        "FROM ft GROUP BY k EMIT CHANGES;"
+    )
+    engine.execute(_inserts("ft", ["a", "b", "a"]))
+    assert _counts(engine.execute("SELECT * FROM ft_tot;")) == {"a": 2, "b": 1}
+    before = engine.queries["ctas_ft_tot"]
+    engine.execute(_inserts("fs", ["b", "c"]) + "INSERT INTO ft SELECT k, val FROM fs;")
+    after = engine.queries["ctas_ft_tot"]
+    assert not before.isActive and after.isActive
+    assert after.runId != before.runId
+    engine.execute(
+        "CREATE TABLE ft_fresh AS SELECT k AS k, COUNT(*) AS n "
+        "FROM ft GROUP BY k EMIT CHANGES;"
+    )
+    got = _counts(engine.execute("SELECT * FROM ft_tot;"))
+    assert got == _counts(engine.execute("SELECT * FROM ft_fresh;"))
+    assert got == {"a": 2, "b": 2, "c": 1}
+
+
+def test_query_stopped_outside_the_engine_fails_one_pull(engine, spark):
+    """A table query that stops behind the engine's back makes the next
+    pull raise, naming the table, instead of serving stale rows; the pull
+    after that restarts it from its checkpoint and serves every record."""
+    _count_table(engine, "kq")
+    engine.execute(_inserts("kq", ["a"]))
+    assert _counts(engine.execute("SELECT * FROM kq_tot;")) == {"a": 1}
+    engine.queries["ctas_kq_tot"].stop()
+    engine.execute(_inserts("kq", ["a", "b"]))
+    with pytest.raises(RuntimeError, match="table 'kq_tot'"):
+        engine.execute("SELECT * FROM kq_tot;")
+    assert _counts(engine.execute("SELECT * FROM kq_tot;")) == {"a": 2, "b": 1}
+    assert len(_active(spark, "ctas_kq_tot")) == 1
+
+
+def test_feeder_after_a_removed_feeder_gets_a_free_name(engine):
+    """A feeder registered after an earlier one was cascade-removed does
+    not take over a live feeder's name, and with it its query, directory
+    and checkpoint: both live feeders' rows reach the target."""
+    engine.execute("".join(
+        f"CREATE STREAM {s} (k VARCHAR, val DOUBLE) "
+        f"WITH (kafka_topic='{s}', value_format='json');"
+        for s in ("nt", "na", "nb", "nc")
+    ) + _inserts("na", ["a"]) + _inserts("nb", ["b"]) + _inserts("nc", ["c"]) + (
+        "INSERT INTO nt SELECT k, val FROM na;"
+        "INSERT INTO nt SELECT k, val FROM nb;"
+        "DROP STREAM na;"
+        "INSERT INTO nt SELECT k, val FROM nc;"
+        "CREATE TABLE nt_tot AS SELECT k AS k, COUNT(*) AS n "
+        "FROM nt GROUP BY k EMIT CHANGES;"
+    ))
+    assert _counts(engine.execute("SELECT * FROM nt_tot;")) == {"b": 1, "c": 1}
+
+
+@pytest.mark.parametrize("via_csas", [False, True], ids=["source", "csas"])
+def test_every_insert_is_visible_to_the_next_pull(engine, via_csas):
+    """30 rounds of one execute() of k INSERTs followed by a pull: every
+    round's pull counts every record inserted so far, exactly. Over a
+    CSAS the pull must first wait for the CSAS query, then the table's."""
+    engine.execute(
+        "CREATE STREAM vs (k VARCHAR, val DOUBLE) "
+        "WITH (kafka_topic='vs', value_format='json');"
+    )
+    src = "vs"
+    if via_csas:
+        engine.execute("CREATE STREAM vs_d AS SELECT k, val * 2 AS val FROM vs;")
+        src = "vs_d"
+    engine.execute(
+        f"CREATE TABLE vs_tot AS SELECT k AS k, COUNT(*) AS n "
+        f"FROM {src} GROUP BY k EMIT CHANGES;"
+    )
+    want: Counter = Counter()
+    for r in range(30):
+        keys = [f"k{(r + i) % 5}" for i in range(1 + r % 4)]
+        want.update(keys)
+        rows = engine.execute(_inserts("vs", keys) + "SELECT * FROM vs_tot;")
+        assert _counts(rows) == dict(want), f"round {r}"
+
+
+def test_describe_extended_reports_the_maintaining_query(engine, spark):
+    """DESCRIBE EXTENDED appends the maintaining query's runtime row: its
+    id, its state and its last progress report."""
+    # no idle-trigger report may replace the data batch's as the last one
+    # (the interval is read when the query starts)
+    spark.conf.set("spark.sql.streaming.noDataProgressEventInterval", "1h")
+    try:
+        _count_table(engine, "de")
+    finally:
+        spark.conf.unset("spark.sql.streaming.noDataProgressEventInterval")
+    engine.execute(_inserts("de", ["a", "b", "a"]))
+    plain = engine.execute("DESCRIBE de_tot;")
+    rows = engine.execute("DESCRIBE EXTENDED de_tot;")
+    assert rows[:-1] == plain
+    rt = rows[-1]
+    assert rt["query"] == "CTAS_de_tot" and rt["state"] == "RUNNING"
+    assert rt["query_id"] == str(engine.queries["ctas_de_tot"].id)
+    assert rt["batch_id"] == 0 and rt["num_input_rows"] == 3
+    assert rt["state_rows_total"] == 2
+    assert rt["processed_rows_per_second"] > 0
+    # a source stream has no maintaining query; a derived stream does
+    assert engine.execute("DESCRIBE EXTENDED de;") == engine.execute("DESCRIBE de;")
+    engine.execute("CREATE STREAM de_d AS SELECT k, val FROM de;")
+    assert engine.execute("DESCRIBE EXTENDED de_d;")[-1]["state"] == "RUNNING"
+    engine.execute("TERMINATE CTAS_de_tot;")
+    assert engine.execute("DESCRIBE EXTENDED de_tot;")[-1]["state"] == "TERMINATED"
