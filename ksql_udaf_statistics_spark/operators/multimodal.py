@@ -354,21 +354,6 @@ def image_stats(media: DataFrame) -> DataFrame:
     return media.mapInPandas(batches, IMAGE_STATS_SCHEMA)
 
 
-def resize_op(media: DataFrame, target_w: int, target_h: int) -> DataFrame:
-    """Resize plumbing: recomputes metadata JVM-side; payload re-encode is
-    behind the decode seam (kept as-is here). Shows the pattern of typed
-    metadata transforms staying out of Python entirely."""
-    return media.withColumn(
-        "meta",
-        F.struct(
-            F.lit(target_w).cast("int").alias("width"),
-            F.lit(target_h).cast("int").alias("height"),
-            F.col("meta.sample_rate").alias("sample_rate"),
-            F.col("meta.n_frames").alias("n_frames"),
-        ),
-    )
-
-
 def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
     """Frame-sampling plan for video rows: explodes frame indices to one
     row per sampled frame (the decode of each frame is behind the seam).

@@ -1188,10 +1188,11 @@ def q_ann_ivf_verified(spark, sf_dir):
     FROM s""",
 )
 def q_cumulative_stats_all(spark, sf_dir):
-    """Batch twin of the applyInPandasWithState cumulative operator
-    (streaming/stateful.py): the value it converges to after draining the
-    stream; streaming state + checkpoint resume is pytest-verified in
-    tests/test_stateful.py."""
+    """Batch twin of the unwindowed EMIT CHANGES aggregation (the
+    reference's ``GROUP BY 'singleton'`` CTAS): the value its update-mode
+    state converges to after draining the stream; streaming state +
+    checkpoint resume is pytest-verified in
+    tests/test_stateful.py::test_cumulative_state_resume_matches_batch."""
     ev = _load(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),

@@ -1,4 +1,4 @@
-"""Table sources: driver testdata loaders + deterministic token-table synthesis.
+"""Table sources: the testdata table names + deterministic token-table synthesis.
 
 The engine's primary input (BASELINE.json ``input_hint``) is an
 Iceberg-style table of pre-tokenized training sequences::
@@ -28,11 +28,6 @@ TABLE_NAMES = [
 TOKEN_SCHEMA = (
     "doc_id string, tokens array<int>, n_tok int, source string, ts timestamp"
 )
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load the driver's deterministic parquet tables (TESTDATA.md)."""
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in TABLE_NAMES}
 
 
 def synthesize_token_table(

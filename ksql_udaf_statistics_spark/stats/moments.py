@@ -18,20 +18,19 @@ Semantics reproduced exactly (with file:line cites into /root/reference):
   * n==0 -> 0.0                      (SkewnessUdaf.java:158-160)
   * sample skew, n<3 -> NaN          (SkewnessUdaf.java:162-164)
   * sample kurt, n<4 -> NaN          (KurtosisUdaf.java:168-170)
-  * variance<=0 -> 0.0 (after Bessel for sample variants)
-                                     (SkewnessUdaf.java:173-175; the
-    reference tests ``== 0`` — we widen to ``<= 0`` because raw-sum FP
-    cancellation can yield variance = -ε where Java silently emits
-    Inf/NaN but ANSI Spark would raise DIVIDE_BY_ZERO; on the
-    reference's own test vectors the branch behavior is identical)
+  * zero variance -> 0.0             (SkewnessUdaf.java:173-175; see
+    :func:`is_zero_variance` for why the reference's ``== 0`` becomes a
+    relative bound)
   * Σw==0 -> 0.0                     (WeightedStdDevUdaf.java:129-132)
   * population kurtosis is RAW m4/var² (KurtosisUdaf.java:187); sample
     kurtosis is EXCESS G2 (KurtosisUdaf.java:189-195) — asymmetric on
     purpose; never substitute Spark's built-ins (both are excess).
 
-All update functions are numpy-vectorized (no per-row Python), matching the
-input_hint requirement; they double as the body of the Arrow-batched
-``applyInPandas`` variant in ``stats/spark_agg.py``.
+All update functions are numpy-vectorized (no per-row Python). The engine
+itself never calls this module: its one implementation of the five UDAFs
+is the sum-Column form in ``stats/spark_agg.py``, which imports only
+:func:`is_zero_variance` from here. This module is the Spark-free mirror
+that the unit tests pin to the reference's golden values.
 """
 
 from __future__ import annotations
@@ -42,6 +41,8 @@ from dataclasses import dataclass
 import numpy as np
 
 __all__ = [
+    "ZERO_VAR_REL",
+    "is_zero_variance",
     "MomentState",
     "WeightedState",
     "finalize_skewness",
@@ -50,6 +51,42 @@ __all__ = [
     "finalize_skewness_weighted",
     "finalize_kurtosis_weighted",
 ]
+
+
+#: Relative zero-variance threshold ``c`` of :func:`is_zero_variance`.
+ZERO_VAR_REL = 1e-10
+
+
+def is_zero_variance(var, m2):
+    """The one zero-variance guard of all five finalizers, numpy and Spark.
+
+    ``var`` is the population variance ``m2 - mean²`` computed from the
+    raw power sums, and ``m2`` is the second raw moment ``s2/n``
+    (``swx2/sw`` weighted). The variance counts as zero when
+    ``var <= ZERO_VAR_REL * m2``. Works on floats and on Spark Columns
+    alike, so the numpy kernel and the Column finalizers share it.
+
+    The reference tests ``variance == 0`` (SkewnessUdaf.java:173-175).
+    That is exact only when the power sums are exact, e.g. for integer
+    constants. For a constant group of arbitrary floats, ``m2`` and
+    ``mean²`` each carry a rounding error of a few units of 2^-53 per
+    summation step, so ``var`` comes back as ±noise·m2 instead of 0, and
+    the statistic divides by noise^1.5: a one-row group with w=3, x=1.7
+    gives var = 4.4e-16 and skewness -1.9e8. Summing constant groups
+    sequentially, as Spark's ``Sum`` does, up to n = 1e5 rows gave a
+    worst |var|/m2 of 5.0e-12 unweighted and 6.9e-15 weighted, so
+    ``c = 1e-10`` leaves 20x headroom at that size. The noise grows at
+    most linearly with the rows in one sequential partial sum, so a
+    constant group of more than ~1e6 rows in one partition may still
+    escape the guard.
+
+    Being relative to ``m2`` rather than ``mean²``, the bound stays
+    defined for mean 0. It fires only when σ/|μ| < 1e-5, where the
+    raw-sum third and fourth central moments cancel by a factor of at
+    least 1e15 and carry no correct digit, so no meaningful output
+    changes. A negative ``var`` (cancellation below zero) also fires.
+    """
+    return var <= ZERO_VAR_REL * m2
 
 
 @dataclass(frozen=True)
@@ -156,13 +193,14 @@ def finalize_skewness(state: MomentState, sample: bool = False) -> float:
     if sample and n < 3:
         return math.nan
     mean = state.s1 / n
-    var = state.s2 / n - mean * mean
+    m2 = state.s2 / n
+    var = m2 - mean * mean
+    if is_zero_variance(var, m2):
+        return 0.0
     if sample:
         var *= n / (n - 1.0)
-    if var <= 0.0:
-        return 0.0
-    m3 = state.s3 / n - 3.0 * mean * (state.s2 / n) + 2.0 * mean**3
-    skew = m3 / max(var, 0.0) ** 1.5
+    m3 = state.s3 / n - 3.0 * mean * m2 + 2.0 * mean**3
+    skew = m3 / var**1.5
     if sample:
         skew *= (n * n) / ((n - 1.0) * (n - 2.0))
     return skew
@@ -181,17 +219,18 @@ def finalize_kurtosis(state: MomentState, sample: bool = False) -> float:
     if sample and n < 4:
         return math.nan
     mean = state.s1 / n
-    var = state.s2 / n - mean * mean
+    m2 = state.s2 / n
+    var = m2 - mean * mean
+    if is_zero_variance(var, m2):
+        return 0.0
     m4 = (
         state.s4 / n
         - 4.0 * mean * (state.s3 / n)
-        + 6.0 * mean * mean * (state.s2 / n)
+        + 6.0 * mean * mean * m2
         - 3.0 * mean**4
     )
     if sample:
         var *= n / (n - 1.0)
-    if var <= 0.0:
-        return 0.0
     kurt = m4 / (var * var)
     if sample:
         kurt = ((n * n * (n + 1.0)) / ((n - 1.0) * (n - 2.0) * (n - 3.0))) * kurt - (
@@ -200,46 +239,52 @@ def finalize_kurtosis(state: MomentState, sample: bool = False) -> float:
     return kurt
 
 
+def _weighted_mean_m2_var(state: WeightedState) -> tuple[float, float, float]:
+    mean = state.swx / state.sw
+    m2 = state.swx2 / state.sw
+    return mean, m2, m2 - mean * mean
+
+
 def finalize_stddev_weighted(state: WeightedState) -> float:
     """map() for STDDEV_WEIGHTED (WeightedStdDevUdaf.java:122-142).
 
-    Weighted population stddev (frequency weights, no Bessel); Σw==0 -> 0.
+    Weighted population stddev (frequency weights, no Bessel); Σw==0 or
+    zero variance -> 0.
     """
     if state.sw == 0.0:
         return 0.0
-    mean = state.swx / state.sw
-    var = state.swx2 / state.sw - mean * mean
-    return math.sqrt(max(var, 0.0))
+    _, m2, var = _weighted_mean_m2_var(state)
+    if is_zero_variance(var, m2):
+        return 0.0
+    return math.sqrt(var)
 
 
 def finalize_skewness_weighted(state: WeightedState) -> float:
     """map() for SKEWNESS_WEIGHTED (WeightedSkewnessUdaf.java:131-161)."""
     if state.sw == 0.0:
         return 0.0
-    mean = state.swx / state.sw
-    var = state.swx2 / state.sw - mean * mean
-    if var <= 0.0:
+    mean, m2, var = _weighted_mean_m2_var(state)
+    if is_zero_variance(var, m2):
         return 0.0
-    m3 = state.swx3 / state.sw - 3.0 * mean * (state.swx2 / state.sw) + 2.0 * mean**3
-    return m3 / max(var, 0.0) ** 1.5
+    m3 = state.swx3 / state.sw - 3.0 * mean * m2 + 2.0 * mean**3
+    return m3 / var**1.5
 
 
 def finalize_kurtosis_weighted(state: WeightedState) -> float:
     """map() for KURTOSIS_WEIGHTED (WeightedKurtosisUdaf.java:132-161).
 
     RAW weighted kurtosis m4/var² (golden 1.4400,
-    WeightedKurtosisUdafTest.java:134); Σw==0 or var==0 -> 0.
+    WeightedKurtosisUdafTest.java:134); Σw==0 or zero variance -> 0.
     """
     if state.sw == 0.0:
         return 0.0
-    mean = state.swx / state.sw
-    var = state.swx2 / state.sw - mean * mean
-    if var <= 0.0:
+    mean, m2, var = _weighted_mean_m2_var(state)
+    if is_zero_variance(var, m2):
         return 0.0
     m4 = (
         state.swx4 / state.sw
         - 4.0 * mean * (state.swx3 / state.sw)
-        + 6.0 * mean * mean * (state.swx2 / state.sw)
+        + 6.0 * mean * mean * m2
         - 3.0 * mean**4
     )
     return m4 / (var * var)

@@ -1,5 +1,11 @@
 """Spark-native aggregate surface for the five reference UDAFs.
 
+This is the engine's only implementation of the five UDAFs: every declared
+query, front-end CTAS, streaming job and benchmark reaches them here.
+``stats/moments.py`` is the Spark-free mirror the unit tests pin to the
+reference's golden values; the one thing both share is the zero-variance
+guard, :func:`~ksql_udaf_statistics_spark.stats.moments.is_zero_variance`.
+
 Design (SURVEY.md §2.3): every reference accumulator field is a plain sum,
 and ``merge`` is field-wise addition (SkewnessUdaf.java:198-206), which is
 *exactly* Spark's partial/final aggregation contract. So each UDAF becomes
@@ -10,7 +16,9 @@ and ``merge`` is field-wise addition (SkewnessUdaf.java:198-206), which is
 with no custom Catalyst aggregate, no per-row Python, full whole-stage
 codegen, and identical behavior in batch, micro-batch streaming, and
 ``foreachBatch``. Catalyst deduplicates identical aggregate children, so an
-expression that mentions ``sum(x*x)`` three times computes it once.
+expression that mentions ``sum(x*x)`` three times computes it once. Because
+the partial aggregate below the shuffle already reduces each group to one
+row per map task, a hot key costs no more shuffle than a cold one.
 
 Two API levels:
 
@@ -19,15 +27,9 @@ Two API levels:
    shape, README.md:146-156).
 2. **Two-stage sums + finalize** — ``moment_sums()/weighted_sums()`` emit
    aliased sum columns; ``*_from_sums()`` finalizes them. This services
-   salted two-level aggregation for skewed keys, streaming state kept as
-   sums, and re-aggregation of pre-aggregated shards (exact because of the
+   sums computed by hand (the streaming flagship's exploded token sums)
+   and re-aggregation of pre-aggregated shards (exact because of the
    monoid property).
-
-Numerical note: raw power sums Σx⁴ lose precision when |x| is huge; all
-five statistics are shift-invariant (stddev/skew/kurt), so both levels take
-an optional ``center`` pivot that replaces x with (x - center) without
-changing any result. Use a cheap per-table constant (e.g. an approximate
-global mean) at 100 TB scale.
 """
 
 from __future__ import annotations
@@ -37,6 +39,8 @@ from typing import Optional, Union
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .moments import is_zero_variance
+
 ColumnOrName = Union[Column, str]
 
 def _nan() -> Column:
@@ -44,29 +48,22 @@ def _nan() -> Column:
     return F.lit(float("nan"))
 
 
-def _col(c: ColumnOrName) -> Column:
-    return F.col(c) if isinstance(c, str) else c
-
-
-def _centered(c: ColumnOrName, center) -> Column:
-    x = _col(c).cast("double")
-    if center is not None:
-        x = x - (F.lit(center) if not isinstance(center, Column) else center)
-    return x
+def _double(c: ColumnOrName) -> Column:
+    return (F.col(c) if isinstance(c, str) else c).cast("double")
 
 
 # ---------------------------------------------------------------------------
 # Level 2: sum columns (the accumulator Struct, as ordinary columns)
 # ---------------------------------------------------------------------------
 
-def moment_sums(col: ColumnOrName, prefix: str = "m", center=None) -> list[Column]:
+def moment_sums(col: ColumnOrName, prefix: str = "m") -> list[Column]:
     """The unweighted accumulator as aliased aggregate Columns.
 
     Mirrors STRUCT<COUNT, SUM, SUM_SQUARES, SUM_CUBES, SUM_QUARTIC>
     (KurtosisUdaf.java:48-54). Spark's partial aggregation of these IS the
     reference's ``merge``.
     """
-    x = _centered(col, center)
+    x = _double(col)
     x2 = x * x
     return [
         F.count(x).alias(f"{prefix}_n"),
@@ -78,7 +75,7 @@ def moment_sums(col: ColumnOrName, prefix: str = "m", center=None) -> list[Colum
 
 
 def weighted_sums(
-    val: ColumnOrName, weight: ColumnOrName, prefix: str = "w", center=None
+    val: ColumnOrName, weight: ColumnOrName, prefix: str = "w"
 ) -> list[Column]:
     """The weighted accumulator as aliased aggregate Columns.
 
@@ -86,8 +83,8 @@ def weighted_sums(
     SUM_WEIGHT_CUBES, SUM_WEIGHT_QUARTIC> (WeightedKurtosisUdaf.java:49-55)
     where SUM_VALUES = Σw·x (WeightedStdDevUdaf.java:104-107).
     """
-    x = _centered(val, center)
-    w = _col(weight).cast("double")
+    x = _double(val)
+    w = _double(weight)
     wx = w * x
     return [
         F.sum(w).alias(f"{prefix}_sw"),
@@ -107,17 +104,19 @@ def _skewness_finalize(n: Column, s1: Column, s2: Column, s3: Column,
     """map() of SkewnessUdaf.java:153-189 as a Column expression."""
     nd = n.cast("double")
     mean = s1 / nd
-    var = s2 / nd - mean * mean
+    m2 = s2 / nd
+    var = m2 - mean * mean
+    zero_var = is_zero_variance(var, m2)
     if sample:
         var = var * (nd / (nd - 1.0))
-    m3 = s3 / nd - 3.0 * mean * (s2 / nd) + 2.0 * F.pow(mean, 3)
-    skew = m3 / F.pow(F.greatest(var, F.lit(0.0)), 1.5)
+    m3 = s3 / nd - 3.0 * mean * m2 + 2.0 * F.pow(mean, 3)
+    skew = m3 / F.pow(var, 1.5)
     if sample:
         skew = skew * (nd * nd) / ((nd - 1.0) * (nd - 2.0))
     guarded = F.when(n == 0, F.lit(0.0))
     if sample:
         guarded = guarded.when(n < 3, _nan())
-    return guarded.when(var <= 0.0, F.lit(0.0)).otherwise(skew)
+    return guarded.when(zero_var, F.lit(0.0)).otherwise(skew)
 
 
 def _kurtosis_finalize(n: Column, s1: Column, s2: Column, s3: Column,
@@ -125,11 +124,13 @@ def _kurtosis_finalize(n: Column, s1: Column, s2: Column, s3: Column,
     """map() of KurtosisUdaf.java:159-198: population=RAW, sample=excess G2."""
     nd = n.cast("double")
     mean = s1 / nd
-    var = s2 / nd - mean * mean
+    m2 = s2 / nd
+    var = m2 - mean * mean
+    zero_var = is_zero_variance(var, m2)
     m4 = (
         s4 / nd
         - 4.0 * mean * (s3 / nd)
-        + 6.0 * mean * mean * (s2 / nd)
+        + 6.0 * mean * mean * m2
         - 3.0 * F.pow(mean, 4)
     )
     if sample:
@@ -141,7 +142,7 @@ def _kurtosis_finalize(n: Column, s1: Column, s2: Column, s3: Column,
     guarded = F.when(n == 0, F.lit(0.0))
     if sample:
         guarded = guarded.when(n < 4, _nan())
-    return guarded.when(var <= 0.0, F.lit(0.0)).otherwise(kurt)
+    return guarded.when(zero_var, F.lit(0.0)).otherwise(kurt)
 
 
 def skewness_from_sums(prefix: str = "m", sample: bool = False) -> Column:
@@ -166,42 +167,45 @@ def _weighted_parts(prefix: str):
             c(f"{prefix}_swx3"), c(f"{prefix}_swx4"))
 
 
+def _weighted_moments(sw: Column, swx: Column, swx2: Column):
+    """(mean, m2, var) of the weighted accumulator."""
+    mean = swx / sw
+    m2 = swx2 / sw
+    return mean, m2, m2 - mean * mean
+
+
+def _weighted_guard(sw: Column, m2: Column, var: Column, value: Column) -> Column:
+    """``value`` unless Σw == 0 or the variance is zero; then 0.0."""
+    return (
+        F.when(sw == 0.0, F.lit(0.0))
+        .when(is_zero_variance(var, m2), F.lit(0.0))
+        .otherwise(value)
+    )
+
+
 def _stddev_weighted_finalize(sw, swx, swx2) -> Column:
     """map() of WeightedStdDevUdaf.java:122-142."""
-    mean = swx / sw
-    var = swx2 / sw - mean * mean
-    return F.when(sw == 0.0, F.lit(0.0)).otherwise(
-        F.sqrt(F.greatest(var, F.lit(0.0)))
-    )
+    _, m2, var = _weighted_moments(sw, swx, swx2)
+    return _weighted_guard(sw, m2, var, F.sqrt(var))
 
 
 def _skewness_weighted_finalize(sw, swx, swx2, swx3) -> Column:
     """map() of WeightedSkewnessUdaf.java:131-161."""
-    mean = swx / sw
-    var = swx2 / sw - mean * mean
-    m3 = swx3 / sw - 3.0 * mean * (swx2 / sw) + 2.0 * F.pow(mean, 3)
-    return (
-        F.when(sw == 0.0, F.lit(0.0))
-        .when(var <= 0.0, F.lit(0.0))
-        .otherwise(m3 / F.pow(F.greatest(var, F.lit(0.0)), 1.5))
-    )
+    mean, m2, var = _weighted_moments(sw, swx, swx2)
+    m3 = swx3 / sw - 3.0 * mean * m2 + 2.0 * F.pow(mean, 3)
+    return _weighted_guard(sw, m2, var, m3 / F.pow(var, 1.5))
 
 
 def _kurtosis_weighted_finalize(sw, swx, swx2, swx3, swx4) -> Column:
     """map() of WeightedKurtosisUdaf.java:132-161 (RAW, not excess)."""
-    mean = swx / sw
-    var = swx2 / sw - mean * mean
+    mean, m2, var = _weighted_moments(sw, swx, swx2)
     m4 = (
         swx4 / sw
         - 4.0 * mean * (swx3 / sw)
-        + 6.0 * mean * mean * (swx2 / sw)
+        + 6.0 * mean * mean * m2
         - 3.0 * F.pow(mean, 4)
     )
-    return (
-        F.when(sw == 0.0, F.lit(0.0))
-        .when(var <= 0.0, F.lit(0.0))
-        .otherwise(m4 / (var * var))
-    )
+    return _weighted_guard(sw, m2, var, m4 / (var * var))
 
 
 def stddev_weighted_from_sums(prefix: str = "w") -> Column:
@@ -223,85 +227,71 @@ def kurtosis_weighted_from_sums(prefix: str = "w") -> Column:
 # Level 1: one-shot aggregate Columns (SQL-call shape)
 # ---------------------------------------------------------------------------
 
-def skewness(col: ColumnOrName, sample: bool = False, center=None) -> Column:
+def skewness(col: ColumnOrName, sample: bool = False) -> Column:
     """SKEWNESS(val[, isSample]) as a single aggregate Column.
 
     Population form equals Spark's built-in ``F.skewness``; the sample form
     (G1) does NOT — Spark has no sample skewness (SkewnessUdaf.java:62-83).
     """
-    x = _centered(col, center)
+    x = _double(col)
     x2 = x * x
     return _skewness_finalize(F.count(x), F.sum(x), F.sum(x2), F.sum(x2 * x), sample)
 
 
-def kurtosis(col: ColumnOrName, sample: bool = False, center=None) -> Column:
+def kurtosis(col: ColumnOrName, sample: bool = False) -> Column:
     """KURTOSIS(val[, isSample]): population=RAW m4/var², sample=excess G2.
 
     Spark's built-in ``F.kurtosis`` is population *excess* — off by 3 from
     the reference's population convention; never substitute it
     (KurtosisUdafTest.java:122: golden raw 1.4400).
     """
-    x = _centered(col, center)
+    x = _double(col)
     x2 = x * x
     return _kurtosis_finalize(
         F.count(x), F.sum(x), F.sum(x2), F.sum(x2 * x), F.sum(x2 * x2), sample
     )
 
 
-def stddev_weighted(val: ColumnOrName, weight: ColumnOrName, center=None) -> Column:
+def stddev_weighted(val: ColumnOrName, weight: ColumnOrName) -> Column:
     """STDDEV_WEIGHTED(val, weight): weighted population stddev."""
-    x = _centered(val, center)
-    w = _col(weight).cast("double")
+    x = _double(val)
+    w = _double(weight)
     wx = w * x
     return _stddev_weighted_finalize(F.sum(w), F.sum(wx), F.sum(wx * x))
 
 
-def skewness_weighted(val: ColumnOrName, weight: ColumnOrName, center=None) -> Column:
+def skewness_weighted(val: ColumnOrName, weight: ColumnOrName) -> Column:
     """SKEWNESS_WEIGHTED(val, weight): weighted population skewness."""
-    x = _centered(val, center)
-    w = _col(weight).cast("double")
+    x = _double(val)
+    w = _double(weight)
     wx = w * x
     return _skewness_weighted_finalize(
         F.sum(w), F.sum(wx), F.sum(wx * x), F.sum(wx * x * x)
     )
 
 
-def kurtosis_weighted(val: ColumnOrName, weight: ColumnOrName, center=None) -> Column:
+def kurtosis_weighted(val: ColumnOrName, weight: ColumnOrName) -> Column:
     """KURTOSIS_WEIGHTED(val, weight): weighted population RAW kurtosis."""
-    x = _centered(val, center)
-    w = _col(weight).cast("double")
+    x = _double(val)
+    w = _double(weight)
     wx = w * x
     return _kurtosis_weighted_finalize(
         F.sum(w), F.sum(wx), F.sum(wx * x), F.sum(wx * x * x), F.sum(wx * x * x * x)
     )
 
 
-# ---------------------------------------------------------------------------
-# Registry — the @UdafDescription registration surface (UdafMetadata.java:23-31)
-# ---------------------------------------------------------------------------
-
-#: name -> builder; arity/init-arg dispatch becomes Python kwargs
-#: (reference name-based SQL dispatch: SkewnessUdaf.java:24-29,62-83).
-STATS = {
-    "skewness": skewness,
-    "kurtosis": kurtosis,
-    "stddev_weighted": stddev_weighted,
-    "skewness_weighted": skewness_weighted,
-    "kurtosis_weighted": kurtosis_weighted,
-}
-
-#: All five statistics at once over (value[, weight]) — convenience used by
-#: the streaming jobs and the bench flagship query.
+#: All five statistics at once over (value[, weight]); one HashAggregate
+#: pair with deduplicated sum children (test_plan_is_single_hash_aggregate).
 def all_stats(val: ColumnOrName, weight: Optional[ColumnOrName] = None,
-              sample: bool = False, center=None) -> list[Column]:
+              sample: bool = False) -> list[Column]:
     cols = [
-        skewness(val, sample=sample, center=center).alias("skewness"),
-        kurtosis(val, sample=sample, center=center).alias("kurtosis"),
+        skewness(val, sample=sample).alias("skewness"),
+        kurtosis(val, sample=sample).alias("kurtosis"),
     ]
     if weight is not None:
         cols += [
-            stddev_weighted(val, weight, center=center).alias("stddev_weighted"),
-            skewness_weighted(val, weight, center=center).alias("skewness_weighted"),
-            kurtosis_weighted(val, weight, center=center).alias("kurtosis_weighted"),
+            stddev_weighted(val, weight).alias("stddev_weighted"),
+            skewness_weighted(val, weight).alias("skewness_weighted"),
+            kurtosis_weighted(val, weight).alias("kurtosis_weighted"),
         ]
     return cols

@@ -262,41 +262,6 @@ class MergeUpsertParquetSink(ExactlyOnceParquetSink):
         # the table IS the merged state — no read-time resolution needed
         return self.read_all(spark)
 
-    # -- time travel ---------------------------------------------------------
-
-    def snapshots(self) -> list[int]:
-        """Committed snapshot ids (batch ids), oldest first — Iceberg's
-        snapshot log. Only snapshots at or before the current pointer
-        count as committed (a crash can leave a newer orphan directory,
-        which a replay overwrites)."""
-        cur = self._current_snapshot()
-        if cur is None:
-            return []
-        cur_id = int(cur.split("=")[1])
-        data = os.path.join(self.path, "data")
-        out = []
-        for name in os.listdir(data):
-            if name.startswith("snapshot="):
-                sid = int(name.split("=")[1])
-                if sid <= cur_id:
-                    out.append(sid)
-        return sorted(out)
-
-    def read_as_of(self, spark: SparkSession, batch_id: int) -> DataFrame:
-        """Time-travel read: the merged table as of the latest committed
-        snapshot with id <= ``batch_id`` (Iceberg ``VERSION AS OF``).
-        Every snapshot is a full consistent table, so this is just a
-        different directory scan — no reconstruction."""
-        eligible = [s for s in self.snapshots() if s <= batch_id]
-        if not eligible:
-            raise FileNotFoundError(
-                f"no committed snapshot at or before batch {batch_id} "
-                f"under {self.path}"
-            )
-        return spark.read.parquet(
-            os.path.join(self.path, "data", f"snapshot={max(eligible):012d}")
-        )
-
 
 def run_streaming_stats(
     source_df: DataFrame,

@@ -1,103 +1,20 @@
-"""Custom stateful operator: cumulative (unwindowed) statistics per key,
-emitted on every update — the exact shape of the reference's continuous
-CTAS ``SELECT 'singleton' AS id, SKEWNESS(val) ... GROUP BY id EMIT
-CHANGES`` (AllUdafIT.java:593-600), where state lives forever and every
-micro-batch emits the refreshed aggregate.
+"""Custom stateful operator (``applyInPandasWithState``): online sequence
+packing, whose per-source state is one running token count.
 
-Implemented with ``applyInPandasWithState``: the explicit-state twin of
-the sum-column decomposition. State is the accumulator tuple itself
-(count, Σx..Σx⁴, Σw..Σwx⁴ — the reference's Struct,
-KurtosisUdaf.java:48-54 / WeightedKurtosisUdaf.java:49-55); the update is
-the vectorized kernel from stats.moments; emission applies the map()
-formulas. Windowed jobs should keep using the implicit-state aggregation
-(jobs.py) — this operator exists for aggregates with no window to expire,
-where update-mode windows would be wrong and users want a running value.
+Statistics need no custom state: the reference's unwindowed continuous CTAS
+``SELECT 'singleton' AS id, SKEWNESS(val) ... GROUP BY id EMIT CHANGES``
+(AllUdafIT.java:593-600) is an ordinary update-mode aggregation of the sum
+Columns in ``stats/spark_agg.py``, whose state store holds the reference's
+accumulator struct and resumes exactly from a checkpoint.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Optional, Sequence
+from typing import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType, LongType, StringType, StructField, StructType,
-)
-
-from ..stats import moments as M
-
-STATE_SCHEMA = StructType(
-    [StructField("count", LongType())]
-    + [StructField(f, DoubleType()) for f in
-       ["s1", "s2", "s3", "s4", "sw", "swx", "swx2", "swx3", "swx4"]]
-)
-
-
-def _output_schema(keys: Sequence[str]) -> StructType:
-    return StructType(
-        [StructField(k, StringType()) for k in keys]
-        + [
-            StructField("n_rows", LongType()),
-            StructField("skewness", DoubleType()),
-            StructField("skewness_sample", DoubleType()),
-            StructField("kurtosis", DoubleType()),
-            StructField("kurtosis_sample", DoubleType()),
-            StructField("stddev_weighted", DoubleType()),
-            StructField("skewness_weighted", DoubleType()),
-            StructField("kurtosis_weighted", DoubleType()),
-        ]
-    )
-
-
-def cumulative_stats_with_state(
-    df: DataFrame,
-    value: str,
-    weight: Optional[str] = None,
-    keys: Sequence[str] = ("source",),
-) -> DataFrame:
-    """Running all-time statistics per key over a stream.
-
-    Every micro-batch that touches a key emits that key's refreshed
-    cumulative statistics (ksqlDB EMIT CHANGES semantics). State is the
-    merge-able accumulator, so checkpoint resume continues exactly.
-    """
-    keys = list(keys)
-    out_schema = _output_schema(keys)
-
-    def update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            (count, s1, s2, s3, s4, sw, swx, swx2, swx3, swx4) = state.get
-        else:
-            count = 0
-            s1 = s2 = s3 = s4 = sw = swx = swx2 = swx3 = swx4 = 0.0
-        ms = M.MomentState(count, s1, s2, s3, s4)
-        ws = M.WeightedState(sw, swx, swx2, swx3, swx4)
-        for pdf in pdfs:
-            vals = pdf[value].to_numpy()
-            ms = ms.update(vals)
-            if weight is not None:
-                ws = ws.update(vals, pdf[weight].to_numpy())
-        state.update((ms.count, ms.s1, ms.s2, ms.s3, ms.s4,
-                      ws.sw, ws.swx, ws.swx2, ws.swx3, ws.swx4))
-        row = dict(zip(keys, key))
-        row.update(
-            n_rows=ms.count,
-            skewness=M.finalize_skewness(ms),
-            skewness_sample=M.finalize_skewness(ms, sample=True),
-            kurtosis=M.finalize_kurtosis(ms),
-            kurtosis_sample=M.finalize_kurtosis(ms, sample=True),
-            stddev_weighted=M.finalize_stddev_weighted(ws),
-            skewness_weighted=M.finalize_skewness_weighted(ws),
-            kurtosis_weighted=M.finalize_kurtosis_weighted(ws),
-        )
-        yield pd.DataFrame([row])
-
-    return df.groupBy(*keys).applyInPandasWithState(
-        update, out_schema, STATE_SCHEMA, "update", GroupStateTimeout.NoTimeout
-    )
-
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 PACKING_STATE = StructType([StructField("cum_tokens", LongType())])
 

@@ -142,6 +142,19 @@ def test_zero_variance_returns_zero():
     assert finalize_stddev_weighted(w) == 0.0
 
 
+@pytest.mark.parametrize("x", [1.7, 3.3])
+@pytest.mark.parametrize("w", [3.0, 5.0, 7.0])
+def test_one_row_weighted_group_is_zero_variance(w, x):
+    """One weighted row has zero variance, but its power sums leave
+    swx2/sw - mean² = 4.4e-16 at (w=3, x=1.7); an absolute ``var <= 0``
+    guard let that through as skewness -1.9e8, kurtosis 7.2e16 and
+    stddev 2.1e-8. The relative guard returns exactly 0.0."""
+    st = WeightedState.zero().update([x], [w])
+    assert finalize_stddev_weighted(st) == 0.0
+    assert finalize_skewness_weighted(st) == 0.0
+    assert finalize_kurtosis_weighted(st) == 0.0
+
+
 def test_all_zero_weights_return_zero():
     # AllUdafIT.java:181-191,278-288,409-418
     w = WeightedState.zero().update([0.0, 0.0, 0.0], [0.0, 0.0, 0.0])

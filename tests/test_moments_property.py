@@ -79,32 +79,58 @@ def test_integer_weights_are_frequency_weights(pairs):
     assert got_ku == pytest_approx(want_ku)
 
 
-@settings(max_examples=100, deadline=None)
-@given(st.integers(min_value=-1000, max_value=1000),
-       st.integers(min_value=1, max_value=50))
-def test_constant_input_guards(v, n):
-    """Zero variance -> 0.0 (never NaN/inf) on constant input; empty ->
-    0.0; sample variants -> NaN below their minimum n.
+# any float in +-1e3 (subnormals and signed zero included)
+constants = st.floats(min_value=-1000, max_value=1000, allow_nan=False,
+                      allow_infinity=False)
 
-    Constants are INTEGER-valued here: for exactly-representable values
-    the power sums cancel to var == 0 exactly and the reference's guard
-    fires. For arbitrary float constants the raw-power-sum form (which
-    the reference mandates — SkewnessUdaf.java:135-138 stores Σx,Σx²,…)
-    can leave var = +epsilon that slips past the ``var <= 0`` guard and
-    yields a huge-magnitude statistic; the reference's own
-    ``variance == 0`` check has the identical hole, so bit-parity means
-    preserving it. Found by this suite's earlier unrestricted version;
-    documented rather than 'fixed' because any re-guarding (relative
-    epsilon, pre-shifted sums, Welford) would change outputs the oracle
-    SQL reproduces formula-for-formula."""
-    v = float(v)
+
+@settings(max_examples=200, deadline=None)
+@given(constants, st.integers(min_value=1, max_value=50))
+def test_constant_input_guards(v, n):
+    """Zero variance -> exactly 0.0 (never NaN/inf) on constant input;
+    empty -> 0.0; sample variants -> NaN below their minimum n.
+
+    Constants are arbitrary floats: their raw power sums do not cancel to
+    var == 0 exactly (1.7 gives ±1e-16 relative noise), so this checks the
+    relative zero-variance guard (``moments.is_zero_variance``), not just
+    the reference's exact ``== 0`` on integer constants."""
     ms = M.MomentState.zero().update(np.full(n, v))
     if n >= 3:
         assert M.finalize_skewness(ms, sample=True) == 0.0
     else:
         assert math.isnan(M.finalize_skewness(ms, sample=True))
+    if n >= 4:
+        assert M.finalize_kurtosis(ms, sample=True) == 0.0
+    else:
+        assert math.isnan(M.finalize_kurtosis(ms, sample=True))
     assert M.finalize_skewness(ms, sample=False) == 0.0
     assert M.finalize_kurtosis(ms, sample=False) == 0.0
     empty = M.MomentState.zero()
     assert M.finalize_skewness(empty) == 0.0
     assert M.finalize_kurtosis(empty) == 0.0
+
+
+def positive_weights(n, seed, spread):
+    """n weights spread log-uniformly over exp(+-spread), deterministic in seed."""
+    return np.exp(np.random.default_rng(seed).uniform(-spread, spread, n))
+
+
+@settings(max_examples=300, deadline=None)
+@given(constants, st.integers(min_value=1, max_value=2000),
+       st.integers(min_value=0, max_value=2**32 - 1),
+       st.floats(min_value=0.0, max_value=20.0))
+def test_constant_group_finalizes_to_zero(v, n, seed, spread):
+    """A constant group, for any n up to 2000, any positive weights and
+    any value in +-1e3, finalizes to exactly 0.0 for all five UDAFs and
+    both ``sample`` flags (NaN below the sample minimum n)."""
+    vals = np.full(n, v)
+    ms = M.MomentState.zero().update(vals)
+    ws = M.WeightedState.zero().update(vals, positive_weights(n, seed, spread))
+    assert M.finalize_skewness(ms) == 0.0
+    assert M.finalize_kurtosis(ms) == 0.0
+    sk_s, ku_s = M.finalize_skewness(ms, sample=True), M.finalize_kurtosis(ms, sample=True)
+    assert math.isnan(sk_s) if n < 3 else sk_s == 0.0
+    assert math.isnan(ku_s) if n < 4 else ku_s == 0.0
+    assert M.finalize_stddev_weighted(ws) == 0.0
+    assert M.finalize_skewness_weighted(ws) == 0.0
+    assert M.finalize_kurtosis_weighted(ws) == 0.0

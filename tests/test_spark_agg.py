@@ -3,12 +3,14 @@
 Asserts: golden values (same vectors as the reference ITs), one-shot vs
 two-stage equivalence (proving the Spark partial/final merge == the
 reference's ``merge``), cross-checks against Spark built-ins with the
-documented convention adjustments, shift-invariance of the ``center``
-pivot, and NaN edge cases.
+documented convention adjustments, the zero-variance guard on constant
+groups, and NaN edge cases.
 """
 
 import math
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -45,10 +47,10 @@ def test_golden_values_one_shot(golden_df, weighted_df):
 
 def test_two_stage_equals_one_shot(golden_df, weighted_df):
     """sums → re-aggregate → finalize == direct: the merge contract."""
-    # simulate salted two-level aggregation: partial per salt, then merge
+    # two-level aggregation: partial sums per partition, then merge
     partial = (
-        golden_df.withColumn("salt", F.spark_partition_id())
-        .groupBy("salt")
+        golden_df.withColumn("part", F.spark_partition_id())
+        .groupBy("part")
         .agg(*SA.moment_sums("x"))
     )
     merged = partial.agg(
@@ -67,8 +69,8 @@ def test_two_stage_equals_one_shot(golden_df, weighted_df):
     assert row["kus"] == pytest.approx(one(golden_df, SA.kurtosis("x", sample=True)), abs=1e-10)
 
     wpartial = (
-        weighted_df.withColumn("salt", F.spark_partition_id())
-        .groupBy("salt")
+        weighted_df.withColumn("part", F.spark_partition_id())
+        .groupBy("part")
         .agg(*SA.weighted_sums("x", "w"))
     )
     wm = wpartial.agg(*[F.sum(c).alias(c) for c in ["w_sw", "w_swx", "w_swx2", "w_swx3", "w_swx4"]])
@@ -93,23 +95,6 @@ def test_builtin_cross_checks(golden_df):
     ).collect()[0]
     assert row["ours"] == pytest.approx(row["builtin_skew"], abs=1e-8)
     assert row["ours_kurt"] == pytest.approx(row["builtin_kurt"] + 3.0, abs=1e-8)
-
-
-def test_center_shift_invariance(golden_df, weighted_df):
-    for col in [SA.skewness("x", center=10.0), SA.kurtosis("x", sample=True, center=10.0)]:
-        pass
-    assert one(golden_df, SA.skewness("x", center=10.5)) == pytest.approx(
-        one(golden_df, SA.skewness("x")), abs=1e-9
-    )
-    assert one(golden_df, SA.kurtosis("x", center=10.5)) == pytest.approx(
-        one(golden_df, SA.kurtosis("x")), abs=1e-9
-    )
-    assert one(weighted_df, SA.stddev_weighted("x", "w", center=9.0)) == pytest.approx(
-        one(weighted_df, SA.stddev_weighted("x", "w")), abs=1e-9
-    )
-    assert one(weighted_df, SA.kurtosis_weighted("x", "w", center=9.0)) == pytest.approx(
-        one(weighted_df, SA.kurtosis_weighted("x", "w")), abs=1e-9
-    )
 
 
 def test_edge_cases_on_dataframes(spark):
@@ -144,10 +129,68 @@ def test_grouped_stats_on_events(spark, sf_dir):
         assert got[et][1] == pytest.approx(grp["value"].std(ddof=0), abs=1e-8)
 
 
+def _constant_groups(seed=20261019, n_groups=240):
+    """Constant-value groups: value of random sign and magnitude
+    log-uniform over 1e-8..1e3 (every 40th exactly 0), n log-uniform in
+    1..2000,
+    positive weights log-uniform over exp(+-10). Plus the one-row
+    (w in {3, 5, 7}) x (x in {1.7, 3.3}) groups whose absolute-guard
+    results were -1.9e8 / 7.2e16 / 2.1e-8."""
+    rng = np.random.default_rng(seed)
+    groups = [(x, 1, np.array([w])) for w in (3.0, 5.0, 7.0) for x in (1.7, 3.3)]
+    for g in range(n_groups):
+        x = rng.choice([-1.0, 1.0]) * 10.0 ** rng.uniform(-8, 3) if g % 40 else 0.0
+        n = int(np.exp(rng.uniform(0, np.log(2000))))
+        groups.append((float(x), n, np.exp(rng.uniform(-10, 10, n))))
+    return pd.DataFrame({
+        "g": np.concatenate([np.full(n, i) for i, (_, n, _) in enumerate(groups)]),
+        "x": np.concatenate([np.full(n, x) for x, n, _ in groups]),
+        "w": np.concatenate([w for _, _, w in groups]),
+    }), groups
+
+
+def test_constant_groups_finalize_to_zero(spark):
+    """Every UDAF, both ``sample`` flags, exactly 0.0 on every constant
+    group (NaN below the sample minimum n) — all groups in one Spark job,
+    rows shuffled over 4 partitions so partial sums merge."""
+    pdf, groups = _constant_groups()
+    df = spark.createDataFrame(pdf.sample(frac=1.0, random_state=1)).repartition(4)
+    rows = df.groupBy("g").agg(
+        F.count("x").alias("n"),
+        SA.skewness("x").alias("sk"),
+        SA.skewness("x", sample=True).alias("sk_s"),
+        SA.kurtosis("x").alias("ku"),
+        SA.kurtosis("x", sample=True).alias("ku_s"),
+        SA.stddev_weighted("x", "w").alias("sdw"),
+        SA.skewness_weighted("x", "w").alias("skw"),
+        SA.kurtosis_weighted("x", "w").alias("kuw"),
+    ).collect()
+    assert len(rows) == len(groups)
+    for r in rows:
+        ctx = (groups[r["g"]][0], r["n"])
+        for c in ("sk", "ku", "sdw", "skw", "kuw"):
+            assert r[c] == 0.0, (c, ctx, r[c])
+        assert math.isnan(r["sk_s"]) if r["n"] < 3 else r["sk_s"] == 0.0, ctx
+        assert math.isnan(r["ku_s"]) if r["n"] < 4 else r["ku_s"] == 0.0, ctx
+
+
 def test_plan_is_single_hash_aggregate(golden_df):
     """All five one-shot stats over the same column must plan as ONE
     HashAggregate pair (partial+final) with deduped sum children and no
-    Python UDFs — the scale-critical property."""
-    plan = golden_df.agg(*SA.all_stats("x", F.lit(1.0)))._jdf.queryExecution().executedPlan().toString()
-    assert "HashAggregate" in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    Python UDFs — the scale-critical property. Grouped, the partial
+    aggregate (``partial_sum``) sits below the ``Exchange``: each map task
+    combines a hot key to one row before the shuffle, which is why the
+    engine needs no salting for skewed keys."""
+    plans = {
+        "global": golden_df.agg(*SA.all_stats("x", F.lit(1.0))),
+        "grouped": golden_df.groupBy((F.col("x") > 5).alias("k"))
+        .agg(*SA.all_stats("x", F.lit(1.0))),
+    }
+    for name, df in plans.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "HashAggregate" in plan, name
+        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, name
+    grouped = plans["grouped"]._jdf.queryExecution().executedPlan().toString()
+    assert grouped.count("HashAggregate") == 2
+    exchange = grouped.index("Exchange hashpartitioning")
+    assert "partial_sum" in grouped[exchange:], grouped

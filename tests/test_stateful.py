@@ -1,6 +1,7 @@
-"""Custom stateful operator (applyInPandasWithState): cumulative per-key
-stats with EMIT CHANGES semantics, exact across checkpoint resume —
-mirrors the reference's unwindowed continuous CTAS (AllUdafIT.java:593-600)."""
+"""Stateful streaming: cumulative (unwindowed) per-key statistics with
+EMIT CHANGES semantics, exact across checkpoint resume — the reference's
+unwindowed continuous CTAS (AllUdafIT.java:593-600) — and the
+applyInPandasWithState sequence-packing operator."""
 
 import os
 
@@ -10,27 +11,31 @@ from pyspark.sql import functions as F
 from ksql_udaf_statistics_spark.sources.tables import (
     synthesize_token_table, token_value_streams,
 )
-from ksql_udaf_statistics_spark.stats import spark_agg as SA
-from ksql_udaf_statistics_spark.streaming.stateful import cumulative_stats_with_state
+from ksql_udaf_statistics_spark.streaming.jobs import stat_columns
+from ksql_udaf_statistics_spark.streaming.sink import (
+    ExactlyOnceParquetSink, run_streaming_stats,
+)
+
+STAT_COLS = ["skewness", "skewness_sample", "kurtosis", "kurtosis_sample",
+             "stddev_weighted", "skewness_weighted", "kurtosis_weighted"]
+
+
+def cumulative_stats(df):
+    """Running all-time statistics per source: the sum-Column aggregation,
+    whose update-mode state store holds the merge-able accumulator."""
+    return df.groupBy("source").agg(
+        F.count(F.lit(1)).alias("n_rows"), *stat_columns("token_mean", "n_tok")
+    )
 
 
 def run_pass(spark, src_dir, ckpt, sink):
     schema = spark.read.parquet(src_dir).schema
     stream = spark.readStream.schema(schema).parquet(src_dir)
-    agg = cumulative_stats_with_state(stream, value="token_mean", weight="n_tok")
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = run_streaming_stats(stream, sink, ckpt, cumulative_stats, output_mode="update")
     q.awaitTermination(120)
 
 
 def test_cumulative_state_resume_matches_batch(spark, tmp_dir):
-    from ksql_udaf_statistics_spark.streaming.sink import ExactlyOnceParquetSink
-
     src = os.path.join(tmp_dir, "src")
     ckpt = os.path.join(tmp_dir, "ckpt")
     sink = ExactlyOnceParquetSink(os.path.join(tmp_dir, "sink"), ["source"])
@@ -46,23 +51,8 @@ def test_cumulative_state_resume_matches_batch(spark, tmp_dir):
     run_pass(spark, src, ckpt, sink)
 
     got = {r["source"]: r for r in sink.read_current(spark).collect()}
-    # batch oracle over ALL data via the sum-decomposed column path
-    want = {
-        r["source"]: r
-        for r in spark.read.parquet(src)
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            SA.skewness("token_mean").alias("skewness"),
-            SA.skewness("token_mean", sample=True).alias("skewness_sample"),
-            SA.kurtosis("token_mean").alias("kurtosis"),
-            SA.kurtosis("token_mean", sample=True).alias("kurtosis_sample"),
-            SA.stddev_weighted("token_mean", "n_tok").alias("stddev_weighted"),
-            SA.skewness_weighted("token_mean", "n_tok").alias("skewness_weighted"),
-            SA.kurtosis_weighted("token_mean", "n_tok").alias("kurtosis_weighted"),
-        )
-        .collect()
-    }
+    # batch oracle over ALL data
+    want = {r["source"]: r for r in cumulative_stats(spark.read.parquet(src)).collect()}
     # keys touched in pass 2 carry refreshed cumulative values; every other
     # key must already have been emitted in pass 1 — check the union by
     # comparing only keys present in the final memory table of pass 2
@@ -73,8 +63,7 @@ def test_cumulative_state_resume_matches_batch(spark, tmp_dir):
         w = want[s]
         if s in touched:
             assert g["n_rows"] == w["n_rows"], s
-            for c in ["skewness", "skewness_sample", "kurtosis", "kurtosis_sample",
-                      "stddev_weighted", "skewness_weighted", "kurtosis_weighted"]:
+            for c in STAT_COLS:
                 assert g[c] == pytest.approx(w[c], abs=1e-6), (s, c)
 
 

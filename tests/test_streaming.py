@@ -16,11 +16,7 @@ from ksql_udaf_statistics_spark.sources.tables import (
     synthesize_token_table,
     token_value_streams,
 )
-from ksql_udaf_statistics_spark.streaming.jobs import (
-    grouped_stats_apply_in_pandas,
-    salted_group_stats,
-    windowed_stats,
-)
+from ksql_udaf_statistics_spark.streaming.jobs import stat_columns, windowed_stats
 from ksql_udaf_statistics_spark.streaming.join import interval_join
 from ksql_udaf_statistics_spark.streaming.sink import (
     ExactlyOnceParquetSink,
@@ -74,7 +70,7 @@ def test_synthesis_is_deterministic_across_parallelism(spark):
 def test_source_distribution_is_skewed(token_df):
     counts = {r["source"]: r["n"] for r in token_df.groupBy("source").agg(F.count("*").alias("n")).collect()}
     top = max(counts.values())
-    assert top / N_DOCS > 0.2  # heavy head to exercise salting
+    assert top / N_DOCS > 0.2  # heavy head: one hot key
 
 
 def _rows_per_batch(sink, spark):
@@ -121,7 +117,9 @@ def test_stream_matches_batch_oracle(spark, token_df, tmp_dir):
 
 def test_replay_same_batch_is_idempotent(spark, token_df, tmp_dir):
     sink = ExactlyOnceParquetSink(os.path.join(tmp_dir, "sink"), ["source"])
-    agg = salted_group_stats(token_value_streams(token_df), "token_mean", "n_tok")
+    agg = token_value_streams(token_df).groupBy("source").agg(
+        F.count(F.lit(1)).alias("n_rows"), *stat_columns("token_mean", "n_tok")
+    )
     sink(agg, 7)
     before = sorted(map(str, sink.read_current(spark).collect()))
     sink(agg, 7)  # crash-replay of the same micro-batch
@@ -177,34 +175,6 @@ def test_checkpoint_resume_and_late_data(spark, tmp_dir):
     assert_stats_equal(got, want, STAT_COLS, tol=1e-6)
     fresh_win = [r for r in got if str(r["window_start"]).startswith("2024-01-01 01:10")]
     assert fresh_win, "resumed pass must have processed the fresh row"
-
-
-def test_salted_equals_direct(spark, token_df):
-    df = token_value_streams(token_df)
-    from ksql_udaf_statistics_spark.streaming.jobs import stat_columns
-
-    direct = (
-        df.groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n_rows"), *stat_columns("token_mean", "n_tok"))
-        .collect()
-    )
-    salted = salted_group_stats(df, "token_mean", "n_tok", n_salt=8).collect()
-    got = {r["source"]: r for r in salted}
-    for r in direct:
-        g = got[r["source"]]
-        assert g["n_rows"] == r["n_rows"]
-        for c in ["skewness", "kurtosis", "stddev_weighted", "skewness_weighted", "kurtosis_weighted"]:
-            assert g[c] == pytest.approx(r[c], abs=1e-6), (r["source"], c)
-
-
-def test_apply_in_pandas_parity(spark, token_df):
-    df = token_value_streams(token_df)
-    arrow = {r["source"]: r for r in grouped_stats_apply_in_pandas(df, "token_mean", "n_tok").collect()}
-    col = {r["source"]: r for r in salted_group_stats(df, "token_mean", "n_tok").collect()}
-    assert arrow.keys() == col.keys()
-    for s in col:
-        for c in ["skewness", "kurtosis", "stddev_weighted", "skewness_weighted", "kurtosis_weighted"]:
-            assert arrow[s][c] == pytest.approx(col[s][c], abs=1e-6), (s, c)
 
 
 def test_session_window_stats(spark):
@@ -298,6 +268,25 @@ def test_token_value_windowed_stats_matches_pandas(spark):
         if nt.std() > 0:
             m3n = (nt**3).mean() - 3*nt.mean()*(nt**2).mean() + 2*nt.mean()**3
             assert r["skewness_n_tok"] == pytest.approx(m3n / nt.var()**1.5, rel=1e-6, abs=1e-6)
+
+
+@pytest.mark.parametrize("n_tok", [3, 7, 33])
+def test_token_value_windowed_constant_n_tok_is_zero_variance(spark, n_tok):
+    """A window whose docs all have the same n_tok: the 1/n_tok-weighted
+    sums carry rounding noise, and the shared zero-variance guard must
+    still return exactly 0.0 for the n_tok stddev and skewness."""
+    from ksql_udaf_statistics_spark.streaming.jobs import token_value_windowed_stats
+
+    rows = [(f"d{i}", [i + k for k in range(n_tok)], n_tok, "s0",
+             f"2024-01-01 00:0{i % 5}:00") for i in range(11)]
+    df = spark.createDataFrame(rows, "doc_id string, tokens array<int>, n_tok int, "
+                                     "source string, ts string") \
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+    (r,) = token_value_windowed_stats(df, window_size="5 minutes").collect()
+    assert r["n_docs"] == 11 and r["n_tokens"] == 11 * n_tok
+    assert r["mean_n_tok"] == pytest.approx(n_tok, rel=1e-12)
+    assert r["stddev_n_tok"] == 0.0
+    assert r["skewness_n_tok"] == 0.0
 
 
 def test_sliding_window_stream_matches_batch(spark, token_df, tmp_dir):
@@ -664,31 +653,6 @@ def test_sink_serves_only_committed_batches(spark, tmp_dir):
     cur = sink.read_current(spark)
     assert cur.count() == 2
     assert {r["v"] for r in cur.collect()} == {2}
-
-
-def test_merge_upsert_time_travel(spark, tmp_dir):
-    """r5 time travel: every committed batch is a full consistent
-    snapshot; read_as_of(batch_id) serves the table VERSION AS OF that
-    batch (Iceberg snapshot-log semantics), and a replayed batch does not
-    create phantom snapshots beyond the pointer."""
-    from ksql_udaf_statistics_spark.streaming.sink import MergeUpsertParquetSink
-
-    sink = MergeUpsertParquetSink(os.path.join(tmp_dir, "tt"), ["k"])
-    sink(spark.createDataFrame([("a", 1.0), ("b", 2.0)], "k string, v double"), 0)
-    sink(spark.createDataFrame([("b", 20.0), ("c", 3.0)], "k string, v double"), 1)
-    sink(spark.createDataFrame([("a", 100.0)], "k string, v double"), 3)
-
-    assert sink.snapshots() == [0, 1, 3]
-    as_of = lambda b: {(r["k"], r["v"])
-                       for r in sink.read_as_of(spark, b).collect()}
-    assert as_of(0) == {("a", 1.0), ("b", 2.0)}
-    assert as_of(1) == {("a", 1.0), ("b", 20.0), ("c", 3.0)}
-    assert as_of(2) == as_of(1)  # no snapshot 2: latest <= 2 is 1
-    assert as_of(3) == {("a", 100.0), ("b", 20.0), ("c", 3.0)}
-    assert as_of(99) == as_of(3)
-    import pytest as _pytest
-    with _pytest.raises(FileNotFoundError):
-        sink.read_as_of(spark, -1)
 
 
 @pytest.mark.parametrize("sink_cls", ["ExactlyOnceParquetSink", "MergeUpsertParquetSink"])
