@@ -110,11 +110,6 @@ def test_constant_input_guards(v, n):
     assert M.finalize_kurtosis(empty) == 0.0
 
 
-def positive_weights(n, seed, spread):
-    """n weights spread log-uniformly over exp(+-spread), deterministic in seed."""
-    return np.exp(np.random.default_rng(seed).uniform(-spread, spread, n))
-
-
 @settings(max_examples=300, deadline=None)
 @given(constants, st.integers(min_value=1, max_value=2000),
        st.integers(min_value=0, max_value=2**32 - 1),
@@ -124,8 +119,10 @@ def test_constant_group_finalizes_to_zero(v, n, seed, spread):
     any value in +-1e3, finalizes to exactly 0.0 for all five UDAFs and
     both ``sample`` flags (NaN below the sample minimum n)."""
     vals = np.full(n, v)
+    # positive weights, log-uniform over exp(+-spread)
+    weights = np.exp(np.random.default_rng(seed).uniform(-spread, spread, n))
     ms = M.MomentState.zero().update(vals)
-    ws = M.WeightedState.zero().update(vals, positive_weights(n, seed, spread))
+    ws = M.WeightedState.zero().update(vals, weights)
     assert M.finalize_skewness(ms) == 0.0
     assert M.finalize_kurtosis(ms) == 0.0
     sk_s, ku_s = M.finalize_skewness(ms, sample=True), M.finalize_kurtosis(ms, sample=True)
