@@ -29,7 +29,7 @@ Semantics reproduced exactly (with file:line cites into /root/reference):
 All update functions are numpy-vectorized (no per-row Python). The engine
 itself never calls this module: its one implementation of the five UDAFs
 is the sum-Column form in ``stats/spark_agg.py``, which imports only
-:func:`is_zero_variance` from here. This module is the Spark-free mirror
+:func:`is_zero_variance` and its bounds from here. This module is the Spark-free mirror
 that the unit tests pin to the reference's golden values.
 """
 
@@ -42,6 +42,7 @@ import numpy as np
 
 __all__ = [
     "ZERO_VAR_REL",
+    "STDDEV_ZERO_VAR_REL",
     "is_zero_variance",
     "MomentState",
     "WeightedState",
@@ -53,40 +54,52 @@ __all__ = [
 ]
 
 
-#: Relative zero-variance threshold ``c`` of :func:`is_zero_variance`.
+#: Bound ``c`` of :func:`is_zero_variance` for skewness and kurtosis.
 ZERO_VAR_REL = 1e-10
+#: Bound ``c`` of :func:`is_zero_variance` for the weighted stddev.
+STDDEV_ZERO_VAR_REL = 1e-13
 
 
-def is_zero_variance(var, m2):
+def is_zero_variance(var, m2, c=ZERO_VAR_REL):
     """The one zero-variance guard of all five finalizers, numpy and Spark.
 
     ``var`` is the population variance ``m2 - mean²`` computed from the
     raw power sums, and ``m2`` is the second raw moment ``s2/n``
     (``swx2/sw`` weighted). The variance counts as zero when
-    ``var <= ZERO_VAR_REL * m2``. Works on floats and on Spark Columns
-    alike, so the numpy kernel and the Column finalizers share it.
+    ``var <= c * m2``. Works on floats and on Spark Columns alike, so the
+    numpy kernel and the Column finalizers share it. Being relative to
+    ``m2`` rather than ``mean²``, the bound stays defined for mean 0. A
+    negative ``var`` (cancellation below zero) always counts as zero.
 
     The reference tests ``variance == 0`` (SkewnessUdaf.java:173-175).
     That is exact only when the power sums are exact, e.g. for integer
     constants. For a constant group of arbitrary floats, ``m2`` and
     ``mean²`` each carry a rounding error of a few units of 2^-53 per
-    summation step, so ``var`` comes back as ±noise·m2 instead of 0, and
-    the statistic divides by noise^1.5: a one-row group with w=3, x=1.7
-    gives var = 4.4e-16 and skewness -1.9e8. Summing constant groups
-    sequentially, as Spark's ``Sum`` does, up to n = 1e5 rows gave a
-    worst |var|/m2 of 5.0e-12 unweighted and 6.9e-15 weighted, so
-    ``c = 1e-10`` leaves 20x headroom at that size. The noise grows at
-    most linearly with the rows in one sequential partial sum, so a
-    constant group of more than ~1e6 rows in one partition may still
-    escape the guard.
+    summation step, so ``var`` comes back as ±noise·m2 instead of 0: a
+    one-row group with w=3, x=1.7 gives var = 4.4e-16 and skewness
+    -1.9e8. Constant groups summed sequentially, as Spark's ``Sum`` does,
+    with values in ±1e3 and weights up to e^±20, gave a worst |var|/m2 of
+    1.1e-13 unweighted and 8.6e-15 weighted at up to 2000 rows, and
+    5.0e-12 unweighted and 2.9e-14 weighted at 1e5 rows. The noise grows
+    with the rows in one sequential partial sum, so a constant group of
+    many more rows in one partition may still escape the guard.
 
-    Being relative to ``m2`` rather than ``mean²``, the bound stays
-    defined for mean 0. It fires only when σ/|μ| < 1e-5, where the
-    raw-sum third and fourth central moments cancel by a factor of at
-    least 1e15 and carry no correct digit, so no meaningful output
-    changes. A negative ``var`` (cancellation below zero) also fires.
+    ``c`` is sized to what the statistic loses near zero variance:
+
+    - Skewness and kurtosis: ``ZERO_VAR_REL = 1e-10``, 20x above the
+      unweighted noise at 1e5 rows. The bound fires only when
+      σ/|μ| < 1e-5. There the raw-sum third and fourth central moments
+      cancel by a factor of at least 1e15 and carry no correct digit, so
+      0.0 is no worse than the computed value.
+    - Weighted stddev: ``STDDEV_ZERO_VAR_REL = 1e-13``. ``sqrt(var)``
+      needs only ``var`` itself, whose condition number is m2/var, so a
+      variance well above the noise is correct to several digits and
+      must survive: [1e6, 1e6 + 1] has var/m2 = 2.5e-13 and exact sums,
+      and keeps its stddev 0.5. The bound sits 3x above the weighted
+      noise at 1e5 rows and 12x above it at 2000 rows, and it zeroes only
+      σ/|μ| < 3.2e-7, where short sums leave var about 1% of error.
     """
-    return var <= ZERO_VAR_REL * m2
+    return var <= c * m2
 
 
 @dataclass(frozen=True)
@@ -254,7 +267,7 @@ def finalize_stddev_weighted(state: WeightedState) -> float:
     if state.sw == 0.0:
         return 0.0
     _, m2, var = _weighted_mean_m2_var(state)
-    if is_zero_variance(var, m2):
+    if is_zero_variance(var, m2, STDDEV_ZERO_VAR_REL):
         return 0.0
     return math.sqrt(var)
 

@@ -39,7 +39,7 @@ from typing import Optional, Union
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .moments import is_zero_variance
+from .moments import STDDEV_ZERO_VAR_REL, is_zero_variance
 
 ColumnOrName = Union[Column, str]
 
@@ -174,11 +174,11 @@ def _weighted_moments(sw: Column, swx: Column, swx2: Column):
     return mean, m2, m2 - mean * mean
 
 
-def _weighted_guard(sw: Column, m2: Column, var: Column, value: Column) -> Column:
+def _weighted_guard(sw: Column, zero_var: Column, value: Column) -> Column:
     """``value`` unless Σw == 0 or the variance is zero; then 0.0."""
     return (
         F.when(sw == 0.0, F.lit(0.0))
-        .when(is_zero_variance(var, m2), F.lit(0.0))
+        .when(zero_var, F.lit(0.0))
         .otherwise(value)
     )
 
@@ -186,14 +186,15 @@ def _weighted_guard(sw: Column, m2: Column, var: Column, value: Column) -> Colum
 def _stddev_weighted_finalize(sw, swx, swx2) -> Column:
     """map() of WeightedStdDevUdaf.java:122-142."""
     _, m2, var = _weighted_moments(sw, swx, swx2)
-    return _weighted_guard(sw, m2, var, F.sqrt(var))
+    zero_var = is_zero_variance(var, m2, STDDEV_ZERO_VAR_REL)
+    return _weighted_guard(sw, zero_var, F.sqrt(var))
 
 
 def _skewness_weighted_finalize(sw, swx, swx2, swx3) -> Column:
     """map() of WeightedSkewnessUdaf.java:131-161."""
     mean, m2, var = _weighted_moments(sw, swx, swx2)
     m3 = swx3 / sw - 3.0 * mean * m2 + 2.0 * F.pow(mean, 3)
-    return _weighted_guard(sw, m2, var, m3 / F.pow(var, 1.5))
+    return _weighted_guard(sw, is_zero_variance(var, m2), m3 / F.pow(var, 1.5))
 
 
 def _kurtosis_weighted_finalize(sw, swx, swx2, swx3, swx4) -> Column:
@@ -205,7 +206,7 @@ def _kurtosis_weighted_finalize(sw, swx, swx2, swx3, swx4) -> Column:
         + 6.0 * mean * mean * m2
         - 3.0 * F.pow(mean, 4)
     )
-    return _weighted_guard(sw, m2, var, m4 / (var * var))
+    return _weighted_guard(sw, is_zero_variance(var, m2), m4 / (var * var))
 
 
 def stddev_weighted_from_sums(prefix: str = "w") -> Column:

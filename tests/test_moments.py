@@ -155,6 +155,18 @@ def test_one_row_weighted_group_is_zero_variance(w, x):
     assert finalize_kurtosis_weighted(st) == 0.0
 
 
+@pytest.mark.parametrize("x, want", [
+    ([1e6, 1e6 + 1], 0.5),            # exact sums, var/m2 = 2.5e-13
+    ([100.0, 100.001], 5e-4),         # 3-decimal data, var/m2 = 2.5e-11
+])
+def test_stddev_weighted_keeps_small_true_variance(x, want):
+    """The weighted stddev needs only the variance, which stays correct
+    to several digits far below the skewness/kurtosis bound; it is zeroed
+    only below the variance's own rounding noise, not at 1e-10·m2."""
+    st = WeightedState.zero().update(x, [1.0, 1.0])
+    assert finalize_stddev_weighted(st) == pytest.approx(want, rel=1e-6)
+
+
 def test_all_zero_weights_return_zero():
     # AllUdafIT.java:181-191,278-288,409-418
     w = WeightedState.zero().update([0.0, 0.0, 0.0], [0.0, 0.0, 0.0])

@@ -174,6 +174,19 @@ def test_constant_groups_finalize_to_zero(spark):
         assert math.isnan(r["ku_s"]) if r["n"] < 4 else r["ku_s"] == 0.0, ctx
 
 
+def test_stddev_weighted_keeps_small_true_variance(spark):
+    """Column form of ``test_moments.test_stddev_weighted_keeps_small_true_variance``:
+    two-row groups whose variance is tiny next to m2 but well above the
+    rounding noise keep their stddev."""
+    df = spark.createDataFrame(
+        [(0, 1e6, 1.0), (0, 1e6 + 1, 1.0), (1, 100.0, 1.0), (1, 100.001, 1.0)],
+        "g int, x double, w double",
+    )
+    got = dict(df.groupBy("g").agg(SA.stddev_weighted("x", "w").alias("sd")).collect())
+    assert got[0] == pytest.approx(0.5, rel=1e-6)
+    assert got[1] == pytest.approx(5e-4, rel=1e-6)
+
+
 def test_plan_is_single_hash_aggregate(golden_df):
     """All five one-shot stats over the same column must plan as ONE
     HashAggregate pair (partial+final) with deduped sum children and no

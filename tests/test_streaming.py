@@ -270,20 +270,21 @@ def test_token_value_windowed_stats_matches_pandas(spark):
             assert r["skewness_n_tok"] == pytest.approx(m3n / nt.var()**1.5, rel=1e-6, abs=1e-6)
 
 
-@pytest.mark.parametrize("n_tok", [3, 7, 33])
-def test_token_value_windowed_constant_n_tok_is_zero_variance(spark, n_tok):
-    """A window whose docs all have the same n_tok: the 1/n_tok-weighted
-    sums carry rounding noise, and the shared zero-variance guard must
-    still return exactly 0.0 for the n_tok stddev and skewness."""
+@pytest.mark.parametrize("n_tok, n_docs", [(3, 11), (7, 11), (33, 11), (37, 1000)])
+def test_token_value_windowed_constant_n_tok_is_zero_variance(spark, n_tok, n_docs):
+    """A window whose docs all have the same n_tok has zero n_tok
+    variance, however many tokens it holds: the n_tok stddev and
+    skewness are exactly 0.0. (Summing rounded 1/n_tok·n_tokᵏ products
+    left ~1e-12·m2 of noise at 1000 docs.)"""
     from ksql_udaf_statistics_spark.streaming.jobs import token_value_windowed_stats
 
     rows = [(f"d{i}", [i + k for k in range(n_tok)], n_tok, "s0",
-             f"2024-01-01 00:0{i % 5}:00") for i in range(11)]
+             f"2024-01-01 00:0{i % 5}:00") for i in range(n_docs)]
     df = spark.createDataFrame(rows, "doc_id string, tokens array<int>, n_tok int, "
                                      "source string, ts string") \
         .withColumn("ts", F.col("ts").cast("timestamp"))
     (r,) = token_value_windowed_stats(df, window_size="5 minutes").collect()
-    assert r["n_docs"] == 11 and r["n_tokens"] == 11 * n_tok
+    assert r["n_docs"] == n_docs and r["n_tokens"] == n_docs * n_tok
     assert r["mean_n_tok"] == pytest.approx(n_tok, rel=1e-12)
     assert r["stddev_n_tok"] == 0.0
     assert r["skewness_n_tok"] == 0.0
