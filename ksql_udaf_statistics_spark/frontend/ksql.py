@@ -55,6 +55,12 @@ capabilities a ksqlDB user reaches next (r3/r4 additions):
   micro-batch hash-partitions on the new key before the file sink (the
   Spark analogue of producing to a re-keyed topic), and the key is
   recorded for downstream grouping;
+- ``INSERT INTO name SELECT ... FROM src ...`` — ksqlDB's stream-merge
+  persistent query. It publishes each micro-batch as one file into
+  ``name``'s own directory, encoded like ``INSERT ... VALUES`` records,
+  so ``name`` stays one log whoever writes to it and no reader's source
+  set changes. Its published rows belong to ``name``'s topic: they stay
+  when ``src`` is dropped;
 - table-table joins (r5): ``CREATE TABLE t3 AS SELECT ... FROM t1
   [LEFT|FULL [OUTER]] JOIN t2 ON ... [WHERE ...]`` — ksqlDB's changelog
   join, served as a read-time join of the two materialized tables
@@ -76,10 +82,12 @@ differ).
 
 from __future__ import annotations
 
+import glob
 import json
 import math
 import os
 import re
+import shutil
 import uuid
 from dataclasses import dataclass, field
 from typing import Any, Optional
@@ -90,6 +98,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
+    FloatType,
     IntegerType,
     LongType,
     StringType,
@@ -148,9 +157,11 @@ class StreamSpec:
     # partitioned on it, so a downstream CTAS grouping on the key reads
     # co-located input
     key_col: Optional[str] = None
-    # INSERT INTO <this stream> SELECT ... feeders: names of hidden
-    # derived streams whose rows union into this stream at read time
-    # (ksqlDB's stream-merge persistent query)
+    # INSERT INTO <this stream> SELECT ... feeders: the names of the
+    # hidden queries (``derived`` entries with this stream as ``target``)
+    # that publish their rows into this stream's directory. A pull waits
+    # for them before the stream's readers; DROP and the INSERT-time
+    # cycle check walk them.
     feeders: list = field(default_factory=list)
     # the declared WITH (kafka_topic=...) name; None -> the stream name.
     # SHOW TOPICS / PRINT address streams by topic, ksqlDB-style.
@@ -176,6 +187,10 @@ class CsasSpec:
     # writing to a re-keyed topic), and the key is recorded on the
     # registered stream for downstream grouping/joins
     partition_by: Optional[str] = None
+    # INSERT INTO target SELECT ...: the stream whose directory this
+    # query publishes its rows into, in that stream's wire format. None
+    # for a CSAS, which owns a parquet directory of its own.
+    target: Optional[str] = None
 
 
 @dataclass
@@ -572,6 +587,62 @@ _INSERT_VALUES_RE = re.compile(
 )
 
 
+# timestamps on the wire a feeder writes: microseconds and the UTC offset,
+# so a stream's reader gets back the exact instant
+_WIRE_TIMESTAMP = {"timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"}
+
+
+class _FeederWriter:
+    """The foreachBatch writer of an INSERT INTO ... SELECT query.
+
+    Publishes each non-empty micro-batch as one file in the target
+    stream's directory, encoded by the rules ``KsqlEngine._insert`` uses
+    for an INSERT ... VALUES record: json drops NaN to null; delimited is
+    positional in declared-column order, with NaN as the literal ``NaN``
+    and null as the empty field; a synthetic ``rowtime`` gets the publish
+    time.
+
+    Spark writes the batch under a hidden temp directory, which the file
+    source skips, and its one part file is ``os.replace``d into place. The
+    file name depends only on the feeder and the batch id: a replayed
+    batch replaces the same path, and the file source reads each path at
+    most once."""
+
+    def __init__(self, target: StreamSpec, feeder: str):
+        self.target = target
+        # the file source skips names starting with '_' or '.'
+        self.prefix = feeder.lstrip("_")
+        self.ext = "csv" if target.fmt == "csv" else "json"
+
+    def encode(self, df: DataFrame) -> DataFrame:
+        """One wire-format line per row, in column ``value``."""
+        cols = {c: F.col(c) for c in df.columns}
+        if self.target.ts_col == "rowtime" and "rowtime" not in cols:
+            cols["rowtime"] = F.current_timestamp()
+        if self.target.fmt == "csv":
+            row = [
+                cols.get(f.name, F.lit(None).cast(f.dataType)).alias(f.name)
+                for f in self.target.schema.fields
+            ]
+            return df.select(F.to_csv(F.struct(*row), _WIRE_TIMESTAMP).alias("value"))
+        for f in df.schema.fields:
+            if isinstance(f.dataType, (DoubleType, FloatType)):
+                cols[f.name] = F.when(~F.isnan(f.name), F.col(f.name))
+        row = [c.alias(n) for n, c in cols.items()]
+        return df.select(F.to_json(F.struct(*row), _WIRE_TIMESTAMP).alias("value"))
+
+    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        fname = f"{self.prefix}-{batch_id:012d}.{self.ext}"
+        tmp = os.path.join(self.target.path, f".{fname}.tmp")
+        try:
+            self.encode(batch_df).coalesce(1).write.mode("overwrite").text(tmp)
+            for part in glob.glob(os.path.join(tmp, "part-*")):
+                if os.path.getsize(part):
+                    os.replace(part, os.path.join(self.target.path, fname))
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+
+
 class KsqlEngine:
     """Minimal ksqlDB-statement executor over the PySpark engine."""
 
@@ -591,9 +662,6 @@ class KsqlEngine:
         # Spark refuses two active queries with one name in a session, and
         # several engines may share a session
         self._tag = uuid.uuid4().hex[:8]
-        # derived streams a read has caught up at least once: only their
-        # rows can have been served (see the feeder cascade in _drop)
-        self._served: set[str] = set()
         os.makedirs(workdir, exist_ok=True)
 
     # -- public API ----------------------------------------------------------
@@ -687,8 +755,7 @@ class KsqlEngine:
         if head.startswith("DROP STREAM") or head.startswith("DROP TABLE"):
             return self._drop(stmt)
         if head.startswith("SHOW STREAMS"):
-            # hidden INSERT..SELECT feeder streams are internal
-            return sorted(n for n in self.streams if not n.startswith("_ins_"))
+            return sorted(self.streams)
         if head.startswith("SHOW TABLES"):
             return sorted(self.tables)
         if head.startswith("SHOW QUERIES"):
@@ -704,10 +771,7 @@ class KsqlEngine:
             # every registered backing "topic" (stream directory): source
             # streams' declared kafka_topic, derived streams' own name,
             # and CTAS output topics from WITH (KAFKA_TOPIC=...)
-            topics = {
-                sp.topic or n for n, sp in self.streams.items()
-                if not n.startswith("_ins_")
-            }
+            topics = {sp.topic or n for n, sp in self.streams.items()}
             topics |= {
                 str(sp.with_opts.get("kafka_topic", n)).lower()
                 for n, sp in self.tables.items()
@@ -809,8 +873,7 @@ class KsqlEngine:
                 ).collect()
             ]
         # bring the stream fully up to date first: its own CSAS transform
-        # AND any INSERT INTO feeders (refreshing only the CSAS served a
-        # stale merged view when feeders had undrained rows)
+        # and any INSERT INTO feeders
         self._refresh_upstreams(spec.name)
         df = self._stream_df(spec, streaming=False)
         if spec.ts_col in df.columns:
@@ -926,95 +989,51 @@ class KsqlEngine:
             raise KsqlParseError(f"cannot parse DROP: {stmt[:80]!r}")
         kind, name = m.group(1).upper(), m.group(2).lower()
         delete_data = m.group(3) is not None
-        import shutil
 
         if kind == "STREAM":
-            if name in self.streams:
-                # ksqlDB parity: a source with downstream readers cannot
-                # be dropped ("Cannot drop X: the following queries read
-                # from this source"). Visible derived streams block the
-                # drop; hidden INSERT INTO ... SELECT feeders (_ins_*)
-                # are engine-managed and cascade-removed instead — a
-                # dangling feeder would KeyError the target's next
-                # refresh.
-                deps = [
-                    d for d, sp in self.derived.items()
-                    if sp.source == name
-                    or (sp.join and sp.join.get("stream") == name)
-                ]
-                visible = [d for d in deps if not d.startswith("_ins_")]
-                if visible:
-                    raise KsqlParseError(
-                        f"cannot drop stream {name!r}: derived streams "
-                        f"{sorted(visible)} read from it — drop them first"
-                    )
-                tbl_readers = sorted(
-                    t for t, ts in self.tables.items()
-                    if getattr(ts, "source", None) == name
-                )
-                if tbl_readers:
-                    raise KsqlParseError(
-                        f"cannot drop stream {name!r}: tables "
-                        f"{tbl_readers} read from it — drop them first"
-                    )
-                for d in deps:
-                    # materialized = a read has served the feeder's rows
-                    materialized = d in self._served
-                    if materialized and f"csas_{d}" not in self.terminated:
-                        # what it keeps is everything published before
-                        # the DROP
-                        self.refresh_stream(d)
-                    self._stop(f"csas_{d}")
-                    dcsas = self.derived.pop(d, None)
-                    self.terminated.discard(f"csas_{d}")
-                    self._served.discard(d)
-                    if dcsas is not None:
-                        shutil.rmtree(dcsas.checkpoint, ignore_errors=True)
-                    if materialized:
-                        # ksqlDB parity: rows the feeder already produced
-                        # into its target's topic PERSIST after the
-                        # feeder's source is dropped (they are physically
-                        # on the topic). Keep the materialized directory
-                        # registered as a data-only feeder — it just never
-                        # refreshes again (its source is gone; the derived
-                        # entry above is removed, and the refresh paths
-                        # skip feeders with no derived entry).
-                        continue
-                    # never served: remove entirely, with whatever its
-                    # query wrote; targets that lose a feeder change their
-                    # source set, so their downstream state must rebase
-                    dspec = self.streams.pop(d, None)
-                    if dspec is not None:
-                        shutil.rmtree(dspec.path, ignore_errors=True)
-                    for tname, sp in self.streams.items():
-                        if d in sp.feeders:
-                            sp.feeders.remove(d)
-                            self._rebase_downstream(tname)
-            self._stop(f"csas_{name}")
-            spec = self.streams.pop(name, None)
-            csas = self.derived.pop(name, None)
-            self.terminated.discard(f"csas_{name}")
-            self._served.discard(name)
+            spec = self.streams.get(name)
             if spec is None:
                 if "IF EXISTS" in stmt.upper():
                     return
                 raise KsqlParseError(f"unknown stream {name!r}")
-            # the dropped stream's OWN hidden INSERT feeders are
-            # engine-managed too — remove them with their target or they
-            # linger as orphaned registrations
+            # ksqlDB parity: a source with downstream readers cannot be
+            # dropped ("Cannot drop X: the following queries read from
+            # this source"). Derived streams block the drop; INSERT INTO
+            # ... SELECT feeders reading it are removed with it instead.
+            deps = [
+                d for d, sp in self.derived.items()
+                if sp.source == name
+                or (sp.join and sp.join.get("stream") == name)
+            ]
+            visible = [d for d in deps if self.derived[d].target is None]
+            if visible:
+                raise KsqlParseError(
+                    f"cannot drop stream {name!r}: derived streams "
+                    f"{sorted(visible)} read from it — drop them first"
+                )
+            tbl_readers = sorted(
+                t for t, ts in self.tables.items()
+                if getattr(ts, "source", None) == name
+            )
+            if tbl_readers:
+                raise KsqlParseError(
+                    f"cannot drop stream {name!r}: tables "
+                    f"{tbl_readers} read from it — drop them first"
+                )
+            for d in deps:
+                # ksqlDB parity: a feeder's rows are on its target's topic
+                # and stay there; it first publishes everything produced
+                # into its source before the DROP
+                if f"csas_{d}" not in self.terminated:
+                    self.refresh_stream(d)
+                self._remove_feeder(d)
+            # the stream's own feeders go with it
             for f in list(spec.feeders):
-                self._stop(f"csas_{f}")
-                self._served.discard(f)
-                fcsas = self.derived.pop(f, None)
-                fspec = self.streams.pop(f, None)
-                # a TERMINATEd marker must not survive to freeze a
-                # recreated same-named feeder (names are deterministic:
-                # _ins_<target>_<index>)
-                self.terminated.discard(f"csas_{f}")
-                if fspec is not None:
-                    shutil.rmtree(fspec.path, ignore_errors=True)
-                if fcsas is not None:
-                    shutil.rmtree(fcsas.checkpoint, ignore_errors=True)
+                self._remove_feeder(f)
+            self._stop(f"csas_{name}")
+            del self.streams[name]
+            csas = self.derived.pop(name, None)
+            self.terminated.discard(f"csas_{name}")
             if csas is not None:
                 # derived (CSAS) stream: the parquet directory (incl. the
                 # file-sink _spark_metadata manifest) and the CSAS
@@ -1037,13 +1056,20 @@ class KsqlEngine:
                 # the sink materialization and checkpoint are ENGINE-
                 # MANAGED state (same rationale as the CSAS branch above):
                 # a re-created same-named table must start fresh, not
-                # resume a checkpoint whose recorded source count may no
-                # longer match (feeders added while this table was
-                # TERMINATEd were deliberately not rebased) and not serve
-                # stale keys from the old sink. Views have no
-                # materialization of their own to delete.
+                # resume the old checkpoint and serve stale keys from the
+                # old sink. Views have no materialization of their own to
+                # delete.
                 shutil.rmtree(tspec.sink.path, ignore_errors=True)
                 shutil.rmtree(tspec.checkpoint, ignore_errors=True)
+
+    def _remove_feeder(self, name: str) -> None:
+        """Stop an INSERT INTO ... SELECT feeder and delete its checkpoint
+        and registration. The rows it published stay in its target."""
+        self._stop(f"csas_{name}")
+        spec = self.derived.pop(name)
+        self.terminated.discard(f"csas_{name}")
+        self.streams[spec.target].feeders.remove(name)
+        shutil.rmtree(spec.checkpoint, ignore_errors=True)
 
     # -- CREATE STREAM -------------------------------------------------------
 
@@ -1088,7 +1114,7 @@ class KsqlEngine:
 
     # -- CREATE STREAM AS (CSAS) ---------------------------------------------
 
-    def _create_stream_as(self, stmt: str, start: bool = True) -> None:
+    def _create_stream_as(self, stmt: str) -> None:
         """``CREATE STREAM name AS SELECT items FROM src [alias]
         [[LEFT] JOIN other [alias] WITHIN n UNIT ON a.k = b.k]
         [WHERE pred] [EMIT CHANGES]`` — ksqlDB's continuous stateless
@@ -1099,8 +1125,7 @@ class KsqlEngine:
         watermark. The result materializes append-only (parquet +
         file-sink manifest = exactly-once for downstream readers) and
         registers as a stream usable by further CSAS/CTAS/joins. Its
-        persistent query starts here unless ``start`` is False (the
-        caller starts it once the stream is validated)."""
+        persistent query starts here."""
         m = re.match(
             r"CREATE\s+STREAM\s+(\w+)\s*(?:WITH\s*\((.*?)\)\s*)?AS\s+(SELECT\s+.*)$",
             stmt, re.IGNORECASE | re.DOTALL,
@@ -1108,7 +1133,35 @@ class KsqlEngine:
         if not m:
             raise KsqlParseError(f"cannot parse CSAS: {stmt[:80]!r}")
         name = m.group(1).lower()
-        sel = m.group(3)
+        spec, proto = self._csas_spec(name, m.group(3))
+        path = os.path.join(self.workdir, "streams", name)
+        os.makedirs(path, exist_ok=True)
+        src_ts = self.streams[spec.source].ts_col
+        ts_col = src_ts if src_ts in proto.schema.names else None
+        # honor WITH (kafka_topic=...) on the CSAS so SHOW TOPICS / PRINT
+        # address the derived stream by its declared topic name (parsed by
+        # the same helper CREATE STREAM uses)
+        topic = None
+        if m.group(2):
+            t = _parse_with(m.group(2)).get("kafka_topic")
+            topic = str(t).lower() if t is not None else None
+        self.derived[name] = spec
+        self.streams[name] = StreamSpec(
+            name, proto.schema, path, ts_col, fmt="parquet",
+            key_col=spec.partition_by, topic=topic,
+        )
+        try:
+            self._start(f"csas_{name}")
+        except Exception:
+            # a stream whose query cannot start is not created
+            del self.derived[name], self.streams[name]
+            raise
+
+    def _csas_spec(self, name: str, sel: str) -> tuple[CsasSpec, DataFrame]:
+        """Parse the SELECT of a CSAS or of an INSERT INTO ... SELECT into
+        a ``CsasSpec``, and a batch prototype of its output: the prototype
+        fixes the output schema and validates every expression at CREATE
+        time."""
         _KW = r"JOIN|LEFT|WHERE|EMIT|ON|WITHIN|PARTITION|GRACE"
         q = re.match(
             r"SELECT\s+(.*?)\s+FROM\s+(\w+)"
@@ -1165,37 +1218,13 @@ class KsqlEngine:
             checkpoint=os.path.join(self.workdir, "ckpt_csas", name),
             partition_by=partition_by,
         )
-        # batch prototype fixes the output schema (needed by the parquet
-        # stream reader) and validates every expression at CREATE time
         proto = self._csas_transform(spec, streaming=False)
         if partition_by is not None and partition_by not in proto.schema.names:
             raise KsqlParseError(
                 f"PARTITION BY column {partition_by!r} is not in the "
                 f"select list (output columns: {proto.schema.names})"
             )
-        path = os.path.join(self.workdir, "streams", name)
-        os.makedirs(path, exist_ok=True)
-        src_ts = self.streams[source].ts_col
-        ts_col = src_ts if src_ts in proto.schema.names else None
-        # honor WITH (kafka_topic=...) on the CSAS so SHOW TOPICS / PRINT
-        # address the derived stream by its declared topic name (parsed by
-        # the same helper CREATE STREAM uses)
-        topic = None
-        if m.group(2):
-            t = _parse_with(m.group(2)).get("kafka_topic")
-            topic = str(t).lower() if t is not None else None
-        self.derived[name] = spec
-        self.streams[name] = StreamSpec(
-            name, proto.schema, path, ts_col, fmt="parquet",
-            key_col=partition_by, topic=topic,
-        )
-        if start:
-            try:
-                self._start(f"csas_{name}")
-            except Exception:
-                # a stream whose query cannot start is not created
-                del self.derived[name], self.streams[name]
-                raise
+        return spec, proto
 
     def _join_on_sides(self, left_alias: str, right_alias: str,
                        on: str) -> tuple[str, str]:
@@ -1264,10 +1293,11 @@ class KsqlEngine:
         )
 
     def refresh_stream(self, name: str, _chain: tuple = ()) -> None:
-        """Wait until the derived stream's directory holds every upstream
-        record published before the call. Upstream derived streams and
-        INSERT INTO feeders catch up first, so chains propagate; then the
-        stream's own persistent CSAS query (``_catch_up``).
+        """Wait until the query ``csas_<name>`` — a CSAS or an INSERT INTO
+        ... SELECT feeder — has processed every upstream record published
+        before the call. The queries writing into its input streams catch
+        up first, so chains propagate (``_refresh_upstreams``); then its
+        own persistent query (``_catch_up``).
 
         ``_chain`` guards against feeder cycles (INSERT INTO a SELECT
         FROM b; INSERT INTO b SELECT FROM a): a revisit raises a named
@@ -1280,33 +1310,40 @@ class KsqlEngine:
                 + " -> ".join((*_chain, name))
             )
         if f"csas_{name}" in self.terminated:
-            # TERMINATEd CSAS: the derived directory stays at its last
-            # drained state; downstream readers consume that snapshot
+            # TERMINATEd query: what it wrote stays at its last caught-up
+            # state; downstream readers consume that snapshot
             return
         chain = (*_chain, name)
         spec = self.derived[name]
-        ups = [spec.source] + ([spec.join["stream"]] if spec.join else [])
-        for up in ups:
-            if up in self.derived:
-                self.refresh_stream(up, chain)
+        for up in [spec.source] + ([spec.join["stream"]] if spec.join else []):
             if up not in self.streams:
                 raise KsqlParseError(
                     f"stream {name!r} reads from {up!r}, which no longer "
                     f"exists (dropped source)"
                 )
-            for f in self.streams[up].feeders:
-                # data-only feeders (source dropped after rows were
-                # merged) have no derived entry and never refresh
-                if f in self.derived:
-                    self.refresh_stream(f, chain)
+            self._refresh_upstreams(up, chain)
         # a timed-out or failed wait raises: returning would let the
         # downstream CTAS read a partial stream
         self._catch_up(f"csas_{name}", f"stream {name!r}")
-        self._served.add(name)
+
+    def _refresh_upstreams(self, name: str, _chain: tuple = ()) -> None:
+        """Bring a stream up to date: wait for every query writing into
+        it — its own CSAS transform (if derived) and its INSERT INTO ...
+        SELECT feeders."""
+        writers = [name] if name in self.derived else []
+        for w in writers + self.streams[name].feeders:
+            self.refresh_stream(w, _chain)
 
     def _start_csas(self, spec: CsasSpec):
-        out = self.streams[spec.name]
         df = self._csas_transform(spec, streaming=True)
+        query_name = f"csas_{spec.name}_{self._tag}"
+        if spec.target is not None:
+            # INSERT INTO ... SELECT: publish into the target's directory
+            return run_streaming_stats(
+                df, _FeederWriter(self.streams[spec.target], spec.name),
+                spec.checkpoint, lambda batch: batch, output_mode="append",
+                query_name=query_name, processing_time=TRIGGER_INTERVAL,
+            )
         if spec.partition_by is not None:
             # PARTITION BY re-key: hash-partition the micro-batch on the
             # new key before the file sink, so each written file holds
@@ -1315,10 +1352,10 @@ class KsqlEngine:
             df = df.repartition(F.col(spec.partition_by))
         return (
             df.writeStream.format("parquet")
-            .option("path", out.path)
+            .option("path", self.streams[spec.name].path)
             .option("checkpointLocation", spec.checkpoint)
             .outputMode("append")
-            .queryName(f"csas_{spec.name}_{self._tag}")
+            .queryName(query_name)
             .trigger(processingTime=TRIGGER_INTERVAL)
             .start()
         )
@@ -1381,11 +1418,11 @@ class KsqlEngine:
     def _insert_select(self, stmt: str) -> None:
         """``INSERT INTO tgt SELECT ... FROM src [WHERE ...] [EMIT
         CHANGES]`` — ksqlDB's stream-MERGE persistent query: another
-        stream's (transformed) rows flow into ``tgt`` alongside its own.
-        Compiled as a hidden CSAS whose output unions into ``tgt`` at
-        read time (``_stream_df``), refreshed with tgt's other
-        upstreams, so every reader of tgt sees both row sources
-        exactly-once."""
+        stream's (transformed) rows are produced into ``tgt``. Compiled
+        to a hidden persistent query, a feeder, that publishes each
+        micro-batch into ``tgt``'s own directory in ``tgt``'s wire format
+        (``_FeederWriter``): readers of ``tgt`` keep reading one
+        directory, and nothing downstream restarts."""
         m = re.match(r"INSERT\s+INTO\s+(\w+)\s+(SELECT\s+.*)$",
                      stmt, re.IGNORECASE | re.DOTALL)
         if not m:
@@ -1398,34 +1435,23 @@ class KsqlEngine:
                 f"cannot INSERT INTO derived stream {tgt!r} — it is "
                 f"maintained by its own query"
             )
-        tgt_spec = self.streams[tgt]
-        # the first free index: a cascade-removed feeder frees its index,
-        # and reusing a live feeder's name would take over its query,
-        # directory and checkpoint
-        n = len(tgt_spec.feeders)
-        while f"_ins_{tgt}_{n}" in self.streams:
-            n += 1
-        hidden = f"_ins_{tgt}_{n}"
-        self._create_stream_as(f"CREATE STREAM {hidden} AS {sel}", start=False)
+        # a feeder's files are named after it: a unique name keeps a new
+        # feeder from replacing the files an earlier one published
+        hidden = f"_ins_{tgt}_{uuid.uuid4().hex[:8]}"
+        spec, proto = self._csas_spec(hidden, sel)
+        self._check_feeder(spec, proto, tgt)
+        spec.target = tgt
+        self.derived[hidden] = spec
+        self.streams[tgt].feeders.append(hidden)
         try:
-            self._check_feeder(hidden, tgt)
-        except KsqlParseError:
-            # the rejected feeder leaves no registration or files behind
-            import shutil
-
-            bad = self.derived.pop(hidden)
-            bad_spec = self.streams.pop(hidden)
-            shutil.rmtree(bad_spec.path, ignore_errors=True)
-            shutil.rmtree(bad.checkpoint, ignore_errors=True)
+            self._start(f"csas_{hidden}")
+        except Exception:
+            # a feeder whose query cannot start is not created
+            self._remove_feeder(hidden)
             raise
-        tgt_spec.feeders.append(hidden)
-        self._start(f"csas_{hidden}")
-        # downstream checkpoints were pinned to the target's previous
-        # source set — rebase them so they recompute with the new feeder
-        # unioned in instead of failing the source-count assertion
-        self._rebase_downstream(tgt)
 
-    def _check_feeder(self, hidden: str, tgt: str) -> None:
+    def _check_feeder(self, spec: CsasSpec, proto: DataFrame,
+                      tgt: str) -> None:
         """Reject an INSERT INTO ... SELECT feeder that would form a
         cycle or does not fit its target's schema."""
         tgt_spec = self.streams[tgt]
@@ -1433,7 +1459,7 @@ class KsqlEngine:
         # Reject feeder cycles AT INSERT TIME (ksqlDB rejects circular
         # reads too): if the new feeder's transitive upstream graph —
         # CSAS sources, join streams, and other INSERT feeders — reaches
-        # the target, refreshing the target would recurse forever.
+        # the target, its rows would loop back into it forever.
         def _reaches(node: str, goal: str, seen: set) -> bool:
             if node == goal:
                 return True
@@ -1451,26 +1477,24 @@ class KsqlEngine:
                 nxt.extend(ssp.feeders)
             return any(_reaches(x, goal, seen) for x in nxt)
 
-        # walk from the hidden feeder ITSELF so BOTH its CSAS source and
-        # its JOIN side are covered (starting from .source alone missed
-        # INSERT INTO a SELECT ... FROM b JOIN a WITHIN ... — the cycle
-        # through the join stream registered fine and then every refresh
-        # of the target tripped the backstop forever)
-        if _reaches(hidden, tgt, set()):
+        # walk from BOTH the feeder's source and its JOIN side: INSERT
+        # INTO a SELECT ... FROM b JOIN a WITHIN ... is a cycle through
+        # the join stream
+        ups = [spec.source] + ([spec.join["stream"]] if spec.join else [])
+        if any(_reaches(up, tgt, set()) for up in ups):
             raise KsqlParseError(
                 f"INSERT INTO {tgt!r} would create a feeder cycle: its "
                 f"SELECT reads (transitively) from {tgt!r} itself"
             )
-        feeder = self.streams[hidden]
         tgt_cols = set(tgt_spec.schema.names)
-        extra = [c for c in feeder.schema.names if c not in tgt_cols]
+        extra = [c for c in proto.schema.names if c not in tgt_cols]
         if extra:
             raise KsqlParseError(
                 f"INSERT INTO {tgt!r}: select columns {extra} are not in "
                 f"the target schema {sorted(tgt_cols)}"
             )
         if tgt_spec.ts_col not in (None, "rowtime") and \
-                tgt_spec.ts_col not in feeder.schema.names:
+                tgt_spec.ts_col not in proto.schema.names:
             raise KsqlParseError(
                 f"INSERT INTO {tgt!r}: the target's timestamp column "
                 f"{tgt_spec.ts_col!r} must be in the select list (windowed "
@@ -1841,79 +1865,7 @@ class KsqlEngine:
                                        spec.schema).alias("r"))
                 .select("r.*")
             )
-        for fname in spec.feeders:
-            # INSERT INTO ... SELECT rows union in (missing columns —
-            # e.g. the synthetic rowtime — fill with null)
-            df = df.unionByName(
-                self._stream_df(self.streams[fname], streaming),
-                allowMissingColumns=True,
-            )
         return df
-
-    def _rebase_downstream(self, stream_name: str) -> None:
-        """Reset the maintenance state of every CTAS/CSAS reading
-        ``stream_name``. Called when the stream's SOURCE SET changes (an
-        INSERT INTO feeder registered, or a never-materialized feeder
-        cascade-removed): Structured Streaming pins a checkpoint to its
-        exact source list and refuses to resume when the unioned feeder
-        count changes ("There are [N] sources in the checkpoint offsets
-        and now there are [M]"). Sources are replayable files, so a fresh
-        checkpoint + empty sink recomputes the identical table from
-        offset 0 — correctness by recomputation instead of resume. Each
-        affected query is stopped before its state is wiped, and all are
-        restarted afterwards, upstream first, reading the new source set.
-        TERMINATEd consumers keep their frozen state untouched."""
-        import shutil
-
-        seen: set[str] = set()
-        restart: list[str] = []
-
-        def wipe(stream: str) -> None:
-            if stream in seen:
-                return
-            seen.add(stream)
-            for t, ts in self.tables.items():
-                if isinstance(ts, TableViewSpec):
-                    continue  # read-time join: parents rebase themselves
-                if ts.source == stream and f"ctas_{t}" not in self.terminated:
-                    self._stop(f"ctas_{t}")
-                    shutil.rmtree(ts.checkpoint, ignore_errors=True)
-                    shutil.rmtree(ts.sink.path, ignore_errors=True)
-                    restart.append(f"ctas_{t}")
-            for d, dsp in self.derived.items():
-                if (dsp.source == stream
-                        or (dsp.join and dsp.join.get("stream") == stream)) \
-                        and f"csas_{d}" not in self.terminated:
-                    self._stop(f"csas_{d}")
-                    shutil.rmtree(dsp.checkpoint, ignore_errors=True)
-                    out = self.streams[d]
-                    shutil.rmtree(out.path, ignore_errors=True)
-                    os.makedirs(out.path, exist_ok=True)
-                    restart.append(f"csas_{d}")
-                    wipe(d)
-            # a stream that CONSUMES `stream` as an INSERT feeder reads it
-            # through StreamSpec.feeders, not a derived source edge — when
-            # the feeder's output is wiped and recomputed (new file names),
-            # the target's readers would re-ingest the rewritten files on
-            # top of their old checkpoints and double-count, so rebase
-            # them too
-            for tname, sp in self.streams.items():
-                if stream in sp.feeders:
-                    wipe(tname)
-
-        wipe(stream_name)
-        for qid in dict.fromkeys(restart):
-            if self._persistent(qid):
-                self._start(qid)
-
-    def _refresh_upstreams(self, name: str) -> None:
-        """Bring a stream's inputs up to date: its own CSAS transform (if
-        derived) and any INSERT INTO ... SELECT feeders."""
-        if name in self.derived:
-            self.refresh_stream(name)
-        for f in self.streams[name].feeders:
-            if f in self.derived:  # data-only feeders never refresh
-                self.refresh_stream(f)
 
     def _build_agg(self, spec: TableSpec, df: DataFrame) -> DataFrame:
         stream_spec = self.streams[spec.source]

@@ -283,6 +283,38 @@ def q_tumbling(spark, sf_dir):
     )
 
 
+def _ksql_e2e_pull(spark, sf_dir, stream: str, columns: str,
+                   select: str) -> list:
+    """The ksql_e2e_* queries' one engine run: bulk-produce the events
+    table's ``columns`` as JSON lines into the declared stream ``stream``
+    (timestamp ``ts``), create the table ``<stream>_stats`` as ``select``
+    through KsqlEngine, and return its pull query's rows. The engine's
+    queries stop and its temporary work directory is removed before the
+    rows are returned."""
+    import shutil
+    import tempfile
+
+    from ..frontend import KsqlEngine
+
+    work = tempfile.mkdtemp(prefix=f"kuss_ksql_{stream}_")
+    eng = KsqlEngine(spark, work)
+    try:
+        eng.execute(
+            f"CREATE STREAM {stream} ({columns}) "
+            f"WITH (kafka_topic='{stream}', value_format='json', timestamp='ts');"
+        )
+        names = [c.split()[0] for c in columns.split(",")]
+        _load(spark, sf_dir, "events").select(*names) \
+            .coalesce(4).write.mode("append").json(eng.streams[stream].path)
+        eng.execute(f"CREATE TABLE {stream}_stats AS {select}")
+        return eng.execute(f"SELECT * FROM {stream}_stats;")
+    finally:
+        # the pulled rows are already on the driver; stop the engine's
+        # queries before their work directory goes
+        eng.close()
+        shutil.rmtree(work, ignore_errors=True)
+
+
 @register(
     "ksql_e2e_windowed_stats",
     """WITH s AS (
@@ -311,34 +343,16 @@ def q_ksql_e2e_windowed_stats(spark, sf_dir):
     pull, and the pulled rows must hash-match DuckDB computing the same
     statistics from the parquet directly. Proves the whole dialect path
     end-to-end, not just the operators under it."""
-    import shutil
-    import tempfile
-
-    from ..frontend import KsqlEngine
-
-    work = tempfile.mkdtemp(prefix="kuss_ksql_e2e_")
-    eng = KsqlEngine(spark, work)
-    try:
-        eng.execute(
-            "CREATE STREAM ev (ts TIMESTAMP, event_type VARCHAR, value DOUBLE) "
-            "WITH (kafka_topic='ev', value_format='json', timestamp='ts');"
-        )
-        _load(spark, sf_dir, "events").select("ts", "event_type", "value") \
-            .coalesce(4).write.mode("append").json(eng.streams["ev"].path)
-        eng.execute(
-            "CREATE TABLE ev_stats AS SELECT WINDOWSTART AS window_start, "
-            "event_type AS event_type, COUNT(*) AS n_rows, "
-            "SKEWNESS(value) AS skew_pop, SKEWNESS(value, true) AS skew_sample, "
-            "STDDEV_WEIGHTED(value, 1) AS stddev_pop "
-            "FROM ev WINDOW TUMBLING (SIZE 1 HOURS) "
-            "GROUP BY event_type EMIT CHANGES;"
-        )
-        rows = eng.execute("SELECT * FROM ev_stats;")
-    finally:
-        # the pulled rows are already on the driver; stop the engine's
-        # queries before their work directory goes
-        eng.close()
-        shutil.rmtree(work, ignore_errors=True)
+    rows = _ksql_e2e_pull(
+        spark, sf_dir, "ev",
+        "ts TIMESTAMP, event_type VARCHAR, value DOUBLE",
+        "SELECT WINDOWSTART AS window_start, "
+        "event_type AS event_type, COUNT(*) AS n_rows, "
+        "SKEWNESS(value) AS skew_pop, SKEWNESS(value, true) AS skew_sample, "
+        "STDDEV_WEIGHTED(value, 1) AS stddev_pop "
+        "FROM ev WINDOW TUMBLING (SIZE 1 HOURS) "
+        "GROUP BY event_type EMIT CHANGES;",
+    )
     out = spark.createDataFrame(
         [(r["window_start"], r["event_type"], r["n_rows"], r["skew_pop"],
           r["skew_sample"], r["stddev_pop"]) for r in rows],
@@ -377,33 +391,15 @@ def q_ksql_e2e_hopping_stats(spark, sf_dir):
     then ``WINDOW HOPPING (SIZE 2 HOURS, ADVANCE BY 1 HOUR)`` through
     KsqlEngine — every event lands in two overlapping windows — pulled
     and hash-matched against DuckDB's offset-unnest reconstruction."""
-    import shutil
-    import tempfile
-
-    from ..frontend import KsqlEngine
-
-    work = tempfile.mkdtemp(prefix="kuss_ksql_hop_")
-    eng = KsqlEngine(spark, work)
-    try:
-        eng.execute(
-            "CREATE STREAM hev (ts TIMESTAMP, event_type VARCHAR, value DOUBLE) "
-            "WITH (kafka_topic='hev', value_format='json', timestamp='ts');"
-        )
-        _load(spark, sf_dir, "events").select("ts", "event_type", "value") \
-            .coalesce(4).write.mode("append").json(eng.streams["hev"].path)
-        eng.execute(
-            "CREATE TABLE hev_stats AS SELECT WINDOWSTART AS window_start, "
-            "event_type AS event_type, COUNT(*) AS n_rows, "
-            "STDDEV_WEIGHTED(value, 1) AS stddev_pop "
-            "FROM hev WINDOW HOPPING (SIZE 2 HOURS, ADVANCE BY 1 HOUR) "
-            "GROUP BY event_type EMIT CHANGES;"
-        )
-        rows = eng.execute("SELECT * FROM hev_stats;")
-    finally:
-        # the pulled rows are already on the driver; stop the engine's
-        # queries before their work directory goes
-        eng.close()
-        shutil.rmtree(work, ignore_errors=True)
+    rows = _ksql_e2e_pull(
+        spark, sf_dir, "hev",
+        "ts TIMESTAMP, event_type VARCHAR, value DOUBLE",
+        "SELECT WINDOWSTART AS window_start, "
+        "event_type AS event_type, COUNT(*) AS n_rows, "
+        "STDDEV_WEIGHTED(value, 1) AS stddev_pop "
+        "FROM hev WINDOW HOPPING (SIZE 2 HOURS, ADVANCE BY 1 HOUR) "
+        "GROUP BY event_type EMIT CHANGES;",
+    )
     out = spark.createDataFrame(
         [(r["window_start"], r["event_type"], r["n_rows"], r["stddev_pop"])
          for r in rows],
@@ -445,33 +441,15 @@ def q_ksql_e2e_session_stats(spark, sf_dir):
     hash-matched against DuckDB's gaps-and-islands reconstruction. Max
     is the aggregated stat (order-independent — exact across engines
     regardless of accumulation order)."""
-    import shutil
-    import tempfile
-
-    from ..frontend import KsqlEngine
-
-    work = tempfile.mkdtemp(prefix="kuss_ksql_sess_")
-    eng = KsqlEngine(spark, work)
-    try:
-        eng.execute(
-            "CREATE STREAM sev (ts TIMESTAMP, user_id BIGINT, value DOUBLE) "
-            "WITH (kafka_topic='sev', value_format='json', timestamp='ts');"
-        )
-        _load(spark, sf_dir, "events").select("ts", "user_id", "value") \
-            .coalesce(4).write.mode("append").json(eng.streams["sev"].path)
-        eng.execute(
-            "CREATE TABLE sev_stats AS SELECT user_id AS user_id, "
-            "WINDOWSTART AS session_start, COUNT(*) AS n_events, "
-            "MAX(value) AS max_value "
-            "FROM sev WINDOW SESSION (30 MINUTES) "
-            "GROUP BY user_id EMIT CHANGES;"
-        )
-        rows = eng.execute("SELECT * FROM sev_stats;")
-    finally:
-        # the pulled rows are already on the driver; stop the engine's
-        # queries before their work directory goes
-        eng.close()
-        shutil.rmtree(work, ignore_errors=True)
+    rows = _ksql_e2e_pull(
+        spark, sf_dir, "sev",
+        "ts TIMESTAMP, user_id BIGINT, value DOUBLE",
+        "SELECT user_id AS user_id, "
+        "WINDOWSTART AS session_start, COUNT(*) AS n_events, "
+        "MAX(value) AS max_value "
+        "FROM sev WINDOW SESSION (30 MINUTES) "
+        "GROUP BY user_id EMIT CHANGES;",
+    )
     out = spark.createDataFrame(
         [(r["user_id"], r["session_start"], r["n_events"], r["max_value"])
          for r in rows],

@@ -29,7 +29,7 @@ Semantics reproduced exactly (with file:line cites into /root/reference):
 All update functions are numpy-vectorized (no per-row Python). The engine
 itself never calls this module: its one implementation of the five UDAFs
 is the sum-Column form in ``stats/spark_agg.py``, which imports only
-:func:`is_zero_variance` and its bounds from here. This module is the Spark-free mirror
+:func:`is_zero_variance`, its bounds and ``MIN_VAR_SQUARED`` from here. This module is the Spark-free mirror
 that the unit tests pin to the reference's golden values.
 """
 
@@ -43,6 +43,7 @@ import numpy as np
 __all__ = [
     "ZERO_VAR_REL",
     "STDDEV_ZERO_VAR_REL",
+    "MIN_VAR_SQUARED",
     "is_zero_variance",
     "MomentState",
     "WeightedState",
@@ -100,6 +101,24 @@ def is_zero_variance(var, m2, c=ZERO_VAR_REL):
       σ/|μ| < 3.2e-7, where short sums leave var about 1% of error.
     """
     return var <= c * m2
+
+
+#: The smallest positive double: the floor of the kurtosis divisor ``var²``.
+MIN_VAR_SQUARED = 5e-324
+
+
+def _over_var_squared(m4: float, var: float) -> float:
+    """``m4 / var²`` for a variance ``var > 0``.
+
+    ``var * var`` underflows to 0.0 when ``var`` < ~1.5e-162 (|x| below
+    ~1e-81), where ``m4 / (var * var)`` would raise ``ZeroDivisionError``
+    (and fail a Spark job under ANSI). The divisor is floored at the
+    smallest positive double instead, so the result stays finite; m4 has
+    underflowed there too, so no correct value exists. Where ``var * var``
+    is a nonzero double, the floor changes nothing and the result is
+    exactly ``m4 / (var * var)``. ``spark_agg`` divides the same way.
+    """
+    return m4 / max(var * var, MIN_VAR_SQUARED)
 
 
 @dataclass(frozen=True)
@@ -244,7 +263,7 @@ def finalize_kurtosis(state: MomentState, sample: bool = False) -> float:
     )
     if sample:
         var *= n / (n - 1.0)
-    kurt = m4 / (var * var)
+    kurt = _over_var_squared(m4, var)
     if sample:
         kurt = ((n * n * (n + 1.0)) / ((n - 1.0) * (n - 2.0) * (n - 3.0))) * kurt - (
             3.0 * (n - 1.0) * (n - 1.0)
@@ -300,4 +319,4 @@ def finalize_kurtosis_weighted(state: WeightedState) -> float:
         + 6.0 * mean * mean * m2
         - 3.0 * mean**4
     )
-    return m4 / (var * var)
+    return _over_var_squared(m4, var)

@@ -3,8 +3,9 @@
 This is the engine's only implementation of the five UDAFs: every declared
 query, front-end CTAS, streaming job and benchmark reaches them here.
 ``stats/moments.py`` is the Spark-free mirror the unit tests pin to the
-reference's golden values; the one thing both share is the zero-variance
-guard, :func:`~ksql_udaf_statistics_spark.stats.moments.is_zero_variance`.
+reference's golden values; they share the zero-variance guard,
+:func:`~ksql_udaf_statistics_spark.stats.moments.is_zero_variance`, and the
+kurtosis divisor floor ``MIN_VAR_SQUARED``.
 
 Design (SURVEY.md §2.3): every reference accumulator field is a plain sum,
 and ``merge`` is field-wise addition (SkewnessUdaf.java:198-206), which is
@@ -39,7 +40,7 @@ from typing import Optional, Union
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .moments import STDDEV_ZERO_VAR_REL, is_zero_variance
+from .moments import MIN_VAR_SQUARED, STDDEV_ZERO_VAR_REL, is_zero_variance
 
 ColumnOrName = Union[Column, str]
 
@@ -50,6 +51,14 @@ def _nan() -> Column:
 
 def _double(c: ColumnOrName) -> Column:
     return (F.col(c) if isinstance(c, str) else c).cast("double")
+
+
+def _over_var_squared(m4: Column, var: Column) -> Column:
+    """``m4 / var²`` for a variance ``var > 0``, with the divisor floored
+    at ``MIN_VAR_SQUARED`` as in
+    :func:`~ksql_udaf_statistics_spark.stats.moments._over_var_squared`:
+    an underflowed ``var²`` cannot fail the job under ANSI."""
+    return m4 / F.greatest(var * var, F.lit(MIN_VAR_SQUARED))
 
 
 # ---------------------------------------------------------------------------
@@ -135,7 +144,7 @@ def _kurtosis_finalize(n: Column, s1: Column, s2: Column, s3: Column,
     )
     if sample:
         var = var * (nd / (nd - 1.0))
-    kurt = m4 / (var * var)
+    kurt = _over_var_squared(m4, var)
     if sample:
         kurt = ((nd * nd * (nd + 1.0)) / ((nd - 1.0) * (nd - 2.0) * (nd - 3.0))) * kurt \
             - (3.0 * (nd - 1.0) * (nd - 1.0)) / ((nd - 2.0) * (nd - 3.0))
@@ -206,7 +215,7 @@ def _kurtosis_weighted_finalize(sw, swx, swx2, swx3, swx4) -> Column:
         + 6.0 * mean * mean * m2
         - 3.0 * F.pow(mean, 4)
     )
-    return _weighted_guard(sw, is_zero_variance(var, m2), m4 / (var * var))
+    return _weighted_guard(sw, is_zero_variance(var, m2), _over_var_squared(m4, var))
 
 
 def stddev_weighted_from_sums(prefix: str = "w") -> Column:

@@ -1024,8 +1024,9 @@ def test_insert_select_transitive_cycle_rejected(engine):
 
 def test_drop_stream_with_dependents(engine):
     """r6 ADVICE: DROP of a stream with visible derived readers is
-    refused (ksqlDB parity); hidden INSERT feeders cascade-remove with
-    their source or target instead of dangling into a KeyError."""
+    refused (ksqlDB parity); hidden INSERT feeders are removed with their
+    source or target instead of dangling into a KeyError, and the rows
+    they published stay on the target's topic."""
     engine.execute(
         "CREATE STREAM src_s (k VARCHAR, val DOUBLE) "
         "WITH (kafka_topic='src_s', value_format='json');"
@@ -1036,8 +1037,8 @@ def test_drop_stream_with_dependents(engine):
         engine.execute("DROP STREAM src_s;")
     engine.execute("DROP STREAM der_s; DROP STREAM src_s;")
     assert "src_s" not in engine.execute("SHOW STREAMS;")
-    # feeder cascade: dropping the feeder's SOURCE removes the hidden
-    # feeder; the target keeps working on its own rows afterwards
+    # dropping the feeder's SOURCE removes the hidden feeder; the target
+    # keeps working on its own rows afterwards
     engine.execute(
         "CREATE STREAM tgt_s (k VARCHAR, val DOUBLE) "
         "WITH (kafka_topic='tgt_s', value_format='json');"
@@ -1049,19 +1050,18 @@ def test_drop_stream_with_dependents(engine):
         "CREATE TABLE tgt_tot AS SELECT k AS k, SUM(val) AS s "
         "FROM tgt_s GROUP BY k EMIT CHANGES;"
     )
-    # drain the feeder so side_s's row is physically merged into tgt_s
     rows = sorted((r["k"], r["s"]) for r in engine.execute("SELECT * FROM tgt_tot;"))
     assert rows == [("s", 2.0), ("t", 1.0)]
     engine.execute("DROP STREAM side_s;")
     # ksqlDB parity: rows the feeder already produced into the target's
-    # topic PERSIST after the feeder's source is dropped; the feeder
-    # becomes data-only (never refreshes, never listed, no KeyError)
+    # topic PERSIST after the feeder's source is dropped
     engine.execute("INSERT INTO tgt_s (k, val) VALUES ('t', 3.0);")
     rows = sorted((r["k"], r["s"]) for r in engine.execute("SELECT * FROM tgt_tot;"))
     assert rows == [("s", 2.0), ("t", 4.0)]
     assert all(not s.startswith("_ins_") for s in engine.execute("SHOW STREAMS;"))
-    # a feeder that never materialized (no drain between the INSERT
-    # ... SELECT and the DROP) is removed entirely — nothing was merged
+    # DROP of the source first publishes what the feeder had not yet
+    # produced: its rows are on the target's topic too, whether or not a
+    # read served them before the DROP
     engine.execute(
         "CREATE STREAM side2_s (k VARCHAR, val DOUBLE) "
         "WITH (kafka_topic='side2_s', value_format='json');"
@@ -1070,7 +1070,7 @@ def test_drop_stream_with_dependents(engine):
         "DROP STREAM side2_s;"
     )
     rows = sorted((r["k"], r["s"]) for r in engine.execute("SELECT * FROM tgt_tot;"))
-    assert rows == [("s", 2.0), ("t", 4.0)]
+    assert rows == [("s", 2.0), ("t", 4.0), ("z", 9.0)]
 
 
 def test_terminate_show_topics_print(engine):
@@ -1121,10 +1121,10 @@ def test_terminate_show_topics_print(engine):
 def test_dependency_hardening_r6(engine):
     """r6 review fixes: (a) INSERT cycle through the hidden CSAS's JOIN
     side is rejected at INSERT time; (b) DROP STREAM with a CTAS table
-    reader is refused by name, ksqlDB-parity; (c) a TERMINATEd-then-
-    dropped feeder's marker does not freeze a recreated same-named
-    feeder; (d) PRINT drains INSERT feeders before tailing; (e) PRINT
-    works on CTAS output topics SHOW TOPICS lists."""
+    reader is refused by name, ksqlDB-parity; (c) a feeder TERMINATEd
+    and then dropped with its target leaves no marker that freezes a
+    recreated feeder; (d) PRINT drains INSERT feeders before tailing;
+    (e) PRINT works on CTAS output topics SHOW TOPICS lists."""
     # (a) cycle through the join side of the feeder's SELECT (the
     # stream-stream interval join needs distinct column names per side)
     engine.execute(
@@ -1153,7 +1153,9 @@ def test_dependency_hardening_r6(engine):
     engine.execute("DROP STREAM ja;")  # now fine
 
     # (c) TERMINATE ALL marks hidden feeders; DROP of the target must
-    # clear those markers so a recreated feeder is not silently frozen
+    # clear those markers so a recreated feeder is not silently frozen.
+    # The first feeder's row stays on the kept tz topic (no DELETE
+    # TOPIC), and the recreated feeder produces it again.
     engine.execute(
         "CREATE STREAM tz (k VARCHAR, val DOUBLE) "
         "WITH (kafka_topic='tz', value_format='json');"
@@ -1170,7 +1172,7 @@ def test_dependency_hardening_r6(engine):
         "FROM tz GROUP BY k EMIT CHANGES;"
     )
     rows = {r["k"]: r["s"] for r in engine.execute("SELECT * FROM tz_tot;")}
-    assert rows == {"m": 5.0}  # the recreated feeder drains
+    assert rows == {"m": 10.0}  # the recreated feeder drains
 
     # (d) PRINT of a stream with an undrained feeder shows the merged view
     engine.execute(
@@ -1194,11 +1196,9 @@ def test_dependency_hardening_r6(engine):
     recs = engine.execute("PRINT 'pa_out';")
     assert len(recs) == 2 and any('"k":"p"' in r for r in recs)
 
-    # (f) rebasing a hidden feeder (because its SOURCE's source set
-    # changed) must also rebase the feeder's TARGET's readers: the
-    # feeder's output is wiped and recomputed under NEW file names, and a
-    # reader resuming its old checkpoint would re-ingest every rewritten
-    # row on top of its existing aggregation state (double-count)
+    # (f) a feeder whose SOURCE gains a feeder of its own: the new rows
+    # propagate through the chain into the first feeder's target, and
+    # the target's readers count no row twice
     engine.execute(
         "CREATE STREAM fa (k VARCHAR, val DOUBLE) "
         "WITH (kafka_topic='fa', value_format='json');"
@@ -1412,9 +1412,10 @@ def test_drop_and_recreate_runs_one_fresh_query(engine, spark):
     assert len(_active(spark, "ctas_dq_tot")) == 1
 
 
-def test_feeder_restarts_the_target_table_query(engine, spark):
-    """Registering an INSERT INTO ... SELECT feeder restarts the target
-    stream's CTAS on a wiped checkpoint; its pull equals the same table
+def test_feeder_leaves_the_target_table_query_running(engine, spark):
+    """Registering an INSERT INTO ... SELECT feeder restarts nothing
+    downstream: the target stream's CTAS keeps running with the same
+    run id and its committed batches, and its pull equals the same table
     computed from offset 0 by a query created afterwards."""
     engine.execute(
         "CREATE STREAM ft (k VARCHAR, val DOUBLE) "
@@ -1426,11 +1427,13 @@ def test_feeder_restarts_the_target_table_query(engine, spark):
     )
     engine.execute(_inserts("ft", ["a", "b", "a"]))
     assert _counts(engine.execute("SELECT * FROM ft_tot;")) == {"a": 2, "b": 1}
-    before = engine.queries["ctas_ft_tot"]
+    query = engine.queries["ctas_ft_tot"]
+    run_id = query.runId
+    committed = engine.tables["ft_tot"].sink.committed_batches()
     engine.execute(_inserts("fs", ["b", "c"]) + "INSERT INTO ft SELECT k, val FROM fs;")
-    after = engine.queries["ctas_ft_tot"]
-    assert not before.isActive and after.isActive
-    assert after.runId != before.runId
+    assert engine.queries["ctas_ft_tot"] is query and query.isActive
+    assert query.runId == run_id
+    assert engine.tables["ft_tot"].sink.committed_batches()[:len(committed)] == committed
     engine.execute(
         "CREATE TABLE ft_fresh AS SELECT k AS k, COUNT(*) AS n "
         "FROM ft GROUP BY k EMIT CHANGES;"
@@ -1456,9 +1459,10 @@ def test_query_stopped_outside_the_engine_fails_one_pull(engine, spark):
 
 
 def test_feeder_after_a_removed_feeder_gets_a_free_name(engine):
-    """A feeder registered after an earlier one was cascade-removed does
-    not take over a live feeder's name, and with it its query, directory
-    and checkpoint: both live feeders' rows reach the target."""
+    """A feeder registered after an earlier one was removed does not
+    take over a live feeder's name, and with it its query and checkpoint:
+    both live feeders' rows reach the target, and so does the row the
+    removed feeder published before its source was dropped."""
     engine.execute("".join(
         f"CREATE STREAM {s} (k VARCHAR, val DOUBLE) "
         f"WITH (kafka_topic='{s}', value_format='json');"
@@ -1471,22 +1475,122 @@ def test_feeder_after_a_removed_feeder_gets_a_free_name(engine):
         "CREATE TABLE nt_tot AS SELECT k AS k, COUNT(*) AS n "
         "FROM nt GROUP BY k EMIT CHANGES;"
     ))
-    assert _counts(engine.execute("SELECT * FROM nt_tot;")) == {"b": 1, "c": 1}
+    assert _counts(engine.execute("SELECT * FROM nt_tot;")) == {"a": 1, "b": 1, "c": 1}
 
 
-@pytest.mark.parametrize("via_csas", [False, True], ids=["source", "csas"])
-def test_every_insert_is_visible_to_the_next_pull(engine, via_csas):
+def test_replayed_feeder_batch_replaces_its_file(engine, spark):
+    """A feeder's batch writer called twice with one batch id (a replay
+    after a crash before the batch commit) leaves one file, and the
+    target's readers count its rows once."""
+    from ksql_udaf_statistics_spark.frontend.ksql import _FeederWriter
+
+    _count_table(engine, "rp")
+    writer = _FeederWriter(engine.streams["rp"], "_ins_rp_test")
+    batch = spark.createDataFrame([("a", 1.0), ("b", 2.0)], "k string, val double")
+    writer(batch, 7)
+    assert _counts(engine.execute("SELECT * FROM rp_tot;")) == {"a": 1, "b": 1}
+    writer(batch, 7)
+    assert _stream_files(engine, "rp") == ["ins_rp_test-000000000007.json"]
+    assert os.listdir(engine.streams["rp"].path) == _stream_files(engine, "rp")
+    engine.execute(_inserts("rp", ["a"]))
+    assert _counts(engine.execute("SELECT * FROM rp_tot;")) == {"a": 2, "b": 1}
+
+
+@pytest.mark.parametrize("fmt", ["json", "delimited"])
+def test_feeder_rows_follow_the_target_wire_format(engine, fmt):
+    """Rows a feeder publishes are encoded like INSERT ... VALUES records
+    of the target: a json target gets NaN as null, a delimited one keeps
+    NaN, and both keep null. A table over the feeder's target equals the
+    same table over a stream that got the records by INSERT ... VALUES."""
+    rows = ("INSERT INTO {s} (k, val) VALUES ('a', 1.5);"
+            "INSERT INTO {s} (k, val) VALUES ('a', NaN);"
+            "INSERT INTO {s} (k) VALUES ('a');"
+            "INSERT INTO {s} (k, val) VALUES ('b', -2.0);")
+    for s in ("fsrc", "ftgt", "fctl"):
+        # the source is delimited in both cases: it keeps the NaN
+        wire = "delimited" if s == "fsrc" else fmt
+        engine.execute(
+            f"CREATE STREAM {s} (k VARCHAR, val DOUBLE) "
+            f"WITH (kafka_topic='{s}', value_format='{wire}');"
+        )
+    for s in ("ftgt", "fctl"):
+        engine.execute(
+            f"CREATE TABLE {s}_tot AS SELECT k AS k, COUNT(*) AS n, "
+            f"COUNT(val) AS nv, SUM(val) AS s FROM {s} GROUP BY k EMIT CHANGES;"
+        )
+    engine.execute(rows.format(s="fsrc") + rows.format(s="fctl")
+                   + "INSERT INTO ftgt SELECT k, val FROM fsrc;")
+    got = sorted(engine.execute("SELECT * FROM ftgt_tot;"), key=lambda r: r["k"])
+    assert got == sorted(engine.execute("SELECT * FROM fctl_tot;"),
+                         key=lambda r: r["k"])
+    # json: the NaN arrived as null, so COUNT(val) skips it; delimited:
+    # it stayed NaN, so COUNT(val) counts it and SUM is NaN (served null)
+    nan_kept = fmt == "delimited"
+    assert got[0] == {"k": "a", "n": 3, "nv": 1 + nan_kept,
+                      "s": None if nan_kept else 1.5}
+    # a synthetic ROWTIME is stamped on the feeder's rows
+    recs = [json.loads(r) for r in engine.execute("PRINT ftgt;")]
+    assert len(recs) == 4 and all(r["rowtime"] for r in recs)
+
+
+def test_feeder_rows_land_in_the_same_windows(engine):
+    """A feeder into a target with timestamp='ts' puts its rows in the
+    same tumbling windows, with the same values, as INSERT ... VALUES of
+    the same records."""
+    rows = "".join(
+        f"INSERT INTO {{s}} (k, val, ts) VALUES "
+        f"('{k}', {v}, '2024-01-01 00:{m:02d}:{sec:02d}.{us:06d}');"
+        for k, v, m, sec, us in [("a", 1.0, 0, 0, 0), ("a", 2.5, 4, 59, 999999),
+                                 ("a", 4.0, 5, 0, 0), ("b", 8.0, 9, 30, 123456)]
+    )
+    for s in ("tsrc", "ttgt", "tctl"):
+        engine.execute(
+            f"CREATE STREAM {s} (k VARCHAR, val DOUBLE, ts TIMESTAMP) "
+            f"WITH (kafka_topic='{s}', value_format='json', timestamp='ts');"
+        )
+    for s in ("ttgt", "tctl"):
+        engine.execute(
+            f"CREATE TABLE {s}_w AS SELECT k AS k, WINDOWSTART AS ws, "
+            f"COUNT(*) AS n, SUM(val) AS s, SKEWNESS(val) AS sk FROM {s} "
+            f"WINDOW TUMBLING (SIZE 5 MINUTES) GROUP BY k EMIT CHANGES;"
+        )
+    engine.execute(rows.format(s="tsrc") + rows.format(s="tctl")
+                   + "INSERT INTO ttgt SELECT k, val, ts FROM tsrc;")
+
+    def windows(table):
+        return sorted((r["k"], str(r["ws"]), r["n"], r["s"], r["sk"])
+                      for r in engine.execute(f"SELECT * FROM {table};"))
+
+    got = windows("ttgt_w")
+    assert got == windows("tctl_w")
+    assert [g[:4] for g in got] == [
+        ("a", "2024-01-01 00:00:00", 2, 3.5),
+        ("a", "2024-01-01 00:05:00", 1, 4.0),
+        ("b", "2024-01-01 00:05:00", 1, 8.0),
+    ]
+
+
+@pytest.mark.parametrize("via", ["source", "csas", "feeder"])
+def test_every_insert_is_visible_to_the_next_pull(engine, via):
     """30 rounds of one execute() of k INSERTs followed by a pull: every
     round's pull counts every record inserted so far, exactly. Over a
-    CSAS the pull must first wait for the CSAS query, then the table's."""
+    CSAS, or over the target of an INSERT INTO ... SELECT feeder, the pull
+    must first wait for that query, then the table's."""
     engine.execute(
         "CREATE STREAM vs (k VARCHAR, val DOUBLE) "
         "WITH (kafka_topic='vs', value_format='json');"
     )
     src = "vs"
-    if via_csas:
+    if via == "csas":
         engine.execute("CREATE STREAM vs_d AS SELECT k, val * 2 AS val FROM vs;")
         src = "vs_d"
+    elif via == "feeder":
+        engine.execute(
+            "CREATE STREAM vs_t (k VARCHAR, val DOUBLE) "
+            "WITH (kafka_topic='vs_t', value_format='json');"
+            "INSERT INTO vs_t SELECT k, val FROM vs;"
+        )
+        src = "vs_t"
     engine.execute(
         f"CREATE TABLE vs_tot AS SELECT k AS k, COUNT(*) AS n "
         f"FROM {src} GROUP BY k EMIT CHANGES;"

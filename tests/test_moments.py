@@ -167,6 +167,21 @@ def test_stddev_weighted_keeps_small_true_variance(x, want):
     assert finalize_stddev_weighted(st) == pytest.approx(want, rel=1e-6)
 
 
+UNDERFLOW_X = [1e-90, 2e-90, 3e-90, 5e-90]
+
+
+def test_kurtosis_survives_variance_square_underflow():
+    """A non-constant group around 1e-90 has var ~ 2e-180 > 0, whose
+    square underflows to 0.0: ``m4 / (var * var)`` raised
+    ZeroDivisionError. Every kurtosis finalizer returns a finite value."""
+    st = MomentState.zero().update(UNDERFLOW_X)
+    ws = WeightedState.zero().update(UNDERFLOW_X, [1.0] * 4)
+    assert st.s2 / 4 - (st.s1 / 4) ** 2 > 0.0
+    for kurt in (finalize_kurtosis(st), finalize_kurtosis(st, sample=True),
+                 finalize_kurtosis_weighted(ws)):
+        assert math.isfinite(kurt)
+
+
 def test_all_zero_weights_return_zero():
     # AllUdafIT.java:181-191,278-288,409-418
     w = WeightedState.zero().update([0.0, 0.0, 0.0], [0.0, 0.0, 0.0])

@@ -187,6 +187,28 @@ def test_stddev_weighted_keeps_small_true_variance(spark):
     assert got[1] == pytest.approx(5e-4, rel=1e-6)
 
 
+def test_kurtosis_survives_variance_square_underflow(spark):
+    """Column form of ``test_moments.test_kurtosis_survives_variance_square_underflow``:
+    a group whose variance squared underflows to 0.0 no longer fails the
+    job with DIVIDE_BY_ZERO under ANSI, and each kurtosis equals the
+    numpy kernel's finite value."""
+    from ksql_udaf_statistics_spark.stats import moments as M
+
+    x = [1e-90, 2e-90, 3e-90, 5e-90]
+    df = spark.createDataFrame([(v,) for v in x], "x double")
+    r = df.agg(
+        SA.kurtosis("x").alias("ku"),
+        SA.kurtosis("x", sample=True).alias("ku_s"),
+        SA.kurtosis_weighted("x", F.lit(1.0)).alias("kuw"),
+    ).first()
+    st = M.MomentState.zero().update(x)
+    ws = M.WeightedState.zero().update(x, [1.0] * 4)
+    assert r["ku"] == M.finalize_kurtosis(st)
+    assert r["ku_s"] == M.finalize_kurtosis(st, sample=True)
+    assert r["kuw"] == M.finalize_kurtosis_weighted(ws)
+    assert all(math.isfinite(v) for v in r)
+
+
 def test_plan_is_single_hash_aggregate(golden_df):
     """All five one-shot stats over the same column must plan as ONE
     HashAggregate pair (partial+final) with deduped sum children and no
