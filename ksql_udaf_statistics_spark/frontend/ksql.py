@@ -259,6 +259,9 @@ _TOKEN_RE = re.compile(
     r"|(?P<op><>|!=|<=|>=|[-+*/()<>=,]))"
 )
 
+# a whole expression that is one string or numeric literal
+_LITERAL_RE = re.compile(r"'(?:[^']|'')*'|\d+\.?\d*|\.\d+")
+
 # ksqlDB scalar functions a user reaches right after arithmetic — each
 # compiles to the Spark builtin (JVM codegen; nothing interpreted).
 # Entries: arity check (-1 = variadic >=1) + builder over parsed Columns.
@@ -952,15 +955,13 @@ class KsqlEngine:
     def _runtime(self, qid: str) -> dict:
         """The runtime section of ksqlDB's DESCRIBE EXTENDED: the query's
         id, its state — RUNNING, TERMINATED, STOPPED (it failed or was
-        stopped from outside; the next read restarts it), DRAIN (a
-        stream-table-join table, drained per read) or BATCH (a table
-        recomputed per read) — and its last progress report."""
+        stopped from outside; the next read restarts it) or DRAIN (a
+        stream-table-join table, drained per read) — and its last
+        progress report."""
         q = self.queries.get(qid)
         spec = self.tables.get(qid[5:]) if qid.startswith("ctas_") else None
         if qid in self.terminated:
             state = "TERMINATED"
-        elif spec is not None and self._needs_batch_materialization(spec):
-            state = "BATCH"
         elif spec is not None and spec.join is not None:
             state = "DRAIN"
         else:
@@ -1686,34 +1687,12 @@ class KsqlEngine:
         if table not in self.tables:
             raise KsqlParseError(
                 f"JOIN right side {table!r} is not a known table — "
-                f"stream-stream joins need a windowed join (not yet in the "
-                f"dialect; use the interval_join operator directly)"
+                f"stream-stream joins are windowed: CREATE STREAM ... AS "
+                f"SELECT ... JOIN ... WITHIN n UNIT ON ..."
             )
-        m = re.match(
-            r"\s*(\w+(?:\.\w+)?)\s*=\s*(\w+(?:\.\w+)?)\s*$", on
-        )
-        if not m:
-            raise KsqlParseError(f"cannot parse JOIN ON condition {on!r}")
-        sides = {}
-        for raw in (m.group(1), m.group(2)):
-            parts = raw.lower().split(".")
-            if len(parts) == 2:
-                qual, col = parts
-                if qual == source_alias:
-                    sides["left"] = col
-                elif qual == table_alias:
-                    sides["right"] = col
-                else:
-                    raise KsqlParseError(
-                        f"unknown qualifier {qual!r} in JOIN ON {on!r}"
-                    )
-            else:
-                # unqualified: first name is the stream side, second the table
-                sides["left" if "left" not in sides else "right"] = parts[0]
-        if "left" not in sides or "right" not in sides:
-            raise KsqlParseError(f"JOIN ON must reference both sides: {on!r}")
+        left_col, right_col = self._join_on_sides(source_alias, table_alias, on)
         return {"table": table, "kind": kind,
-                "left_col": sides["left"], "right_col": sides["right"]}
+                "left_col": left_col, "right_col": right_col}
 
     _AGG_CALL_RE = re.compile(r"\b(\w+)\s*\(", re.IGNORECASE)
 
@@ -1897,7 +1876,6 @@ class KsqlEngine:
             # windows close as soon as event time passes them)
             df = df.withWatermark(ts, spec.window.get("grace", "0 seconds"))
         group_cols: list[Column] = []
-        key_aliases: list[tuple[str, Column]] = []
         window_col = None
         if spec.window is not None:
             w = spec.window
@@ -1908,8 +1886,16 @@ class KsqlEngine:
             else:
                 window_col = F.session_window(F.col(ts), w["gap"])
             group_cols.append(window_col.alias("window"))
-        for g in spec.group_by:
-            group_cols.append(self._scalar_expr(g))
+        for i, g in enumerate(spec.group_by):
+            key = self._scalar_expr(g)
+            if _LITERAL_RE.fullmatch(g.strip()):
+                # a literal key is projected as a column first: grouped
+                # by the bare literal, Catalyst folds the key away, and
+                # Structured Streaming rejects the resulting "global"
+                # session-window aggregation
+                df = df.withColumn(f"_gk{i}", key)
+                key = F.col(f"_gk{i}")
+            group_cols.append(key)
 
         aggs: list[Column] = []
         selects: list[Column] = []
@@ -1992,8 +1978,7 @@ class KsqlEngine:
         upstream CSAS and INSERT INTO feeders first, then the table's own
         query, until each has processed what was published before the
         call (``_catch_up``). A stream-table-join table instead drains an
-        availableNow query on its checkpoint per call, and a
-        batch-materialized session table is recomputed."""
+        availableNow query on its checkpoint per call."""
         if f"ctas_{table}" in self.terminated:
             # the maintenance query was TERMINATEd: serve the last
             # materialized state, drain nothing (ksqlDB semantics)
@@ -2014,20 +1999,6 @@ class KsqlEngine:
         # propagate upstream CSAS transforms and INSERT..SELECT feeders
         # before the table's own query
         self._refresh_upstreams(spec.source)
-        if self._needs_batch_materialization(spec):
-            # Session windows grouped ONLY by literals constant-fold to a
-            # "global session aggregation", which Structured Streaming
-            # rejects outright. Recompute the full aggregate from the
-            # stream directory as a batch and overwrite the materialized
-            # table — correct for any input (sessions that merge or extend
-            # across refreshes replace their old rows wholesale).
-            df = self._build_agg(
-                spec, self._stream_df(self.streams[spec.source], streaming=False)
-            )
-            df.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(spec.sink.path, "batch_full")
-            )
-            return
         if spec.join is not None:
             # drained per pull, not persistent: see _persistent
             q = self._start_ctas(spec, processing_time=None)
@@ -2039,24 +2010,27 @@ class KsqlEngine:
             return
         self._catch_up(f"ctas_{table}", f"table {table!r}")
 
+    @staticmethod
+    def _output_mode(spec: TableSpec) -> str:
+        """The CTAS query's output mode, which also fixes how the table is
+        read. EMIT FINAL appends: a window's single row is emitted only
+        when the watermark closes it. Session windows can merge
+        previously-emitted windows, so Spark forbids update mode for
+        them; complete mode re-emits the whole (small, windows x keys)
+        aggregate each batch. Every other table emits updated keys."""
+        if spec.emit == "final":
+            return "append"
+        if spec.window and spec.window["kind"] == "session":
+            return "complete"
+        return "update"
+
     def _start_ctas(self, spec: TableSpec, processing_time: Optional[str]):
         stream = self._stream_df(self.streams[spec.source], streaming=True)
-        # session windows can merge previously-emitted windows, so Spark
-        # forbids update mode for them; complete mode re-emits the whole
-        # (small, windows x keys) aggregate each batch and the sink's
-        # latest-per-key read keeps pull queries consistent. EMIT FINAL
-        # uses append: a window's single row is emitted only when the
-        # watermark closes it.
-        if spec.emit == "final":
-            mode = "append"
-        elif spec.window and spec.window["kind"] == "session":
-            mode = "complete"
-        else:
-            mode = "update"
         return run_streaming_stats(
             stream, spec.sink, spec.checkpoint,
             lambda df: self._build_agg(spec, df),
-            output_mode=mode, query_name=f"ctas_{spec.name}_{self._tag}",
+            output_mode=self._output_mode(spec),
+            query_name=f"ctas_{spec.name}_{self._tag}",
             processing_time=processing_time,
         )
 
@@ -2064,17 +2038,15 @@ class KsqlEngine:
 
     def _persistent(self, qid: str) -> bool:
         """Whether a persistent query maintains ``qid``: every CSAS, and
-        every CTAS but two kinds. A stream-table-join table drains per
+        every CTAS but a stream-table-join table. That one drains per
         read: its static side comes from ``_read_table`` ->
         ``read_current``, an ``isin(committed)`` literal over a file index
         listed once when the query plans, so a long-running query would
-        join against that snapshot forever. A batch-materialized session
-        table has no streaming query at all."""
+        join against that snapshot forever."""
         if qid.startswith("csas_"):
             return qid[5:] in self.derived
         spec = self.tables.get(qid[5:])
-        return (isinstance(spec, TableSpec) and spec.join is None
-                and not self._needs_batch_materialization(spec))
+        return isinstance(spec, TableSpec) and spec.join is None
 
     def _start(self, qid: str):
         """Start the persistent query ``qid`` on its checkpoint; a
@@ -2115,26 +2087,15 @@ class KsqlEngine:
             f"next read restarts it from its checkpoint"
         ) from err
 
-    def _needs_batch_materialization(self, spec: TableSpec) -> bool:
-        all_literal_keys = all(
-            g.strip().startswith("'") for g in spec.group_by
-        )
-        return (spec.window is not None
-                and spec.window["kind"] == "session"
-                and all_literal_keys)
-
     def _read_table(self, spec) -> DataFrame:
         if isinstance(spec, TableViewSpec):
             return self._read_table_view(spec)
-        if self._needs_batch_materialization(spec):
-            df = self.spark.read.parquet(
-                os.path.join(spec.sink.path, "batch_full")
-            )
-        elif spec.window and spec.window["kind"] == "session":
-            # complete output mode: every batch re-emits the whole
-            # aggregate — the latest batch IS the table. latest-per-key
-            # across batches would resurrect sessions merged away by a
-            # later batch (r2 ADVICE finding).
+        if self._output_mode(spec) == "complete":
+            # every batch re-emits the whole aggregate — the latest batch
+            # IS the table. latest-per-key across batches would resurrect
+            # sessions merged away by a later batch (r2 ADVICE finding).
+            # Append and update modes emit a key only when it changes, so
+            # they read the latest row per key over every batch.
             df = spec.sink.read_latest_batch(self.spark)
         else:
             df = spec.sink.read_current(self.spark)
@@ -2190,9 +2151,7 @@ class KsqlEngine:
         if spec is None:
             raise KsqlParseError(f"unknown table {name!r}")
         self.refresh(name)
-        if (isinstance(spec, TableSpec)
-                and not self._needs_batch_materialization(spec)
-                and not spec.sink.committed_batches()):
+        if isinstance(spec, TableSpec) and not spec.sink.committed_batches():
             # no batch committed yet (nothing inserted): the sink has no
             # data or schema to read, and ksqlDB answers with no rows
             return []

@@ -1376,9 +1376,9 @@ _TOKEN_TOPK_ORACLE_SQL = """WITH tok AS (
 @register("token_topk_stream", _TOKEN_TOPK_ORACLE_SQL)
 def q_token_topk_stream(spark, sf_dir):
     """Per-source token heavy hitters maintained as a CONTINUOUS streaming
-    aggregate (streaming/topk.py): update-mode counts MERGEd by
-    (source, tok) through the Iceberg-style snapshot sink, top-k read over
-    the materialized table. Counts are integers — order-independent, so
+    aggregate (streaming/topk.py): update-mode counts written to the
+    exactly-once table sink, top-k read over the latest count per
+    (source, tok). Counts are integers — order-independent, so
     the drained stream hash-matches the batch ``token_topk_per_source``
     query and shares its DuckDB oracle verbatim (the second hash-oracled
     streaming gate entry, no decimal replication needed). The documents
@@ -1388,7 +1388,7 @@ def q_token_topk_stream(spark, sf_dir):
     import shutil
     import tempfile
 
-    from ..streaming.sink import MergeUpsertParquetSink
+    from ..streaming.sink import ExactlyOnceParquetSink
     from ..streaming.topk import (
         read_topk, run_continuous_aggregate, token_counts_agg,
     )
@@ -1405,7 +1405,7 @@ def q_token_topk_stream(spark, sf_dir):
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        sink = MergeUpsertParquetSink(
+        sink = ExactlyOnceParquetSink(
             os.path.join(work, "counts"), key_cols=["source", "tok"]
         )
         with _stream_shuffle(spark):
@@ -1437,16 +1437,17 @@ _LENGTH_BUCKET_ORACLE_SQL = """WITH tok AS (
 def q_length_bucket_stream(spark, sf_dir):
     """The length-bucket histogram as a CONTINUOUS streaming aggregate
     (streaming/topk.py::length_buckets_agg): update-mode integer
-    counts/sums MERGEd by (source, bucket_lo) — the third hash-oracled
-    streaming gate entry, sharing the batch ``length_bucket_histogram``
-    oracle verbatim (integer aggregates are order-independent, so drained
-    == batch with no FP replication). Demonstrates the pattern is generic:
-    any count/integer-sum EMIT CHANGES table gets free hash parity."""
+    counts/sums read as the latest per (source, bucket_lo) — the third
+    hash-oracled streaming gate entry, sharing the batch
+    ``length_bucket_histogram`` oracle verbatim (integer aggregates are
+    order-independent, so drained == batch with no FP replication).
+    Demonstrates the pattern is generic: any count/integer-sum EMIT
+    CHANGES table gets free hash parity."""
     import os
     import shutil
     import tempfile
 
-    from ..streaming.sink import MergeUpsertParquetSink
+    from ..streaming.sink import ExactlyOnceParquetSink
     from ..streaming.topk import length_buckets_agg, run_continuous_aggregate
 
     docs = _load(spark, sf_dir, "documents").select("text", "source")
@@ -1459,7 +1460,7 @@ def q_length_bucket_stream(spark, sf_dir):
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        sink = MergeUpsertParquetSink(
+        sink = ExactlyOnceParquetSink(
             os.path.join(work, "hist"), key_cols=["source", "bucket_lo"]
         )
         with _stream_shuffle(spark):

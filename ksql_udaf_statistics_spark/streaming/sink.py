@@ -166,103 +166,6 @@ class ExactlyOnceParquetSink:
         return entries
 
 
-class MergeUpsertParquetSink(ExactlyOnceParquetSink):
-    """foreachBatch sink with true key-level MERGE semantics.
-
-    Where :class:`ExactlyOnceParquetSink` appends batch partitions and
-    resolves the latest row per key at READ time, this sink maintains the
-    merged table at WRITE time — the parquet analogue of Iceberg's
-    ``MERGE INTO target USING batch ON keys WHEN MATCHED UPDATE``
-    (SURVEY.md §7): after every batch the stored table holds exactly one
-    row per key.
-
-    Snapshot-and-pointer commit (the Iceberg snapshot model in one file):
-
-    - each batch writes a full new snapshot directory
-      ``snapshot=<batch_id>`` = (previous snapshot minus keys present in
-      the batch) union (batch rows);
-    - a ``_current`` pointer file is then replaced atomically
-      (``os.replace``). A crash before the repoint leaves the previous
-      snapshot live; a replayed batch rewrites the same snapshot from the
-      same previous state and repoints — idempotent, exactly-once.
-
-    Cost shape: a full-table rewrite per batch. That is the right trade
-    for a materialized *aggregate* (O(windows x keys) rows, tiny next to
-    the input stream); a real Iceberg MERGE avoids the rewrite via
-    file-level pruning, and swapping this class for it changes only
-    ``_write_batch`` — the foreachBatch topology, checkpoint contract and
-    key discipline are identical.
-    """
-
-    def _snapshot_dir(self, batch_id: int) -> str:
-        return os.path.join(self.path, "data", f"snapshot={batch_id:012d}")
-
-    def _pointer_file(self) -> str:
-        return os.path.join(self.path, "_current")
-
-    def _current_snapshot(self) -> Optional[str]:
-        try:
-            with open(self._pointer_file()) as f:
-                return f.read().strip() or None
-        except FileNotFoundError:
-            return None
-
-    def _write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # the plan reads the batch twice (broadcast key side + union):
-        # cache it so the micro-batch is computed once
-        batch_df.persist()
-        try:
-            # one row per key within the batch (update-mode re-emissions of
-            # the same key in one batch collapse to the last state, which
-            # for our monotone accumulators equals max of every stat column;
-            # rows within a foreachBatch df for one key are identical)
-            new = batch_df.dropDuplicates(self.key_cols)
-            cur_name = self._current_snapshot()
-            # a replayed batch must merge against the state BEFORE itself,
-            # not its own output, or deletes-by-overwrite double-apply
-            if cur_name is not None and int(cur_name.split("=")[1]) == batch_id:
-                committed = [
-                    e["batch_id"] for e in self.committed_batches()
-                    if e["batch_id"] < batch_id
-                ]
-                cur_name = (
-                    f"snapshot={max(committed):012d}" if committed else None
-                )
-            if cur_name is not None:
-                cur = spark.read.parquet(
-                    os.path.join(self.path, "data", cur_name)
-                )
-                keep = cur.join(
-                    F.broadcast(new.select(*self.key_cols)),
-                    self.key_cols,
-                    "left_anti",
-                )
-                out = keep.unionByName(new.select(*cur.columns))
-            else:
-                out = new
-            out, obs = _observe_rows(out.coalesce(1))
-            out.write.mode("overwrite").parquet(self._snapshot_dir(batch_id))
-        finally:
-            batch_df.unpersist()
-        tmp = self._pointer_file() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(f"snapshot={batch_id:012d}")
-        os.replace(tmp, self._pointer_file())
-        # rows = the whole snapshot this commit wrote, not just the batch
-        _commit_ledger(self.ledger_dir, batch_id, obs.get["rows"])
-
-    def read_all(self, spark: SparkSession) -> DataFrame:
-        cur = self._current_snapshot()
-        if cur is None:
-            raise FileNotFoundError(f"no committed snapshot under {self.path}")
-        return spark.read.parquet(os.path.join(self.path, "data", cur))
-
-    def read_current(self, spark: SparkSession) -> DataFrame:
-        # the table IS the merged state — no read-time resolution needed
-        return self.read_all(spark)
-
-
 def run_streaming_stats(
     source_df: DataFrame,
     sink: Callable[[DataFrame, int], None],

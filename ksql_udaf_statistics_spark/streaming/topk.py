@@ -1,6 +1,7 @@
 """Continuous aggregate tables (ksqlDB ``CREATE TABLE ... GROUP BY ...
-EMIT CHANGES``): update-mode streaming aggregates MERGEd by key into the
-Iceberg-style snapshot sink. Two operators ride the generic runner:
+EMIT CHANGES``): update-mode streaming aggregates written to the
+exactly-once table sink and read as the latest emission per key. Two
+operators ride the generic runner:
 
 - per-source token heavy hitters (streaming twin of the batch
   ``token_topk_per_source`` query) — the repo's second HASH-ORACLED
@@ -23,9 +24,10 @@ Shape: a ksqlDB ``CREATE TABLE ... GROUP BY ... EMIT CHANGES`` aggregate
 unwindowed state that lives forever, every micro-batch emitting refreshed
 totals for the keys it touched. Spark's update-mode streaming aggregation
 emits exactly those refreshed totals, and
-:class:`~..streaming.sink.MergeUpsertParquetSink` MERGEs them by
-``(source, tok)`` so the stored table always holds one row per key
-(exactly-once under replay: a replayed batch rewrites the same snapshot).
+:class:`~..streaming.sink.ExactlyOnceParquetSink` stores each batch's
+emissions under its batch id; ``read_current`` serves the latest one per
+``(source, tok)``, so the table read holds one row per key (exactly-once
+under replay: a replayed batch overwrites its own partition).
 
 Unlike the moment statistics, the aggregate here is an INTEGER count —
 order-independent with no floating-point accumulation at all — so the
@@ -34,8 +36,10 @@ gymnastics: hash parity against the batch DuckDB oracle is free.
 
 100 TB shape: the only shuffle is the (source, tok) hash partitioing of
 exploded tokens with map-side partial counts; aggregation state and the
-merged table are vocab-bounded (#sources x #distinct tokens), independent
+table read are vocab-bounded (#sources x #distinct tokens), independent
 of stream volume — the standing-state contract of every ksqlDB table.
+The stored emissions grow with the batches that touch each key: the sink
+does not compact them yet.
 The top-k read ranks the materialized counts with a per-source window
 (WindowGroupLimit), never a global sort.
 """
@@ -46,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .sink import MergeUpsertParquetSink, drain_available_now, run_streaming_stats
+from .sink import ExactlyOnceParquetSink, drain_available_now, run_streaming_stats
 
 
 def token_counts_agg(docs: DataFrame) -> DataFrame:
@@ -71,15 +75,16 @@ def token_counts_agg(docs: DataFrame) -> DataFrame:
 
 def run_continuous_aggregate(
     agg: DataFrame,
-    sink: MergeUpsertParquetSink,
+    sink: ExactlyOnceParquetSink,
     checkpoint: str,
 ):
-    """Drain any update-mode streaming aggregate into the key-level MERGE
-    sink — the generic CREATE TABLE ... EMIT CHANGES runner, delegating to
-    the one foreachBatch wiring in sink.py. The aggregate's grouping keys
-    must equal the sink's ``key_cols`` so every refreshed total replaces
-    its prior row. E.g. ``run_continuous_aggregate(token_counts_agg(s),
-    sink, ckpt)`` keeps the per-(source, tok) count table."""
+    """Drain any update-mode streaming aggregate into the exactly-once
+    table sink — the generic CREATE TABLE ... EMIT CHANGES runner,
+    delegating to the one foreachBatch wiring in sink.py. The aggregate's
+    grouping keys must equal the sink's ``key_cols`` so every refreshed
+    total supersedes its prior row. E.g.
+    ``run_continuous_aggregate(token_counts_agg(s), sink, ckpt)`` keeps
+    the per-(source, tok) count table."""
     q = run_streaming_stats(
         agg, sink, checkpoint, lambda df: df,
         output_mode="update", query_name="continuous_aggregate",
@@ -126,6 +131,6 @@ def topk_tokens(counts: DataFrame, k: int = 5) -> DataFrame:
 
 
 def read_topk(
-    spark: SparkSession, sink: MergeUpsertParquetSink, k: int = 5
+    spark: SparkSession, sink: ExactlyOnceParquetSink, k: int = 5
 ) -> DataFrame:
     return topk_tokens(sink.read_current(spark), k)

@@ -270,11 +270,13 @@ def test_scalar_expressions_and_where(engine):
     assert r["sk"] == pytest.approx(m3 / var ** 1.5, abs=1e-9)
 
 
-def test_session_bridge_replaces_stale_rows(engine):
+@pytest.mark.parametrize("key", ["usr", "'k'"], ids=["column", "literal"])
+def test_session_bridge_replaces_stale_rows(engine, key):
     """Complete-mode session tables must serve ONLY the latest complete
     emission: an event that bridges two previously-emitted sessions merges
     them, and the pre-merge rows from earlier batches must not resurface
-    in pull queries (r2 ADVICE phantom-stale-rows finding)."""
+    in pull queries (r2 ADVICE phantom-stale-rows finding). A table keyed
+    only by a literal runs the same persistent query."""
     engine.execute(
         "CREATE STREAM ev2 (usr VARCHAR, ts TIMESTAMP) "
         "WITH (kafka_topic='ev2', value_format='json', timestamp='ts');"
@@ -284,8 +286,8 @@ def test_session_bridge_replaces_stale_rows(engine):
         "INSERT INTO ev2 (usr, ts) VALUES ('a', '2024-01-01 00:20:00');"
     )
     engine.execute(
-        "CREATE TABLE sess2 AS SELECT usr AS id, COUNT(*) AS n "
-        "FROM ev2 WINDOW SESSION (10 MINUTES) GROUP BY usr;"
+        f"CREATE TABLE sess2 AS SELECT {key} AS id, COUNT(*) AS n "
+        f"FROM ev2 WINDOW SESSION (10 MINUTES) GROUP BY {key};"
     )
     rows = engine.execute("SELECT * FROM sess2;")
     assert sorted(r["n"] for r in rows) == [1, 1]  # two separate sessions
@@ -293,6 +295,7 @@ def test_session_bridge_replaces_stale_rows(engine):
     engine.execute("INSERT INTO ev2 (usr, ts) VALUES ('a', '2024-01-01 00:10:00');")
     rows = engine.execute("SELECT * FROM sess2;")
     assert len(rows) == 1 and rows[0]["n"] == 3
+    assert engine.execute("DESCRIBE EXTENDED sess2;")[-1]["state"] == "RUNNING"
 
 
 def test_pull_query_projection_and_predicate(engine):
@@ -428,6 +431,21 @@ def test_stream_table_join(engine):
     assert {r["cust"]: r["n"] for r in rows} == {"a": 2, "b": 1, "c": 1}
 
 
+def test_ctas_join_against_a_stream_names_the_windowed_join(engine):
+    """A CTAS JOIN whose right side is a stream is rejected, and the
+    error names the dialect's stream-stream join."""
+    for name in ("l", "r"):
+        engine.execute(
+            f"CREATE STREAM {name} (k VARCHAR, x DOUBLE) "
+            f"WITH (kafka_topic='{name}', value_format='json');"
+        )
+    with pytest.raises(Exception, match=r"CREATE STREAM \.\.\. AS SELECT .* WITHIN"):
+        engine.execute(
+            "CREATE TABLE lr AS SELECT l.k AS k, COUNT(*) AS n "
+            "FROM l JOIN r ON l.k = r.k GROUP BY l.k;"
+        )
+
+
 def test_stream_table_join_sees_updated_state(engine):
     """New stream rows processed after the table advanced join against the
     CURRENT table state (processing-time semantics), while already-
@@ -456,9 +474,16 @@ def test_stream_table_join_sees_updated_state(engine):
     assert engine.execute("SELECT * FROM joined;") == [{"k": "a", "seen": 3.0}]
 
 
-def test_emit_final_append_on_close(engine):
+@pytest.mark.parametrize("window, starts", [
+    ("TUMBLING (SIZE 1 MINUTE, GRACE PERIOD 0 SECONDS)",
+     ("2024-01-01 00:00:00", "2024-01-01 00:01:00")),
+    ("SESSION (30 SECONDS, GRACE PERIOD 0 SECONDS)",
+     ("2024-01-01 00:00:30", "2024-01-01 00:01:30")),
+], ids=["tumbling", "session"])
+def test_emit_final_append_on_close(engine, window, starts):
     """EMIT FINAL: a window's row appears only once the watermark (event
-    time - grace) passes its end — open windows are withheld."""
+    time - grace) passes its end — open windows are withheld, and a
+    closed window stays served after later batches close nothing."""
     engine.execute(
         "CREATE STREAM ef (k VARCHAR, val DOUBLE, ts TIMESTAMP) "
         "WITH (kafka_topic='ef', value_format='json', timestamp='ts');"
@@ -469,24 +494,24 @@ def test_emit_final_append_on_close(engine):
             f"('a', {v}, '2024-01-01 00:0{minute}:30');"
         )
     engine.execute(
-        "CREATE TABLE eft AS SELECT k AS k, SUM(val) AS total "
-        "FROM ef WINDOW TUMBLING (SIZE 1 MINUTE, GRACE PERIOD 0 SECONDS) "
-        "GROUP BY k EMIT FINAL;"
+        f"CREATE TABLE eft AS SELECT k AS k, SUM(val) AS total "
+        f"FROM ef WINDOW {window} GROUP BY k EMIT FINAL;"
     )
     rows = engine.execute("SELECT * FROM eft;")
-    # watermark = max event time seen = 00:01:30: window [00:00, 00:01) is
-    # closed and FINAL; [00:01, 00:02) is still open and withheld
+    # watermark = max event time seen = 00:01:30: the window holding the
+    # two 00:00:30 rows is closed and FINAL; the one holding 00:01:30 is
+    # still open and withheld
     assert [(str(r["window_start"]), r["total"]) for r in rows] == [
-        ("2024-01-01 00:00:00", 4.0)
+        (starts[0], 4.0)
     ]
-    # an event at 00:03 advances the watermark past the second window
+    # an event at 00:03 advances the watermark past the second window and
+    # opens a third
     engine.execute(
         "INSERT INTO ef (k, val, ts) VALUES ('a', 9.0, '2024-01-01 00:03:00');"
     )
     rows = engine.execute("SELECT * FROM eft;")
     got = {str(r["window_start"]): r["total"] for r in rows}
-    assert got["2024-01-01 00:01:00"] == 5.0
-    assert got["2024-01-01 00:00:00"] == 4.0
+    assert got == {starts[0]: 4.0, starts[1]: 5.0}
 
 
 def test_emit_final_requires_window(engine):

@@ -446,13 +446,11 @@ def test_kafka_json_source_parity(spark, tmp_dir):
                for j in single)
 
 
-def test_merge_upsert_sink_key_level(spark, tmp_dir):
-    """MergeUpsertParquetSink maintains exactly one row per key at write
-    time (Iceberg MERGE semantics), survives replays, and overlapping keys
-    across batches take the newest value."""
-    from ksql_udaf_statistics_spark.streaming.sink import MergeUpsertParquetSink
-
-    sink = MergeUpsertParquetSink(os.path.join(tmp_dir, "merge"), ["k"])
+def test_sink_upserts_by_key(spark, tmp_dir):
+    """read_current serves exactly one row per key: overlapping keys
+    across batches take the newest batch's value, and a crash-replay of a
+    batch leaves one row per key."""
+    sink = ExactlyOnceParquetSink(os.path.join(tmp_dir, "t"), ["k"])
     b0 = spark.createDataFrame([("a", 1.0), ("b", 2.0)], "k string, v double")
     b1 = spark.createDataFrame([("b", 20.0), ("c", 3.0)], "k string, v double")
 
@@ -462,42 +460,11 @@ def test_merge_upsert_sink_key_level(spark, tmp_dir):
     sink(b1, 1)
     want = {("a", 1.0), ("b", 20.0), ("c", 3.0)}
     assert {(r["k"], r["v"]) for r in sink.read_current(spark).collect()} == want
-    # crash-replay of the last batch: must merge against pre-batch state
-    sink(b1, 1)
+    sink(b1, 1)  # crash-replay of the last batch
     got = [(r["k"], r["v"]) for r in sink.read_current(spark).collect()]
     assert set(got) == want and len(got) == 3  # exactly one row per key
-    # each commit's ledger rows = rows of the full snapshot it wrote
     ledger = sink.committed_batches()
-    assert [(e["batch_id"], e["rows"]) for e in ledger] == [(0, 2), (1, 3)]
-    for e in ledger:
-        snap = spark.read.parquet(sink._snapshot_dir(e["batch_id"]))
-        assert snap.count() == e["rows"]
-
-
-def test_merge_upsert_sink_streaming_end_to_end(spark, token_df, tmp_dir):
-    """Streaming updates flowing through the MERGE sink equal the batch
-    aggregate — one row per (window, source) with the final state."""
-    from ksql_udaf_statistics_spark.streaming.sink import MergeUpsertParquetSink
-
-    src_dir = os.path.join(tmp_dir, "src")
-    token_df.repartition(6).write.parquet(src_dir)
-    stream = (
-        spark.readStream.schema(TOKEN_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src_dir)
-    )
-    transform = lambda df: windowed_stats(
-        token_value_streams(df), value="token_mean", weight="n_tok",
-        window_size="10 minutes", watermark="2 hours",
-    )
-    sink = MergeUpsertParquetSink(
-        os.path.join(tmp_dir, "sink"), key_cols=["window_start", "source"]
-    )
-    q = run_streaming_stats(stream, sink, os.path.join(tmp_dir, "ckpt"), transform)
-    q.awaitTermination(120)
-    got = sink.read_current(spark).collect()
-    want = transform(spark.read.parquet(src_dir)).collect()
-    assert_stats_equal(got, want, STAT_COLS, tol=1e-6)
+    assert [(e["batch_id"], e["rows"]) for e in ledger] == [(0, 2), (1, 2)]
 
 
 def test_dedup_stream_within_watermark(spark, tmp_dir):
@@ -656,7 +623,7 @@ def test_sink_serves_only_committed_batches(spark, tmp_dir):
     assert {r["v"] for r in cur.collect()} == {2}
 
 
-@pytest.mark.parametrize("sink_cls", ["ExactlyOnceParquetSink", "MergeUpsertParquetSink"])
+@pytest.mark.parametrize("sink_cls", ["ExactlyOnceParquetSink"])
 def test_torn_ledger_write_is_never_committed(spark, tmp_dir, monkeypatch, sink_cls):
     """A crash partway through a ledger write leaves no torn entry: the
     ledger still lists the earlier batches, and the replayed batch then
@@ -707,11 +674,10 @@ def test_exactly_once_sink_runs_one_spark_job_per_batch(spark, tmp_dir):
     assert [e["rows"] for e in sink.committed_batches()] == [50]
 
 
-@pytest.mark.parametrize("sink_cls", ["ExactlyOnceParquetSink", "MergeUpsertParquetSink"])
+@pytest.mark.parametrize("sink_cls", ["ExactlyOnceParquetSink"])
 def test_ledger_rows_are_rows_written(spark, tmp_dir, sink_cls):
-    """Each ledger entry's ``rows`` is what its commit wrote, an empty
-    batch included: the batch's rows for the append sink, the whole
-    merged snapshot for the MERGE sink."""
+    """Each ledger entry's ``rows`` is the rows its batch wrote, an empty
+    batch included."""
     from ksql_udaf_statistics_spark.streaming import sink as sink_mod
 
     sink = getattr(sink_mod, sink_cls)(os.path.join(tmp_dir, "t"), ["k"])
@@ -721,13 +687,8 @@ def test_ledger_rows_are_rows_written(spark, tmp_dir, sink_cls):
     sink(spark.createDataFrame([(3, 2), (4, 2)], schema), 2)
     rows = {e["batch_id"]: e["rows"] for e in sink.committed_batches()}
     assert set(sink.committed_batches()[0]) == {"batch_id", "rows", "wall_time"}
-    if sink_cls == "ExactlyOnceParquetSink":
-        assert rows == {0: 0, 1: 3, 2: 2}
-        assert _rows_per_batch(sink, spark) == {1: 3, 2: 2}
-    else:
-        assert rows == {0: 0, 1: 3, 2: 4}
-        for b, n in rows.items():
-            assert spark.read.parquet(sink._snapshot_dir(b)).count() == n
+    assert rows == {0: 0, 1: 3, 2: 2}
+    assert _rows_per_batch(sink, spark) == {1: 3, 2: 2}
 
 
 def test_drain_stops_and_raises_after_timeout(spark, tmp_dir, monkeypatch):
@@ -747,4 +708,24 @@ def test_drain_stops_and_raises_after_timeout(spark, tmp_dir, monkeypatch):
     monkeypatch.setattr(sink_mod, "DRAIN_TIMEOUT_S", 0.5)
     with pytest.raises(RuntimeError, match="slow job did not drain within 0.5s"):
         sink_mod.drain_available_now(q, "slow job")
+    assert not q.isActive
+
+
+def test_catch_up_stops_and_raises_after_timeout(spark, tmp_dir, monkeypatch):
+    """A persistent query that does not catch up within the drain timeout
+    is stopped and raises, so no pull serves a table that is behind."""
+    import time
+
+    from ksql_udaf_statistics_spark.streaming import sink as sink_mod
+
+    src = os.path.join(tmp_dir, "src")
+    spark.range(3).write.parquet(src)
+    stream = spark.readStream.schema("id long").parquet(src)
+    q = run_streaming_stats(
+        stream, lambda df, batch_id: time.sleep(5), os.path.join(tmp_dir, "ckpt"),
+        lambda df: df, output_mode="append", processing_time="100 milliseconds",
+    )
+    monkeypatch.setattr(sink_mod, "DRAIN_TIMEOUT_S", 0.5)
+    with pytest.raises(RuntimeError, match="slow query did not catch up within 0.5s"):
+        sink_mod.await_caught_up(q, "slow query")
     assert not q.isActive

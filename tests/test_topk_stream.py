@@ -10,7 +10,7 @@ import glob
 import os
 import shutil
 
-from ksql_udaf_statistics_spark.streaming.sink import MergeUpsertParquetSink
+from ksql_udaf_statistics_spark.streaming.sink import ExactlyOnceParquetSink
 from ksql_udaf_statistics_spark.streaming.topk import (
     length_buckets_agg,
     read_topk,
@@ -37,7 +37,7 @@ def _run(spark, tmp_dir, src, tag=""):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    sink = MergeUpsertParquetSink(
+    sink = ExactlyOnceParquetSink(
         os.path.join(tmp_dir, f"counts{tag}"), key_cols=["source", "tok"]
     )
     run_continuous_aggregate(
@@ -83,7 +83,7 @@ def test_length_buckets_accumulate_across_batches(spark, tmp_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    sink = MergeUpsertParquetSink(
+    sink = ExactlyOnceParquetSink(
         os.path.join(tmp_dir, "hist"), key_cols=["source", "bucket_lo"]
     )
     run_continuous_aggregate(
