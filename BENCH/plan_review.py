@@ -194,15 +194,17 @@ def main():
           "synthesize->decode are back-to-back MapInPandas (no shuffle "
           "between), aggregation JVM-side")
 
-    # 13. IVF verified (r4): Arrow cluster assignment on both sides, the
-    # probe join broadcasts the (tiny) query side, exact re-rank windowed
+    # 13. IVF verified: queries are collected and probed on the driver,
+    # so the corpus-side plan is ONE Arrow pass (assign + probe + exact
+    # re-rank + per-partition top-k) feeding the window top-k — no
+    # per-row cosine UDF, no probe join, no pair-dedup aggregate
     iq = QUERIES["ann_ivf_verified"](spark, SF_DIR)
     p = plan_of(iq)
-    check("ivf probe broadcast join",
-          "BroadcastHashJoin" in p and "BroadcastNestedLoopJoin" not in p
-          and "SortMergeJoin" not in p,
-          "cluster-probe join broadcasts the query assignments; no "
-          "corpus-wide sort-merge or nested loop")
+    check("ivf one-pass scoring",
+          p.count("MapInPandas") == 1 and "ArrowEvalPython" not in p
+          and "Join" not in p,
+          "assign/probe/re-rank fused into one MapInPandas before the "
+          "window top-k; no ArrowEvalPython, no join")
 
     # 14. BPE pair counting (r4): builtin slice/arrays_zip extraction (no
     # interpreted lambdas) and per-source top-k via WindowGroupLimit —

@@ -2,26 +2,26 @@
 
 Three paths:
 
-- **brute-force top-k** — the exactness baseline: broadcast the (small)
-  query matrix against the corpus, one Arrow-batched numpy matmul per
-  corpus partition, per-partition top-k, then a global window top-k over
-  the tiny candidate union. One scan of the corpus, no pair-row blowup,
-  no shuffle of the big side except the (partitions x queries x k)-row
-  final top-k.
-- **IVF top-k** — the scale path: coarse quantizer (deterministic
-  hash-sampled centroids) + probed exact re-rank within the query's
-  n_probe nearest lists.
+- **brute-force top-k** — the exactness baseline: the (small) query set
+  is collected to the driver and scored against the corpus in ONE Arrow
+  pass that keeps a per-partition top-k; a window top-k over the tiny
+  candidate union finishes. No pair rows, no join.
+- **IVF top-k** — the scale path: the same pass, scoring only the
+  (query, row) pairs inside the query's ``n_probe`` nearest centroid
+  lists; centroids are hash-sampled, optionally Lloyd-trained with one
+  Arrow pass per round. Every Python pass costs a fixed per-task
+  start-up, so the passes are counted: one per round, one to score.
 - **LSH-blocked near-dups** — random-hyperplane signatures
   (deterministic, seeded) bucket the corpus and each bucket is scored
   locally by exact cosine; recall is tunable by (planes, bands).
 
-All scoring is Arrow-batched numpy (one matmul / one vectorized reduction
-per record batch, float64 accumulation) — r2 measured the interpreted
-``F.aggregate``/``zip_with`` higher-order-function cosine at ~200ns per
-element, which at 100x scale dominates the ANN hot path; the Arrow path
-is the same pattern the IVF assigner already used. The pure-Column
-``dot``/``norm``/``cosine`` helpers remain exported for plans that must
-stay Python-free, but no hot path uses them.
+All scoring is Arrow-batched numpy with float64 accumulation and one
+cosine formula, ``einsum(a·b) / sqrt(einsum(a·a) * einsum(b·b))`` (r2
+measured the interpreted ``F.aggregate``/``zip_with`` cosine at ~200ns
+per element). A zero-norm vector has no direction: its cosine is NaN and
+it is dropped, never ranked and never a near-duplicate. The pure-Column
+``dot``/``norm``/``cosine`` helpers remain for Python-free plans; no hot
+path uses them.
 
 Near-duplicate-by-embedding is ``cosine >= threshold``, all-pairs
 (``embedding_near_dups_exact``) or LSH-blocked (``embedding_near_dups``).
@@ -67,6 +67,18 @@ def _stack(series: pd.Series) -> np.ndarray:
     return np.stack([np.asarray(v, dtype=np.float64) for v in series])
 
 
+def _row_cos(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Row-wise cosine of two (n, dim) float64 matrices: the one scoring
+    formula of every path. A zero-norm row gives 0/0 = NaN — a zero
+    vector has no direction — and every caller drops it; errstate keeps
+    that policy silent rather than accidental (r6 ADVICE)."""
+    num = np.einsum("ij,ij->i", A, B)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return num / np.sqrt(
+            np.einsum("ij,ij->i", A, A) * np.einsum("ij,ij->i", B, B)
+        )
+
+
 _INTEGRAL_TYPES = {"tinyint", "smallint", "int", "bigint"}
 
 
@@ -88,22 +100,6 @@ def _require_long_id(df: DataFrame, id_col: str, fn: str) -> None:
             f"(e.g. df.withColumn('{id_col}', F.xxhash64('{id_col}')) or a "
             f"monotonically_increasing_id) before calling."
         )
-
-
-def cosine_arrow(a, b) -> Column:
-    """Arrow-vectorized row-wise cosine of two array columns (float64
-    accumulation): one numpy reduction per record batch, no per-row
-    Python, no interpreted lambdas."""
-
-    def _cos(ca: pd.Series, cb: pd.Series) -> pd.Series:
-        if len(ca) == 0:
-            return pd.Series([], dtype="float64")
-        A, B = _stack(ca), _stack(cb)
-        num = np.einsum("ij,ij->i", A, B)
-        den = np.sqrt(np.einsum("ij,ij->i", A, A) * np.einsum("ij,ij->i", B, B))
-        return pd.Series(num / den)
-
-    return F.pandas_udf(_cos, DoubleType())(a, b)
 
 
 def cosine_filter_pairs(
@@ -133,19 +129,8 @@ def cosine_filter_pairs(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            A, B = _stack(pdf[a_col]), _stack(pdf[b_col])
-            num = np.einsum("ij,ij->i", A, B)
-            # zero-norm vectors: den == 0 -> cos is NaN, which fails the
-            # >= comparison and is DROPPED — the deliberate contract (a
-            # zero vector has no direction, so it is near-duplicate of
-            # nothing). errstate suppresses the 0/0 RuntimeWarning so the
-            # policy is silent rather than accidental (r6 ADVICE).
-            with np.errstate(invalid="ignore", divide="ignore"):
-                den = np.sqrt(
-                    np.einsum("ij,ij->i", A, A) * np.einsum("ij,ij->i", B, B)
-                )
-                cos = num / den
-                keep = cos >= threshold
+            cos = _row_cos(_stack(pdf[a_col]), _stack(pdf[b_col]))
+            keep = cos >= threshold  # NaN (zero-norm) fails: dropped
             if not keep.any():
                 continue
             out = pdf.loc[keep, names].copy()
@@ -153,6 +138,100 @@ def cosine_filter_pairs(
             yield out
 
     return pairs.mapInPandas(score, schema)
+
+
+def _check_topk(fn, corpus, queries, id_col, k, n_probe=1) -> None:
+    """Fail at plan-build time on integral-id violations and on a top-k
+    that could only return nothing."""
+    if k < 1 or n_probe < 1:
+        raise ValueError(f"{fn}: k and n_probe must be >= 1 "
+                         f"(got k={k}, n_probe={n_probe})")
+    _require_long_id(corpus, id_col, fn)
+    _require_long_id(queries, id_col, fn)
+
+
+def _unit(M: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit length (a zero row stays zero)."""
+    return M / (np.linalg.norm(M, axis=1, keepdims=True) + 1e-12)
+
+
+def _nearest(M: np.ndarray, Cn: np.ndarray, p: int) -> np.ndarray:
+    """(n, p) indices of each row's ``p`` nearest unit centroids ``Cn``
+    by cosine, nearest first."""
+    return np.argsort(-(_unit(M) @ Cn.T), axis=1)[:, :p]
+
+
+def _scored_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    centroids: np.ndarray | None = None,
+    n_probe: int = 1,
+) -> DataFrame:
+    """The one top-k kernel: (query_id, neighbor_id, cos_sim, rank).
+
+    One ``mapInPandas`` pass scores each collected query, one at a time
+    on gathered rows (never a queries x rows x dim block), against every
+    other row (brute force) or the rows whose nearest centroid is among
+    the query's ``n_probe`` nearest (IVF). Non-finite cosines are
+    dropped. Each partition keeps a top-k per query under the total
+    order (cos_sim desc, id asc), so the window top-k over the union
+    equals a full sort.
+    """
+    q_rows = queries.select(id_col, vec_col).collect()
+    out_schema = "query_id long, neighbor_id long, cos_sim double"
+    if not q_rows:
+        return corpus.sparkSession.createDataFrame([], out_schema + ", rank int")
+    qids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
+    Q = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in q_rows])
+    Cn = None if centroids is None else _unit(centroids)
+    probes = None if Cn is None else _nearest(Q, Cn, n_probe)
+
+    def score_partition(batches):
+        best = [(np.array([], dtype=np.int64), np.array([]))] * len(qids)
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            M = _stack(pdf[vec_col])
+            nids = pdf[id_col].to_numpy(dtype=np.int64)
+            lists = None if Cn is None else _nearest(M, Cn, 1)[:, 0]
+            for qi, qid in enumerate(qids):
+                keep = nids != qid
+                if lists is not None:
+                    keep &= np.isin(lists, probes[qi])
+                rows = np.flatnonzero(keep)
+                B = M[rows]
+                cos = _row_cos(np.broadcast_to(Q[qi], B.shape), B)
+                fin = np.isfinite(cos)
+                ids = np.concatenate([best[qi][0], nids[rows[fin]]])
+                sims = np.concatenate([best[qi][1], cos[fin]])
+                if len(sims) > k:  # sort only rows tied with or above the k-th
+                    top = sims >= np.partition(sims, len(sims) - k)[len(sims) - k]
+                    ids, sims = ids[top], sims[top]
+                # lexsort: last key is primary -> (-sim primary, id secondary)
+                top = np.lexsort((ids, -sims))[:k]
+                best[qi] = (ids[top], sims[top])
+        n = [len(ids) for ids, _ in best]
+        if sum(n):
+            yield pd.DataFrame(
+                {
+                    "query_id": np.repeat(qids, n),
+                    "neighbor_id": np.concatenate([ids for ids, _ in best]),
+                    "cos_sim": np.concatenate([sims for _, sims in best]),
+                }
+            )
+
+    partial = corpus.select(id_col, vec_col).mapInPandas(score_partition, out_schema)
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        partial.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    )
 
 
 def brute_force_topk(
@@ -164,57 +243,12 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k: (query_id, neighbor_id, cos_sim, rank).
 
-    ``queries`` must be small (it is collected and broadcast into the
-    Arrow workers as one numpy matrix). Self-matches are excluded. Ties
-    are broken by neighbor id for full determinism; per-partition pruning
-    keeps a row only if it beats < k rows under the same total order
-    (cos_sim desc, id asc), so the global result equals a full sort.
+    ``queries`` must be small (it is collected to the driver). Self-
+    matches and zero-norm vectors are excluded; ties are broken by
+    neighbor id for full determinism.
     """
-    _require_long_id(corpus, id_col, "brute_force_topk")
-    _require_long_id(queries, id_col, "brute_force_topk")
-    q_rows = queries.select(id_col, vec_col).collect()
-    spark = corpus.sparkSession
-    out_schema = "query_id long, neighbor_id long, cos_sim double"
-    if not q_rows:
-        return spark.createDataFrame([], out_schema + ", rank int")
-    qids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-    Q = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in q_rows])
-    qn = np.sqrt(np.einsum("ij,ij->i", Q, Q))
-
-    def score_partition(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = _stack(pdf[vec_col])
-            nids = pdf[id_col].to_numpy(dtype=np.int64)
-            cn = np.sqrt(np.einsum("ij,ij->i", M, M))
-            sims = (Q @ M.T) / (qn[:, None] * cn[None, :])
-            oq, on, os_ = [], [], []
-            for qi in range(len(qids)):
-                cand = np.flatnonzero(nids != qids[qi])
-                # lexsort: last key is primary -> (-sim primary, id secondary)
-                order = cand[np.lexsort((nids[cand], -sims[qi, cand]))][:k]
-                oq.append(np.full(len(order), qids[qi], dtype=np.int64))
-                on.append(nids[order])
-                os_.append(sims[qi, order])
-            if oq:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(oq),
-                        "neighbor_id": np.concatenate(on),
-                        "cos_sim": np.concatenate(os_),
-                    }
-                )
-
-    partial = corpus.select(id_col, vec_col).mapInPandas(score_partition, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    _check_topk("brute_force_topk", corpus, queries, id_col, k)
+    return _scored_topk(corpus, queries, k, id_col, vec_col)
 
 
 def _plane_matrix(dim: int, planes: int, seed: int) -> np.ndarray:
@@ -393,16 +427,10 @@ def embedding_near_dups(
         if len(ia) == 0:
             return empty
         ib = np.concatenate(cand_b)
-        # exact re-score of the survivors with the cosine_filter_pairs
-        # kernel (same ops, same order -> bit-identical values)
-        A, B = M[ia], M[ib]
-        num = np.einsum("ij,ij->i", A, B)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            den = np.sqrt(
-                np.einsum("ij,ij->i", A, A) * np.einsum("ij,ij->i", B, B)
-            )
-            cos = num / den
-            keep = cos >= threshold
+        # exact re-score of the survivors with the one cosine formula
+        # (same ops, same order as cosine_filter_pairs -> same bits)
+        cos = _row_cos(M[ia], M[ib])
+        keep = cos >= threshold
         return pd.DataFrame(
             {"doc_a": ids[ia[keep]], "doc_b": ids[ib[keep]], "cos_sim": cos[keep]}
         )
@@ -419,40 +447,6 @@ def embedding_near_dups(
 # IVF (inverted-file) ANN: coarse quantizer + probed exact re-rank
 # ---------------------------------------------------------------------------
 
-def _assign_clusters(df: DataFrame, centroids, id_col: str, vec_col: str,
-                     n_probe: int = 1, role: str = "corpus") -> DataFrame:
-    """Append cluster assignment(s) by cosine against broadcast centroids.
-
-    Arrow-batched mapInPandas: one numpy matmul per batch — no per-row
-    Python, no shuffle. ``n_probe`` > 1 explodes each row to its top-p
-    nearest centroids (query-side probing).
-    """
-    C = centroids / (np.linalg.norm(centroids, axis=1, keepdims=True) + 1e-12)
-    n_probe_eff = min(n_probe, len(C))
-
-    def batches(it):
-        for pdf in it:
-            M = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            Mn = M / (np.linalg.norm(M, axis=1, keepdims=True) + 1e-12)
-            sims = Mn @ C.T
-            order = np.argsort(-sims, axis=1)[:, :n_probe_eff]
-            rows = {
-                id_col: np.repeat(pdf[id_col].to_numpy(), n_probe_eff),
-                vec_col: np.repeat(pdf[vec_col].to_numpy(), n_probe_eff),
-                "cluster_id": order.reshape(-1).astype("int32"),
-            }
-            yield pd.DataFrame(rows)
-
-    schema = f"{id_col} long, {vec_col} array<float>, cluster_id int"
-    # no forced repartition here (r7, measured): the per-row work is one
-    # n_centroids-wide matmul row — microseconds — so on a small corpus an
-    # injected exchange costs more stage latency than the single-split
-    # compute it spreads; at production scale the scan already has many
-    # splits and parallelism comes for free. (Contrast banded_signatures,
-    # whose per-pass work is planes-wide and measured 4 s single-task.)
-    return df.select(id_col, vec_col).mapInPandas(batches, schema)
-
-
 def _sampled_centroids(
     corpus: DataFrame, n_centroids: int, id_col: str, vec_col: str, seed: int
 ) -> np.ndarray:
@@ -468,6 +462,40 @@ def _sampled_centroids(
     return np.array([np.asarray(r[vec_col], dtype=np.float64) for r in cent_rows])
 
 
+def _lloyd_round(base: DataFrame, C: np.ndarray, vec_col: str) -> np.ndarray:
+    """One Lloyd round: per-partition (cluster, count, row-order sum)
+    partials, merged on the driver in partition order."""
+    Cn = _unit(C)
+    n_c, dim = C.shape
+
+    def partials(batches):
+        n = np.zeros(n_c, dtype=np.int64)
+        s = np.zeros((n_c, dim))
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            M = _stack(pdf[vec_col])
+            label = _nearest(M, Cn, 1)[:, 0]
+            np.add.at(n, label, 1)
+            np.add.at(s, label, M)
+        hit = np.flatnonzero(n)
+        if len(hit):
+            yield pd.DataFrame(
+                {"cluster": hit.astype(np.int32), "n": n[hit], "s": list(s[hit])}
+            )
+
+    n = np.zeros(n_c, dtype=np.int64)
+    s = np.zeros((n_c, dim))
+    schema = "cluster int, n long, s array<double>"
+    for r in base.mapInPandas(partials, schema).collect():
+        n[r["cluster"]] += r["n"]
+        s[r["cluster"]] += np.asarray(r["s"], dtype=np.float64)
+    hit = n > 0
+    newC = C.copy()
+    newC[hit] = s[hit] / n[hit, None].astype(np.float64)
+    return newC
+
+
 def train_ivf_centroids(
     corpus: DataFrame,
     n_centroids: int = 16,
@@ -476,18 +504,17 @@ def train_ivf_centroids(
     vec_col: str = "embedding",
     seed: int = 11,
 ) -> np.ndarray:
-    """K-means (Lloyd) training of the IVF coarse quantizer, fully
-    distributed — no driver loop over vectors.
+    """K-means (Lloyd) training of the IVF coarse quantizer, seeded from
+    the deterministic hash sample.
 
-    Each round is (a) one Arrow-batched assignment pass against the
-    broadcast current centroids (numpy matmul per batch, the same kernel
-    probing uses) and (b) one ``posexplode`` + hash aggregation computing
-    the per-(cluster, dimension) mean with map-side partials — the
-    ``embedding_centroids`` plan shape. Only ``n_centroids * dim`` rows
-    (KBs) ever reach the driver per round; the corpus is scanned
-    ``n_iters + probing`` times and never shuffled by vector payload.
-    Empty clusters keep their previous centroid. Seeded from the
-    deterministic hash sample, so the whole procedure is reproducible.
+    Each round is ONE Arrow pass: every partition assigns its rows their
+    nearest centroid and emits per-cluster (count, sum) partials — the
+    field-wise-sum ``merge()`` of a moment accumulator — so there is no
+    explode and no shuffle, and ``partitions * n_centroids * dim``
+    doubles reach the driver. Sums run in row order and merge in
+    partition order, as a hash-aggregate ``avg`` would, so the means
+    depend on the partitioning only through float64 summation order.
+    Empty clusters keep their previous centroid.
 
     Better-trained centroids raise recall at fixed ``n_probe`` on
     clustered corpora (the usual IVF contract); with
@@ -495,26 +522,12 @@ def train_ivf_centroids(
     which is how ``ann_ivf_verified`` keeps the trained path under the
     exact DuckDB oracle."""
     # materialize the narrowed corpus once (r7): every Lloyd round re-read
-    # and re-decoded the source parquet otherwise (n_iters + seed scans);
-    # localCheckpoint preserves the partitioning, so the per-partition
-    # double-summation order of the mean aggregation — and therefore every
-    # trained centroid — is bit-identical to the uncheckpointed plan
+    # and re-decoded the source parquet otherwise; localCheckpoint keeps
+    # the partitioning, so every partial and centroid is unchanged
     base = corpus.select(id_col, vec_col).localCheckpoint(eager=False)
     C = _sampled_centroids(base, n_centroids, id_col, vec_col, seed)
     for _ in range(max(n_iters, 0)):
-        assigned = _assign_clusters(base, C, id_col, vec_col, 1, "train")
-        means = (
-            assigned.select(
-                "cluster_id", F.posexplode(F.col(vec_col)).alias("pos", "v")
-            )
-            .groupBy("cluster_id", "pos")
-            .agg(F.avg(F.col("v").cast("double")).alias("m"))
-            .collect()
-        )
-        newC = C.copy()
-        for r in means:
-            newC[r["cluster_id"], r["pos"]] = r["m"]
-        C = newC
+        C = _lloyd_round(base, C, vec_col)
     return C
 
 
@@ -529,50 +542,21 @@ def ivf_topk(
     seed: int = 11,
     train_iters: int = 0,
 ) -> DataFrame:
-    """IVF approximate top-k: deterministic hash-sampled centroids bucket
-    the corpus once; each query probes its ``n_probe`` nearest centroid
-    lists and re-ranks exactly within them.
+    """IVF approximate top-k: each query probes its ``n_probe`` nearest
+    centroid lists and is re-ranked exactly within them.
 
-    At 10^12 scale the corpus assignment is one Arrow pass + a write
-    partitioned by cluster_id; queries then touch n_probe/n_centroids of
-    the data instead of all of it. Same output schema as brute_force_topk.
+    Centroids are the hash sample, Lloyd-trained for ``train_iters``
+    rounds. Scoring is the one pass :func:`brute_force_topk` uses: the
+    queries get their probe lists on the driver, each corpus batch its
+    nearest centroid inside the pass, and only pairs in a probed list
+    are scored. With ``n_probe == n_centroids`` the result equals brute
+    force. Same output schema as brute_force_topk.
     """
-    _require_long_id(corpus, id_col, "ivf_topk")
-    _require_long_id(queries, id_col, "ivf_topk")
+    _check_topk("ivf_topk", corpus, queries, id_col, k, n_probe)
     if train_iters > 0:
         centroids = train_ivf_centroids(
             corpus, n_centroids, train_iters, id_col, vec_col, seed
         )
     else:
         centroids = _sampled_centroids(corpus, n_centroids, id_col, vec_col, seed)
-
-    c_assigned = _assign_clusters(corpus, centroids, id_col, vec_col, 1, "corpus")
-    q_assigned = _assign_clusters(queries, centroids, id_col, vec_col, n_probe, "query")
-
-    c = c_assigned.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"), "cluster_id"
-    )
-    qd = q_assigned.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"), "cluster_id"
-    )
-    # score BEFORE deduplicating (r7): a (query, neighbor) pair can only
-    # arise once per probed cluster and the corpus side is assigned with
-    # n_probe=1, so duplicate pairs carry identical cos_sim — aggregating
-    # the scalar with max() after scoring equals dropDuplicates before it,
-    # while the dedup exchange now moves (id, id, double) rows instead of
-    # two 64-float vectors per row (~20x fewer shuffle bytes)
-    cand = (
-        c.join(F.broadcast(qd), "cluster_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos_sim", cosine_arrow(F.col("q_vec"), F.col("c_vec")))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.max("cos_sim").alias("cos_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _scored_topk(corpus, queries, k, id_col, vec_col, centroids, n_probe)

@@ -224,6 +224,18 @@ def test_simhash_finds_near_dups(docs_with_dups):
 
 # -- similarity -------------------------------------------------------------
 
+def _clustered(spark, seed):
+    """8 well-separated clusters of 60 32-dim vectors; ids 60c.. 60c+59."""
+    rng = np.random.default_rng(seed)
+    centers = rng.normal(0, 1, size=(8, 32)) * 10
+    rows = [
+        (ci * 60 + j, (c + rng.normal(0, 0.5, 32)).astype("float32").tolist())
+        for ci, c in enumerate(centers)
+        for j in range(60)
+    ]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
 def test_brute_force_topk_matches_numpy(spark, emb):
     queries = emb.filter(F.col("vec_id") < 5)
     got = S.brute_force_topk(emb, queries, k=10).collect()
@@ -368,17 +380,7 @@ def test_frame_sample_plan(spark):
 def test_ivf_topk_recall_on_clustered_vectors(spark):
     """IVF must achieve high recall when the corpus actually clusters:
     synthesize 8 well-separated clusters, query members of each."""
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    centers = rng.normal(0, 1, size=(8, 32)) * 10
-    rows = []
-    vid = 0
-    for ci, c in enumerate(centers):
-        for _ in range(60):
-            rows.append((vid, (c + rng.normal(0, 0.5, 32)).astype("float32").tolist(), ci))
-            vid += 1
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int").cache()
+    df = _clustered(spark, 11).cache()
     queries = df.filter(F.col("vec_id") % 60 == 0)  # one per cluster
     exact = S.brute_force_topk(df, queries, k=5)
     approx = S.ivf_topk(df, queries, k=5, n_centroids=16, n_probe=4)
@@ -637,24 +639,31 @@ def test_boilerplate_strip_coverage(spark):
     assert sh == ["a b c", "b c a", "c a b", "a b c"]
 
 
+def _nearest_centroid(M, C):
+    """Each row's nearest centroid by cosine, ties to the lower index."""
+    def unit(X):
+        return X / (np.linalg.norm(X, axis=1, keepdims=True) + 1e-12)
+
+    return np.argsort(-(unit(M) @ unit(C).T), axis=1)[:, 0]
+
+
+def _numpy_lloyd(M, C, rounds):
+    """Reference Lloyd rounds over the whole corpus matrix ``M``."""
+    for _ in range(rounds):
+        label = _nearest_centroid(M, C)
+        C = np.array([M[label == c].mean(axis=0) if (label == c).any() else C[c]
+                      for c in range(len(C))])
+    return C
+
+
 def test_ivf_trained_centroids_recall(spark):
     """r6: k-means-trained centroids must match or beat the hash-sampled
     seed's recall at the same n_probe on a clustered corpus, and with
     n_probe == n_centroids the trained path still equals brute force."""
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    centers = rng.normal(0, 1, size=(8, 32)) * 10
-    rows = []
-    vid = 0
-    for c in centers:
-        for _ in range(60):
-            rows.append((vid, (c + rng.normal(0, 0.5, 32)).astype("float32").tolist()))
-            vid += 1
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>").cache()
+    df = _clustered(spark, 7).cache()
     queries = df.filter(F.col("vec_id") % 60 == 0)
-    exact = {(r["query_id"], r["neighbor_id"])
-             for r in S.brute_force_topk(df, queries, k=5).collect()}
+    exact_rows = {tuple(r) for r in S.brute_force_topk(df, queries, k=5).collect()}
+    exact = {(q, n) for q, n, _, _ in exact_rows}
 
     def recall(train_iters):
         got = {(r["query_id"], r["neighbor_id"])
@@ -665,8 +674,92 @@ def test_ivf_trained_centroids_recall(spark):
     r_sampled, r_trained = recall(0), recall(2)
     assert r_trained >= r_sampled, (r_trained, r_sampled)
     assert r_trained >= 0.9, r_trained
-    # probe-all exactness survives training
-    full = {(r["query_id"], r["neighbor_id"])
-            for r in S.ivf_topk(df, queries, k=5, n_centroids=16, n_probe=16,
-                                train_iters=2).collect()}
-    assert full == exact
+    # probe-all exactness survives training; both paths score with one
+    # kernel, so whole rows agree, cos_sim to the bit
+    full = {tuple(r) for r in S.ivf_topk(df, queries, k=5, n_centroids=16,
+                                        n_probe=16, train_iters=2).collect()}
+    assert full == exact_rows
+
+
+def test_ivf_topk_runs_at_most_seven_spark_jobs(spark):
+    """Seed sample, one job per Lloyd round, the query collect and one
+    scoring pass with its window top-k: no probe join, no pair dedup,
+    no per-round aggregation shuffle."""
+    df = _clustered(spark, 7).cache()
+    df.count()
+    queries = df.filter(F.col("vec_id") % 60 == 0)
+    sc = spark.sparkContext
+    sc.setJobGroup("ivf_topk_jobs", "ivf_topk, trained, probe-all")
+    try:
+        S.ivf_topk(df, queries, k=5, n_centroids=16, n_probe=16,
+                   train_iters=2).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job records reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("ivf_topk_jobs")) <= 7
+
+
+def test_lloyd_centroids_match_numpy_at_any_partitioning(spark):
+    """A Lloyd round's per-cluster (count, sum) partials merge to the
+    same means however the corpus is split, and equal a numpy Lloyd."""
+    df = _clustered(spark, 7)
+    M = np.array([r["embedding"] for r in df.orderBy("vec_id").collect()],
+                 dtype=np.float64)
+    seeds = S.train_ivf_centroids(df, n_centroids=16, n_iters=0)
+    want = _numpy_lloyd(M, seeds, 2)
+    for parts in (1, 7):
+        got = S.train_ivf_centroids(df.repartition(parts).cache(),
+                                    n_centroids=16, n_iters=2)
+        np.testing.assert_allclose(got, want, rtol=0, atol=1e-12)
+
+
+def test_lloyd_empty_cluster_keeps_its_centroid(spark):
+    """Rows lie on two axes and every cosine is one exact product. Of the
+    seeds on one axis only the longest wins that axis's rows (its unit
+    row, scaled by ``1 / (norm + 1e-12)``, is nearest to 1), so the other
+    seeds get no rows and keep their centroid."""
+    rows = [(i, [float(1 + i // 2), 0.0] if i % 2 else [0.0, float(1 + i // 2)])
+            for i in range(24)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    seeds = S.train_ivf_centroids(df, n_centroids=4, n_iters=0)
+    got = S.train_ivf_centroids(df, n_centroids=4, n_iters=1)
+    M = np.array([v for _, v in rows])
+    label = _nearest_centroid(M, seeds)
+    empty = [c for c in range(4) if not (label == c).any()]
+    assert len(empty) >= 2  # four seeds on two axes
+    np.testing.assert_array_equal(got[empty], seeds[empty])
+    np.testing.assert_array_equal(got, _numpy_lloyd(M, seeds, 1))
+
+
+@pytest.mark.parametrize("path", ["brute_force", "ivf"])
+def test_zero_norm_vectors_never_enter_a_topk(spark, path):
+    """A zero vector has no direction: as a query it gets no neighbours,
+    as a corpus row it is nobody's neighbour, and no cos_sim is null."""
+    rng = np.random.default_rng(3)
+    rows = [(i, rng.normal(0, 1, 8).astype("float32").tolist()) for i in range(60)]
+    rows.append((100, [0.0] * 8))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    queries = df.filter((F.col("vec_id") < 3) | (F.col("vec_id") == 100))
+    if path == "brute_force":
+        got = S.brute_force_topk(df, queries, k=3).collect()
+    else:
+        got = S.ivf_topk(df, queries, k=3, n_centroids=4, n_probe=4).collect()
+    assert sorted((r["query_id"], r["rank"]) for r in got) == [
+        (q, rank) for q in range(3) for rank in (1, 2, 3)
+    ]
+    assert all(r["neighbor_id"] != 100 and np.isfinite(r["cos_sim"]) for r in got)
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        lambda c, q: S.brute_force_topk(c, q, k=0),
+        lambda c, q: S.ivf_topk(c, q, k=0),
+        lambda c, q: S.ivf_topk(c, q, n_probe=0),
+    ],
+    ids=["brute_force_k0", "ivf_k0", "ivf_n_probe0"],
+)
+def test_topk_rejects_k_or_n_probe_below_one(emb, call):
+    with pytest.raises(ValueError):
+        call(emb, emb.filter(F.col("vec_id") < 5))
